@@ -40,6 +40,6 @@ def oracle_sql() -> dict[str, str]:
     (kg_span_eval_per_class: trained-model diagnostic; approx_distinct:
     engine-specific sketch) get the rows-only check and carry pytest
     coverage instead (SURVEY.md §5.2)."""
-    from kgpipe.queries import ORACLES
+    from kgpipe.queries import oracles
 
-    return dict(ORACLES)
+    return oracles()

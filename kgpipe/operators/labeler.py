@@ -80,23 +80,30 @@ def build_gazetteer(candidate_dict: pd.DataFrame) -> dict[int, tuple]:
     candidate span; the downstream linker join re-checks the surface
     against the real alias, so precision is unaffected (and at 2^64 the
     collision odds are negligible anyway).
+
+    Built batch-wide: ONE hash_array call over every alias token (a call
+    per alias costs ~250 us), one ``_fold_hashes`` per token length, and a
+    duplicate alias keeps its LAST row's class. Aliases of zero or more
+    than MAX_ALIAS_TOKENS tokens are skipped.
     """
     cls_idx = {c: i for i, c in enumerate(ENT_CLASSES)}
-    by_len: dict[int, list[tuple[int, int]]] = {}
-    for alias, cls in zip(candidate_dict["alias"], candidate_dict["ent_class"]):
-        toks = alias.split()
-        if not toks or len(toks) > MAX_ALIAS_TOKENS:
-            continue
-        th = pd.util.hash_array(np.array(toks, dtype=object))
-        h = _fold_hashes(th, len(toks), 1)[0]
-        by_len.setdefault(len(toks), []).append((int(h), cls_idx[cls]))
+    toks = candidate_dict["alias"].str.split()
+    n_tok = toks.str.len().to_numpy()
+    keep = (n_tok >= 1) & (n_tok <= MAX_ALIAS_TOKENS)
+    cls = np.array([cls_idx[c] for c in candidate_dict["ent_class"][keep]],
+                   dtype=np.int8)
+    n_tok = n_tok[keep].astype(np.int64)
+    tok_h = pd.util.hash_array(
+        np.array([t for ts in toks[keep] for t in ts], dtype=object))
+    first = np.zeros(n_tok.size, np.int64)
+    np.cumsum(n_tok[:-1], out=first[1:])
     gaz: dict[int, tuple] = {}
-    for ln, pairs in by_len.items():
-        dedup = dict(pairs)  # duplicate alias: last class wins (dict parity)
-        keys = np.fromiter(dedup.keys(), dtype=np.uint64, count=len(dedup))
-        vals = np.fromiter(dedup.values(), dtype=np.int8, count=len(dedup))
-        order = np.argsort(keys)
-        gaz[ln] = (keys[order], vals[order])
+    for ln in pd.unique(n_tok):
+        sel = np.flatnonzero(n_tok == ln)
+        win = (first[sel, None] + np.arange(ln)).ravel()  # contiguous group
+        h = _fold_hashes(tok_h[win], ln, win.size - ln + 1)[::ln]
+        keys, last = np.unique(h[::-1], return_index=True)
+        gaz[int(ln)] = (keys, cls[sel][::-1][last])
     return gaz
 
 
@@ -298,39 +305,25 @@ def label_texts_packed(texts: pd.Series, gaz: dict[int, dict[str, int]],
     return pd.Series([" ".join(p) for p in parts], index=texts.index)
 
 
-def make_labeler_udf(spark: SparkSession, candidate_dict: pd.DataFrame,
-                     packed: bool = False):
-    """Build the scalar pandas UDF; gazetteer ships as a Spark broadcast."""
-    gaz = build_gazetteer(candidate_dict)
-    trans = build_transitions()
-    bc = spark.sparkContext.broadcast((gaz, trans))
-
-    if packed:
-        @F.pandas_udf("string")
-        def label_spans_packed(texts: pd.Series) -> pd.Series:
-            g, tr = bc.value
-            return label_texts_packed(texts, g, tr)
-
-        return label_spans_packed
-
-    @F.pandas_udf(SPANS_ARRAY)
-    def label_spans(texts: pd.Series) -> pd.Series:
-        g, tr = bc.value
-        return label_texts(texts, g, tr)
-
-    return label_spans
-
-
 def label_transcripts(spark: SparkSession, transcripts: DataFrame,
                       candidate_dict: pd.DataFrame) -> DataFrame:
     """transcripts -> + spans column (array<struct<start,end,ent_type,score>>).
 
-    The UDF emits packed span strings; the struct array is rebuilt JVM-side
-    with whole-stage-codegen'd split/transform — identical schema and
-    values to the direct SPANS_ARRAY UDF (tests pin both paths equal)."""
-    udf = make_labeler_udf(spark, candidate_dict, packed=True)
+    The scalar pandas UDF (gazetteer shipped as a Spark broadcast) emits
+    packed span strings; the struct array is rebuilt JVM-side with
+    whole-stage-codegen'd split/transform — identical schema and values
+    to a direct SPANS_ARRAY UDF over ``label_texts`` (tests pin both
+    equal)."""
+    bc = spark.sparkContext.broadcast(
+        (build_gazetteer(candidate_dict), build_transitions()))
+
+    @F.pandas_udf("string")
+    def label_spans_packed(texts: pd.Series) -> pd.Series:
+        return label_texts_packed(texts, *bc.value)
+
     classes = F.array(*[F.lit(c) for c in ENT_CLASSES])
-    packed = transcripts.withColumn("_spans_packed", udf(F.col("text")))
+    packed = transcripts.withColumn(
+        "_spans_packed", label_spans_packed(F.col("text")))
     span_of = lambda p: F.struct(  # noqa: E731
         F.split(p, ":").getItem(0).cast("int").alias("start"),
         F.split(p, ":").getItem(1).cast("int").alias("end"),

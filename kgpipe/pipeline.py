@@ -10,15 +10,16 @@ checkpointed and resumed independently (operators/checkpoint.py).
 
 from __future__ import annotations
 
+import functools
 import os
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kgpipe.operators.canon import build_canon_map, canonicalize
+from kgpipe.operators.canon import canonicalize
 from kgpipe.operators.labeler import label_transcripts
-from kgpipe.operators.linker import dict_to_df, link_entities
+from kgpipe.operators.linker import dict_to_df, link_entities, top1_dict
 from kgpipe.operators.mentions import extract_mentions
 from kgpipe.operators.relations import extract_triples
 from kgpipe.schemas import TRANSCRIPTS
@@ -44,22 +45,16 @@ def locate_transcripts(fixture_dir: str) -> str:
     """First transcripts file present in the fixture dir, by format
     preference: parquet (pruning+pushdown fast path), then the dump
     formats logs arrive in (sources/transcripts.py reads any of them
-    schema-enforced). Shared by BOTH fixture-dir entry points so the
-    ingestion surface cannot silently differ between the plain and the
-    checkpointed pipeline."""
-    for ext in ("parquet", "jsonl", "csv"):
-        p = os.path.join(fixture_dir, f"transcripts.{ext}")
+    schema-enforced). Shared by every fixture-dir entry point so the
+    ingestion surface cannot silently differ between them. Raises
+    FileNotFoundError naming every probed file when none exists."""
+    probed = [os.path.join(fixture_dir, f"transcripts.{ext}")
+              for ext in ("parquet", "jsonl", "csv")]
+    for p in probed:
         if os.path.exists(p):
             return p
-    return os.path.join(fixture_dir, "transcripts.parquet")
-
-
-def salt(df: DataFrame, n_salts: int = 8) -> DataFrame:
-    """A2: split hot conversations across tasks for grouped stages
-    (BASELINE.json: "salted by conv_id to tame skew")."""
-    return df.withColumn(
-        "salt", F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(n_salts))
-    )
+    raise FileNotFoundError(
+        f"no transcripts file in {fixture_dir}; probed {', '.join(probed)}")
 
 
 # above this many dictionary rows the canon map is built with the
@@ -70,14 +65,48 @@ LOCAL_CANON_MAX_DICT = 200_000
 
 
 def canon_map_for(spark: SparkSession, candidate_dict: pd.DataFrame,
-                  dict_df: DataFrame, cc_algo: str = "two_phase") -> DataFrame:
+                  cc_algo: str = "two_phase") -> DataFrame:
     from kgpipe.operators.canon import build_canon_map, build_canon_map_local
 
     if len(candidate_dict) > LOCAL_CANON_MAX_DICT:
-        return build_canon_map(dict_df, algo=cc_algo)
+        return build_canon_map(dict_to_df(spark, candidate_dict), algo=cc_algo)
     pdf = build_canon_map_local(candidate_dict)
     return spark.createDataFrame(
         pdf, schema="entity_id string, canonical_id string")
+
+
+def _label(spark: SparkSession, transcripts: DataFrame,
+           candidate_dict: pd.DataFrame, labeler_model=None) -> DataFrame:
+    """The gazetteer labeler, or the trained one when a model is given."""
+    if labeler_model is None:
+        return label_transcripts(spark, transcripts, candidate_dict)
+    from kgpipe.operators.train import label_transcripts_trained
+
+    return label_transcripts_trained(
+        spark, transcripts, labeler_model, candidate_dict)
+
+
+def _inline_source(spark: SparkSession, transcripts: DataFrame,
+                   labeler_model=None) -> DataFrame:
+    """Input of a digest UDF that labels inline: the trained decode (~13x
+    the gazetteer's per-row cost) rebalances under-partitioned input."""
+    n = spark.sparkContext.defaultParallelism
+    if labeler_model is None or transcripts.rdd.getNumPartitions() >= n:
+        return transcripts
+    return transcripts.repartition(n)
+
+
+class _LazyOutputs(dict):
+    """run_pipeline's result: a value missing from the dict is built by its
+    thunk on first read, then stored (plain assignment works as usual)."""
+
+    def __init__(self, thunks: dict):
+        super().__init__()
+        self._thunks = thunks
+
+    def __missing__(self, key: str):
+        self[key] = value = self._thunks[key]()
+        return value
 
 
 def run_pipeline(
@@ -90,7 +119,7 @@ def run_pipeline(
     labeler_model=None,
     extractor: str = "fused",
 ) -> dict[str, DataFrame]:
-    """Run all stages; returns the intermediate + final DataFrames (lazy).
+    """Plan the product ``triples``; the other stages are built on demand.
 
     ``labeler_model``: optional ``TrainedLabeler`` (operators/train.py) —
     when given, labeling uses the learned perceptron weights instead of
@@ -107,36 +136,33 @@ def run_pipeline(
     ``"exploded"`` is the window-over-mentions reference plan. Output
     equality between the two is pinned by tests/test_relations_fused.py.
 
-    Return contract: every value is LAZY and only ``triples`` is the
-    product output. ``mentions``/``linked`` cost nothing unless a
-    consumer evaluates them, and on the fused small-dict path
+    Return contract: a dict of LAZY DataFrames under the keys
+    ``labeled``, ``mentions``, ``linked``, ``raw_triples``, ``canon_map``
+    and ``triples``. Only ``triples`` — the product — is planned here; each
+    side output is planned on its first ``out[key]`` read (then kept, and
+    shared by any stage that depends on it), so a caller that reads only
+    ``triples`` builds the gazetteer once and plans nothing else. Keys
+    appear in the dict once read. On the fused small-dict path
     ``raw_triples`` (the pre-canonicalization form) is an INDEPENDENT
     plan from ``triples`` — they share no subtree, so evaluating both
-    runs the corpus scan + inline labeling twice. Consumers that need
-    both should evaluate ``triples`` and derive the raw view from the
-    exploded intermediates instead.
+    runs the corpus scan + inline labeling twice.
     """
-    if labeler_model is not None:
-        from kgpipe.operators.train import label_transcripts_trained
-
-        labeled = label_transcripts_trained(
-            spark, transcripts, labeler_model, candidate_dict)
-    else:
-        labeled = label_transcripts(spark, transcripts, candidate_dict)
-    mentions = extract_mentions(labeled)
-    dict_df = dict_to_df(spark, candidate_dict)
-    # no persist anywhere: with the window-free top-1 linker and the
-    # single-pass triple extractor, every intermediate is referenced exactly
-    # once, so the plan is one straight pipeline (scan -> Arrow UDF ->
-    # explode -> broadcast join -> one conv_id window -> broadcast join ->
-    # dedup). Block-manager persists measurably ANTI-scaled at high core
-    # counts (MemoryStore unroll contention: 46s vs 16s to build the same
-    # 2.8M-row stage at local[32]).
-    from kgpipe.operators.linker import top1_dict
-
-    linked = link_entities(
-        mentions, dict_to_df(spark, top1_dict(candidate_dict)),
-        k=1, ranked=False)
+    # no persist anywhere: every intermediate is referenced exactly once,
+    # so the plan is one straight pipeline. Block-manager persists
+    # measurably ANTI-scaled at high core counts (MemoryStore unroll
+    # contention: 46s vs 16s to build the same 2.8M-row stage at local[32]).
+    thunks = {
+        "labeled": lambda: _label(
+            spark, transcripts, candidate_dict, labeler_model),
+        "mentions": lambda: extract_mentions(out["labeled"]),
+        "linked": lambda: link_entities(
+            out["mentions"], dict_to_df(spark, top1_dict(candidate_dict)),
+            k=1, ranked=False),
+        "canon_map": lambda: canon_map_for(spark, candidate_dict, cc_algo),
+        "raw_triples": lambda: extract_triples(
+            spark, out["linked"], window=window, predicates=predicates),
+        "triples": lambda: canonicalize(out["raw_triples"], out["canon_map"]),
+    }
     if extractor == "fused":
         from kgpipe.operators.relations import extract_triples_fused
 
@@ -145,54 +171,29 @@ def run_pipeline(
         # (dependent Python UDFs), so it ships every turn's text across
         # the JVM<->Python boundary twice and the span structs back in
         # between. Inline = one ArrowEvalPython, half the Arrow traffic.
-        # The trained path keeps its under-partitioned-input rebalance
-        # (the perceptron decode is ~13x the gazetteer's per-row cost).
-        inline_src = transcripts
-        if labeler_model is not None:
-            parallelism = spark.sparkContext.defaultParallelism
-            if inline_src.rdd.getNumPartitions() < parallelism:
-                inline_src = inline_src.repartition(parallelism)
-        inline_mode = "gaz" if labeler_model is None else "trained"
-        raw_triples = extract_triples_fused(
-            spark, inline_src, candidate_dict, window=window,
-            predicates=predicates, inline_labeler=inline_mode,
-            model=labeler_model)
+        fused = functools.partial(
+            extract_triples_fused, spark,
+            _inline_source(spark, transcripts, labeler_model), candidate_dict,
+            window=window, predicates=predicates, model=labeler_model,
+            inline_labeler="gaz" if labeler_model is None else "trained")
+        thunks["raw_triples"] = fused
         if len(candidate_dict) <= LOCAL_CANON_MAX_DICT:
             # single-shuffle product path: the canon map (driver-side,
             # dict-derived, broadcast-sized by construction) is composed
             # into the digest UDF's link map and dedup happens per turn —
             # the generic canonicalize stage's two broadcast joins and
-            # corpus-scale dedup exchange vanish. `raw_triples` above
-            # stays the pre-canonicalization form (lazy; consumers such
-            # as the streaming-parity tests pay for it only if they
-            # evaluate it).
+            # corpus-scale dedup exchange vanish.
             from kgpipe.operators.canon import build_canon_map_local
 
             canon_pdf = build_canon_map_local(candidate_dict)
-            canon_d = dict(zip(canon_pdf["entity_id"],
-                               canon_pdf["canonical_id"]))
-            triples = extract_triples_fused(
-                spark, inline_src, candidate_dict, window=window,
-                predicates=predicates, canon=canon_d, dedup=True,
-                inline_labeler=inline_mode, model=labeler_model)
-            canon_map = spark.createDataFrame(
+            thunks["triples"] = lambda: fused(
+                canon=dict(zip(canon_pdf["entity_id"],
+                               canon_pdf["canonical_id"])), dedup=True)
+            thunks["canon_map"] = lambda: spark.createDataFrame(
                 canon_pdf, schema="entity_id string, canonical_id string")
-        else:
-            canon_map = build_canon_map(dict_df, algo=cc_algo)
-            triples = canonicalize(raw_triples, canon_map)
-    else:
-        raw_triples = extract_triples(spark, linked, window=window,
-                                      predicates=predicates)
-        canon_map = canon_map_for(spark, candidate_dict, dict_df, cc_algo)
-        triples = canonicalize(raw_triples, canon_map)
-    return {
-        "labeled": labeled,
-        "mentions": mentions,
-        "linked": linked,
-        "raw_triples": raw_triples,
-        "canon_map": canon_map,
-        "triples": triples,
-    }
+    out = _LazyOutputs(thunks)
+    out["triples"]  # the product is planned now, side outputs on first read
+    return out
 
 
 def run_pipeline_checkpointed(
@@ -251,7 +252,6 @@ def run_pipeline_checkpointed(
     dpath = os.path.join(fixture_dir, "candidate_dict.parquet")
     transcripts = read_transcripts_any(spark, tpath)
     candidate_dict = pd.read_parquet(dpath)
-    dict_df = dict_to_df(spark, candidate_dict)
 
     from kgpipe.predicates import predicates_dict
 
@@ -299,13 +299,9 @@ def run_pipeline_checkpointed(
             f"{fpd1}|triples|w={window}|v=1".encode()).hexdigest()[:16]
 
         def _digests(df: DataFrame) -> DataFrame:
-            src = df
-            if labeler_model is not None:
-                parallelism = spark.sparkContext.defaultParallelism
-                if src.rdd.getNumPartitions() < parallelism:
-                    src = src.repartition(parallelism)
             return turn_digests(
-                spark, src, candidate_dict, predicates=pred_map,
+                spark, _inline_source(spark, df, labeler_model),
+                candidate_dict, predicates=pred_map,
                 canon=canon_d, inline_labeler=inline_mode,
                 model=labeler_model)
 
@@ -329,28 +325,20 @@ def run_pipeline_checkpointed(
     ).hexdigest()[:16]
     fp3 = hashlib.sha256(f"{fp2}|triples|cc={cc_algo}|v=1".encode()).hexdigest()[:16]
 
-    from kgpipe.operators.linker import top1_dict
-
     top1_df = dict_to_df(spark, top1_dict(candidate_dict))
-    def _label(df: DataFrame) -> DataFrame:
-        if labeler_model is not None:
-            from kgpipe.operators.train import label_transcripts_trained
-
-            return label_transcripts_trained(
-                spark, df, labeler_model, candidate_dict)
-        return label_transcripts(spark, df, candidate_dict)
-
     s1 = run.stage(
         "linked", transcripts,
         lambda df: link_entities(
-            extract_mentions(_label(df)), top1_df, k=1, ranked=False),
+            extract_mentions(
+                _label(spark, df, candidate_dict, labeler_model)),
+            top1_df, k=1, ranked=False),
         n_buckets=n_buckets, fingerprint=fp1)
     s2 = run.stage(
         "raw_triples", s1.df,
         lambda df: extract_triples(spark, df, window=window,
                                    predicates=pred_map),
         n_buckets=n_buckets, fingerprint=fp2)
-    canon_map = canon_map_for(spark, candidate_dict, dict_df, cc_algo)
+    canon_map = canon_map_for(spark, candidate_dict, cc_algo)
     s3 = run.stage(
         "triples", s2.df,
         lambda df: canonicalize(df, canon_map),
@@ -360,54 +348,55 @@ def run_pipeline_checkpointed(
             "metrics": run.metrics, "run": run}
 
 
+def fit_labeler(spark: SparkSession, tpath: str,
+                candidate_dict: pd.DataFrame, train_sample: int = 2000):
+    """Fit the structured perceptron (driver-side) on a bounded sample of
+    the transcripts file ``tpath``, in any supported format."""
+    from kgpipe.operators.train import fit_perceptron, sample_texts
+    from kgpipe.sources.transcripts import read_transcripts_any
+
+    if tpath.endswith(".parquet"):
+        sample = sample_texts(tpath, train_sample)
+    else:
+        # text formats lack parquet's metadata row count / row-take, so
+        # sample via Spark: the n smallest rows by a content hash — a
+        # deterministic uniform draw with NO head bias (sample().limit()
+        # trims in partition order, i.e. a head). Spark plans orderBy+limit
+        # as TakeOrderedAndProject: per-partition top-K heaps, no full sort.
+        sample = (read_transcripts_any(spark, tpath)
+                  .select("text",
+                          F.xxhash64("conv_id", "turn_idx", "text").alias("_h"))
+                  .orderBy("_h").limit(train_sample)
+                  .toPandas()["text"])
+    return fit_perceptron(sample, candidate_dict)
+
+
 def run_from_dir(spark: SparkSession, fixture_dir: str,
                  window: int = 3, predicates=None,
                  trained: bool = False,
                  train_sample: int = 2000) -> dict[str, DataFrame]:
-    """Run the pipeline over a fixture directory (transcripts.parquet +
-    candidate_dict.parquet [+ gold_triples.parquet] [+ predicates.parquet:
+    """Run the pipeline over a fixture directory (transcripts in any
+    format ``locate_transcripts`` finds + candidate_dict.parquet
+    [+ gold_triples.parquet, attached as ``gold``] [+ predicates.parquet:
     a (phrase, pred) table overriding the default predicate config]).
 
     ``trained=True`` fits the structured perceptron on a bounded sample of
-    the input (driver-side, weights broadcast) and labels with it instead
-    of the hand-weighted gazetteer decoder.
+    the input (``fit_labeler``) and labels with it instead of the
+    hand-weighted gazetteer decoder.
     """
     from kgpipe.predicates import load_predicates
-
-    # transcripts may arrive as parquet (the fast path: pruning+pushdown)
-    # or as the dump formats conversation logs ship in (JSONL, CSV) —
-    # first match wins, schema-enforced either way
     from kgpipe.sources.transcripts import read_transcripts_any
 
     tpath = locate_transcripts(fixture_dir)
-    transcripts = read_transcripts_any(spark, tpath)
     candidate_dict = pd.read_parquet(
         os.path.join(fixture_dir, "candidate_dict.parquet"))
     if predicates is None:
         ppath = os.path.join(fixture_dir, "predicates.parquet")
         predicates = load_predicates(ppath) if os.path.exists(ppath) else None
-    model = None
-    if trained:
-        from kgpipe.operators.train import fit_perceptron, sample_texts
-
-        if tpath.endswith(".parquet"):
-            sample = sample_texts(tpath, train_sample)
-        else:
-            # text formats lack parquet's metadata row count / row-take, so
-            # sample via Spark: the n smallest rows by a content hash — a
-            # deterministic uniform draw with NO head bias (sample(frac)
-            # .limit(n) trims in partition order, i.e. a head; and frac
-            # capped at 1.0 degenerates to a bare head-take). Spark plans
-            # orderBy+limit as TakeOrderedAndProject: per-partition top-K
-            # heaps + a driver merge of K rows, not a full sort.
-            sample = (transcripts
-                      .select("text",
-                              F.xxhash64("conv_id", "turn_idx", "text")
-                              .alias("_h"))
-                      .orderBy("_h").limit(train_sample)
-                      .toPandas()["text"])
-        model = fit_perceptron(sample, candidate_dict)
-    out = run_pipeline(spark, transcripts, candidate_dict, window=window,
+    model = (fit_labeler(spark, tpath, candidate_dict, train_sample)
+             if trained else None)
+    out = run_pipeline(spark, read_transcripts_any(spark, tpath),
+                       candidate_dict, window=window,
                        predicates=predicates, labeler_model=model)
     gold_path = os.path.join(fixture_dir, "gold_triples.parquet")
     if os.path.exists(gold_path):

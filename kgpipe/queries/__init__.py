@@ -14,7 +14,7 @@ hash, so:
 
 from __future__ import annotations
 
-from kgpipe.queries.registry import ORACLES, QUERIES, register  # noqa: F401
+from kgpipe.queries.registry import QUERIES, oracles, register  # noqa: F401
 
 # importing the modules populates the registry; the driver's CORRECTNESS
 # harness reports the first 50 registered queries in this order, so the

@@ -31,27 +31,25 @@ from kgpipe.queries.registry import register
 
 _CACHE: dict[tuple[str, str], DataFrame] = {}
 
-# Generated (or reused from cache) at import: the driver may run an oracle
-# before its matching Spark query, so the gold parquet must exist by the
-# time the registry is populated. Generation is pure pandas, seconds at
-# sf0.01, and cached on disk across sessions. GUARDED: importing any
-# kgpipe.queries submodule imports this one, so a fixture-dir write
-# failure (read-only checkout, full disk) must degrade the kg_* rows to
-# rows-only checks — never break the whole registry.
-try:
-    ORACLE_FIXTURE_DIR: str | None = materialize("sf0.01")
-except Exception:  # noqa: BLE001 — any generation failure degrades, see above
-    ORACLE_FIXTURE_DIR = None
+# The gold fixture is generated (or reused from the on-disk cache) when an
+# oracle is resolved (registry.oracles()), not at import: importing
+# kgpipe.queries writes nothing. A generation failure (read-only checkout,
+# full disk) degrades the kg_* rows to rows-only checks — never breaks the
+# whole registry.
+def _gold(sql: str):
+    """Deferred oracle: ``sql`` over the gold fixture of ``scale``
+    (sf0.01, the published comparison scale, by default), or None (the
+    registry's rows-only registration) when it cannot be generated."""
+    def oracle(scale: str = "sf0.01") -> str | None:
+        try:
+            return sql.replace("{gold}", materialize(scale))
+        except Exception:  # noqa: BLE001 — any failure degrades, see above
+            return None
+    return oracle
 
 
-def _gold(sql: str) -> str | None:
-    """Oracle SQL when the gold fixture is readable, else None (the
-    registry treats None as a rows-only registration)."""
-    return sql if ORACLE_FIXTURE_DIR is not None else None
-
-
-_GOLD_T = f"read_parquet('{ORACLE_FIXTURE_DIR}/gold_triples.parquet')"
-_GOLD_M = f"read_parquet('{ORACLE_FIXTURE_DIR}/gold_mentions.parquet')"
+_GOLD_T = "read_parquet('{gold}/gold_triples.parquet')"
+_GOLD_M = "read_parquet('{gold}/gold_mentions.parquet')"
 
 
 def _session_key(spark: SparkSession) -> str:

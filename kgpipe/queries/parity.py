@@ -20,19 +20,6 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
 
 
 def run_oracle(sql: str, sf_dir: str) -> pd.DataFrame:
-    # kg_* oracles embed the absolute sf0.01 fixture path (the driver's
-    # comparison scale); when replicating at another scale, rewrite the
-    # prefix to the matching fixture so gold and query see the same corpus
-    from kgpipe.fixtures.generator import materialize
-    from kgpipe.queries import kg as _kg
-
-    scale = _kg._scale_for(sf_dir)
-    # ORACLE_FIXTURE_DIR is None when gold-fixture generation failed at
-    # import (kg.py degrades the kg_* rows to rows-only) — `None in sql`
-    # would TypeError on every oracle, so guard the rewrite
-    if (scale != "sf0.01" and _kg.ORACLE_FIXTURE_DIR is not None
-            and _kg.ORACLE_FIXTURE_DIR in sql):
-        sql = sql.replace(_kg.ORACLE_FIXTURE_DIR, materialize(scale))
     con = duckdb.connect()
     for t in TABLES:
         paths = glob.glob(f"{sf_dir}/{t}.parquet")
@@ -68,16 +55,23 @@ def _normalize(df: pd.DataFrame) -> pd.DataFrame:
 
 def compare(spark: SparkSession, name: str, sf_dir: str) -> dict:
     """Run query + oracle, return a comparison report dict."""
-    from kgpipe.queries import ORACLES, QUERIES
+    from kgpipe.queries import QUERIES
+    from kgpipe.queries import kg as _kg
+    from kgpipe.queries.registry import ORACLES
 
     sdf = QUERIES[name](spark, sf_dir)
     got = _normalize(sdf.toPandas())
     report: dict = {"name": name, "rows": len(got)}
-    if name not in ORACLES:
+    # kg_* oracles are deferred: resolve them at the compared scale, so
+    # gold and query see the same corpus
+    oracle = ORACLES.get(name)
+    if callable(oracle):
+        oracle = oracle(_kg._scale_for(sf_dir))
+    if oracle is None:
         report["check"] = "rows_only"
         report["ok"] = len(got) >= 0
         return report
-    want = _normalize(run_oracle(ORACLES[name], sf_dir))
+    want = _normalize(run_oracle(oracle, sf_dir))
     report["check"] = "oracle"
     report["oracle_rows"] = len(want)
     report["cols_match"] = list(got.columns) == list(want.columns)

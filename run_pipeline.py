@@ -21,7 +21,8 @@ import time
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--input", required=True,
-                    help="fixture dir with transcripts.parquet + candidate_dict.parquet")
+                    help="fixture dir with transcripts.{parquet,jsonl,csv} + "
+                         "candidate_dict.parquet")
     ap.add_argument("--output", required=True, help="output dir for the triples table")
     ap.add_argument("--master", default=None, help="spark master (default local[$SPARK_GRAFT_CPUS])")
     ap.add_argument("--window", type=int, default=3, help="turn-window size for cross-turn relations")
@@ -65,10 +66,10 @@ def main(argv: list[str] | None = None) -> int:
 
     spark = get_spark("kgpipe-run", master=args.master)
     t0 = time.time()
-    # resolve predicate table + labeler model ONCE so both execution paths
-    # (plain and checkpointed) see identical config — the checkpointed
-    # branch silently ignoring --trained-labeler / predicates.parquet was
-    # a silent-wrong-results bug
+    # resolve the predicate table ONCE so both execution paths (plain and
+    # checkpointed) see identical config — the checkpointed branch silently
+    # ignoring predicates.parquet was a silent-wrong-results bug. Both
+    # paths find the transcripts with locate_transcripts (any format).
     from kgpipe.predicates import load_predicates
 
     predicates = None
@@ -77,40 +78,31 @@ def main(argv: list[str] | None = None) -> int:
     elif os.path.exists(os.path.join(args.input, "predicates.parquet")):
         predicates = load_predicates(
             os.path.join(args.input, "predicates.parquet"))
-    model = None
-    if args.trained_labeler:
-        import pandas as pd
-
-        from kgpipe.operators.train import fit_perceptron, sample_texts
-
-        cd = pd.read_parquet(
-            os.path.join(args.input, "candidate_dict.parquet"))
-        model = fit_perceptron(
-            sample_texts(os.path.join(args.input, "transcripts.parquet"),
-                         2000), cd)
     if args.checkpoint_dir:
-        from kgpipe.pipeline import run_pipeline_checkpointed
+        from kgpipe.pipeline import (
+            fit_labeler,
+            locate_transcripts,
+            run_pipeline_checkpointed,
+        )
 
+        model = None
+        if args.trained_labeler:
+            import pandas as pd
+
+            model = fit_labeler(
+                spark, locate_transcripts(args.input),
+                pd.read_parquet(
+                    os.path.join(args.input, "candidate_dict.parquet")))
         out = run_pipeline_checkpointed(
             spark, args.input, args.checkpoint_dir, window=args.window,
             cc_algo=args.cc_algo, predicates=predicates,
             labeler_model=model, stage_layout=args.stage_layout)
-        gold_path = os.path.join(args.input, "gold_triples.parquet")
-        if os.path.exists(gold_path):
-            out["gold"] = spark.read.parquet(gold_path)
     else:
-        from kgpipe.pipeline import run_pipeline, read_transcripts
-        import pandas as pd
+        from kgpipe.pipeline import run_from_dir
 
-        transcripts = read_transcripts(
-            spark, os.path.join(args.input, "transcripts.parquet"))
-        cd = pd.read_parquet(
-            os.path.join(args.input, "candidate_dict.parquet"))
-        out = run_pipeline(spark, transcripts, cd, window=args.window,
-                           predicates=predicates, labeler_model=model)
-        gold_path = os.path.join(args.input, "gold_triples.parquet")
-        if os.path.exists(gold_path):
-            out["gold"] = spark.read.parquet(gold_path)
+        out = run_from_dir(spark, args.input, window=args.window,
+                           predicates=predicates,
+                           trained=args.trained_labeler)
     n = write_triples(out["triples"], args.output)
     if args.expire_keep_last is not None:
         from kgpipe.sources.storage import expire_snapshots
@@ -126,7 +118,8 @@ def main(argv: list[str] | None = None) -> int:
     if args.checkpoint_dir:
         report["stage_metrics"] = out["metrics"]
     if args.eval:
-        if "gold" not in out:
+        gold_path = os.path.join(args.input, "gold_triples.parquet")
+        if not os.path.exists(gold_path):
             print("--eval requested but no gold_triples.parquet in input dir",
                   file=sys.stderr)
             return 2
@@ -135,7 +128,8 @@ def main(argv: list[str] | None = None) -> int:
         from kgpipe.sources.storage import read_triples
 
         triples = read_triples(spark, args.output)
-        report["metrics"] = evaluate_triples(triples, out["gold"])
+        report["metrics"] = evaluate_triples(
+            triples, spark.read.parquet(gold_path))
     print(json.dumps(report), flush=True)
     # explicit stop: an orphaned local-mode JVM outlives the driver script
     # otherwise, pinning cores and holding inherited pipes open

@@ -1,10 +1,16 @@
+import numpy as np
 import pandas as pd
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from kgpipe.operators.labeler import (
+    MAX_ALIAS_TOKENS,
+    _fold_hashes,
     build_gazetteer,
     build_transitions,
     label_texts,
 )
+from kgpipe.schemas import ENT_CLASSES
 
 DICT = pd.DataFrame(
     {
@@ -67,8 +73,9 @@ def test_packed_path_equals_direct_udf_path(spark, unit_fixture_dir):
 
     from pyspark.sql import functions as F
 
-    from kgpipe.operators.labeler import label_transcripts, make_labeler_udf
+    from kgpipe.operators.labeler import label_transcripts
     from kgpipe.pipeline import read_transcripts
+    from kgpipe.schemas import SPANS_ARRAY
 
     t = read_transcripts(
         spark, os.path.join(unit_fixture_dir, "transcripts.parquet"))
@@ -77,7 +84,12 @@ def test_packed_path_equals_direct_udf_path(spark, unit_fixture_dir):
 
     packed = label_transcripts(spark, t, cd).select(
         "conv_id", "turn_idx", "spans")
-    direct_udf = make_labeler_udf(spark, cd, packed=False)
+    gaz, trans = build_gazetteer(cd), build_transitions()
+
+    @F.pandas_udf(SPANS_ARRAY)
+    def direct_udf(texts: pd.Series) -> pd.Series:
+        return label_texts(texts, gaz, trans)
+
     direct = t.select(
         "conv_id", "turn_idx", direct_udf(F.col("text")).alias("spans"))
 
@@ -89,3 +101,79 @@ def test_packed_path_equals_direct_udf_path(spark, unit_fixture_dir):
         }
 
     assert rows(packed) == rows(direct)
+
+
+# -- build_gazetteer: batch build == the per-alias reference ----------------
+
+def _build_gazetteer_reference(candidate_dict):
+    """The per-alias form of build_gazetteer: one hash_array call and one
+    fold per alias, duplicates resolved by dict insertion (last class
+    wins). Kept here only as the equivalence reference."""
+    cls_idx = {c: i for i, c in enumerate(ENT_CLASSES)}
+    by_len = {}
+    for alias, cls in zip(candidate_dict["alias"], candidate_dict["ent_class"]):
+        toks = alias.split()
+        if not toks or len(toks) > MAX_ALIAS_TOKENS:
+            continue
+        th = pd.util.hash_array(np.array(toks, dtype=object))
+        h = _fold_hashes(th, len(toks), 1)[0]
+        by_len.setdefault(len(toks), []).append((int(h), cls_idx[cls]))
+    gaz = {}
+    for ln, pairs in by_len.items():
+        dedup = dict(pairs)
+        keys = np.fromiter(dedup.keys(), dtype=np.uint64, count=len(dedup))
+        vals = np.fromiter(dedup.values(), dtype=np.int8, count=len(dedup))
+        order = np.argsort(keys)
+        gaz[ln] = (keys[order], vals[order])
+    return gaz
+
+
+def _assert_same_gazetteer(got, want):
+    assert list(got) == list(want)  # same lengths, same order
+    for ln in want:
+        for g, w in zip(got[ln], want[ln]):
+            assert g.dtype == w.dtype
+            np.testing.assert_array_equal(g, w)
+
+
+# a small word pool so random aliases collide (duplicate aliases with
+# conflicting classes), plus non-ASCII words and whitespace runs
+_word = st.sampled_from(["acme", "corp", "alice", "port", "zephyr",
+                         "Zürich", "café", "東京", "ΑΘΗΝΑ", "x"])
+_alias = st.one_of(
+    st.lists(_word, min_size=1, max_size=4),   # the matched lengths
+    st.lists(_word, min_size=5, max_size=7),   # skipped: too long
+).flatmap(lambda ws: st.sampled_from([" ", "  ", "\t", " \u3000 "]).map(
+    lambda sep: sep.join(ws)))
+_blank = st.sampled_from(["", " ", "  \t "])  # skipped: no token
+_dict_rows = st.lists(st.tuples(st.one_of(_alias, _alias, _alias, _blank),
+                                st.sampled_from(ENT_CLASSES)), max_size=40)
+
+
+@settings(max_examples=300, deadline=None)
+@given(_dict_rows)
+def test_build_gazetteer_equals_per_alias_reference(rows):
+    cd = pd.DataFrame(
+        {"alias": pd.Series([a for a, _ in rows], dtype=object),
+         "ent_class": pd.Series([c for _, c in rows], dtype=object)})
+    _assert_same_gazetteer(build_gazetteer(cd),
+                           _build_gazetteer_reference(cd))
+
+
+def test_build_gazetteer_equals_reference_on_fixture_dicts(unit_fixture_dir):
+    import os
+
+    from kgpipe.fixtures.generator import materialize
+
+    for fx in (unit_fixture_dir, materialize("sf0.01")):
+        cd = pd.read_parquet(os.path.join(fx, "candidate_dict.parquet"))
+        _assert_same_gazetteer(build_gazetteer(cd),
+                               _build_gazetteer_reference(cd))
+
+
+def test_build_gazetteer_last_class_wins():
+    cd = pd.DataFrame({"alias": ["acme", "acme corp", "acme", "acme"],
+                       "ent_class": ["ORG", "ORG", "PER", "PLACE"]})
+    gaz = build_gazetteer(cd)
+    assert sorted(gaz) == [1, 2] and gaz[1][0].size == 1
+    assert ENT_CLASSES[gaz[1][1][0]] == "PLACE"

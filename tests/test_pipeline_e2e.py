@@ -115,3 +115,48 @@ def test_mentions_drop_null_span_elements(spark):
         "conv_id", "turn_idx", "surface").collect()
     assert [(r.conv_id, r.turn_idx, r.surface) for r in got] == [
         ("c1", 0, "alpha")]
+
+
+_ALL_OUTPUTS = {"labeled", "mentions", "linked", "raw_triples", "canon_map",
+                "triples"}
+
+
+@pytest.mark.parametrize("extractor", ["fused", "exploded"])
+def test_run_pipeline_plans_only_the_product(spark, unit_fixture_dir,
+                                             monkeypatch, extractor):
+    """run_pipeline plans ``triples`` alone — one gazetteer build — and
+    every side output is still built (once) on first read."""
+    import pandas as pd
+
+    import kgpipe.operators.labeler as labeler
+    from kgpipe.pipeline import run_pipeline
+
+    calls = []
+    real = labeler.build_gazetteer
+    monkeypatch.setattr(labeler, "build_gazetteer",
+                        lambda cd: calls.append(len(cd)) or real(cd))
+    tr = read_transcripts(spark, f"{unit_fixture_dir}/transcripts.parquet")
+    cd = pd.read_parquet(f"{unit_fixture_dir}/candidate_dict.parquet")
+
+    out = run_pipeline(spark, tr, cd, extractor=extractor)
+    assert len(calls) == 1
+    # the exploded triples plan reads the stages it depends on
+    assert set(out) == ({"triples"} if extractor == "fused"
+                        else _ALL_OUTPUTS)
+    for k in sorted(_ALL_OUTPUTS):
+        assert out[k].columns and out[k] is out[k], k
+    assert set(out) == _ALL_OUTPUTS
+    assert out["mentions"].count() > 0 and out["raw_triples"].count() > 0
+    with pytest.raises(KeyError):
+        out["nope"]
+    out["gold"] = out["triples"]  # plain assignment still works
+    assert out["gold"] is out["triples"]
+
+
+def test_locate_transcripts_names_probed_files(tmp_path):
+    from kgpipe.pipeline import locate_transcripts
+
+    with pytest.raises(FileNotFoundError) as e:
+        locate_transcripts(str(tmp_path))
+    for ext in ("parquet", "jsonl", "csv"):
+        assert str(tmp_path / f"transcripts.{ext}") in str(e.value)

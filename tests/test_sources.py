@@ -100,3 +100,32 @@ def test_checkpointed_pipeline_over_jsonl(spark, unit_fixture_dir, dumps,
     got = {tuple(r) for r in out["triples"]
            .select("subj", "pred", "obj", "conv_id", "turn_idx").collect()}
     assert got == want and got
+
+
+def test_cli_over_jsonl_fixture_dir(spark, unit_fixture_dir, dumps,
+                                    tmp_path, monkeypatch, capsys):
+    """The CLI's plain path accepts a JSONL-only input dir (it shares
+    run_from_dir's loader) and reaches planted-gold P/R 1.0 on it."""
+    import json
+
+    import kgpipe.session
+    import run_pipeline
+
+    d, _ = dumps
+    fx = tmp_path / "jsonl_cli"
+    fx.mkdir()
+    shutil.copy(os.path.join(d, "transcripts.jsonl"),
+                fx / "transcripts.jsonl")
+    for f in ("candidate_dict.parquet", "gold_triples.parquet"):
+        shutil.copy(os.path.join(unit_fixture_dir, f), fx / f)
+    # run in this session: main() would otherwise stop the shared one
+    monkeypatch.setattr(kgpipe.session, "get_spark", lambda *a, **k: spark)
+    monkeypatch.setattr(spark, "stop", lambda: None)
+
+    rc = run_pipeline.main(["--input", str(fx),
+                            "--output", str(tmp_path / "kg"), "--eval"])
+    assert rc == 0
+    report = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert report["triples"] > 0
+    assert report["metrics"]["precision"] == 1.0
+    assert report["metrics"]["recall"] == 1.0
