@@ -162,10 +162,11 @@ def _register_private_cleanup(private: str) -> None:
 
 def _sweep_stale_private_dirs(max_age_s: float = PRIVATE_DIR_MAX_AGE_S):
     """GC crashed sessions' private fallback dirs: anything matching the
-    private naming pattern whose mtime is older than ``max_age_s``. The
-    generous age keeps a long-lived live session safe (its writes refresh
-    the mtime; and even a false positive fails LOUDLY downstream — the
-    checkpoint layer raises on lost data, never fabricates)."""
+    private naming pattern whose mtime is older than ``max_age_s``. A live
+    session is safe: ``locked_run_dir`` refreshes its dir's mtime on every
+    use (nested stage writes do not touch the top-level mtime), and even a
+    false positive fails LOUDLY downstream — the checkpoint layer raises
+    on lost data, never fabricates."""
     import glob
     import os
     import shutil
@@ -177,6 +178,32 @@ def _sweep_stale_private_dirs(max_age_s: float = PRIVATE_DIR_MAX_AGE_S):
     for d in glob.glob(pat):
         try:
             if os.path.isdir(d) and os.path.getmtime(d) < cutoff:
+                shutil.rmtree(d, ignore_errors=True)
+        except OSError:
+            continue
+
+
+def _sweep_stale_shared_dirs(keep: str,
+                             max_age_s: float = PRIVATE_DIR_MAX_AGE_S):
+    """GC superseded shared fingerprint dirs next to ``keep`` (a changed
+    input or a fingerprint version bump strands the old dir forever):
+    each one unused for ``max_age_s`` is removed while holding its
+    ``.lock``, taken non-blocking, so a live run's dir is never touched."""
+    import fcntl
+    import os
+    import shutil
+    import time
+
+    cutoff = time.time() - max_age_s
+    root = os.path.dirname(keep)
+    for name in os.listdir(root):
+        d = os.path.join(root, name)
+        try:
+            if (d == keep or not os.path.isdir(d) or os.path.islink(d)
+                    or os.path.getmtime(d) >= cutoff):
+                continue
+            with open(os.path.join(d, ".lock"), "a") as lock:
+                fcntl.flock(lock, fcntl.LOCK_EX | fcntl.LOCK_NB)
                 shutil.rmtree(d, ignore_errors=True)
         except OSError:
             continue
@@ -217,19 +244,28 @@ def locked_run_dir(spark: SparkSession, input_paths: list[str],
             f"kgpipe-dedup-private-{spark.sparkContext.applicationId}"
             f"-{run_dir_fp(fps)}")
         _register_private_cleanup(private)
-        _sweep_stale_private_dirs()
         run_dir = shared_run_dir(input_paths, fp=run_dir_fp(fps))
+
+        def use(d: str) -> str:
+            # the age sweeps key on the top-level mtime, which nested
+            # stage writes never refresh: mark the dir live, THEN sweep
+            os.makedirs(d, exist_ok=True)
+            os.utime(d)
+            _sweep_stale_private_dirs()
+            return d
+
         if run_dir is None:
-            yield private
+            yield use(private)
             return
+        _sweep_stale_shared_dirs(run_dir)
         os.makedirs(run_dir, exist_ok=True)
         with open(os.path.join(run_dir, ".lock"), "w") as lock:
             try:
                 fcntl.flock(lock, fcntl.LOCK_EX | fcntl.LOCK_NB)
             except OSError:
-                yield private
+                yield use(private)
                 return
-            yield run_dir
+            yield use(run_dir)
 
     return _cm()
 

@@ -1,19 +1,16 @@
-"""Canonicalization: similarity join + connected components + id rewrite
+"""Canonicalization: similarity join + connected components -> canon map
 (SURVEY.md A10-A12; BASELINE.json: "canonicalization via GraphFrames-style
-connected components on a salted similarity join").
+connected components on a salted similarity join"). The id rewrite itself
+happens in the digest UDF's link map (operators/relations.py
+turn_digests), so no join ever rewrites the triples.
 
 GraphFrames is not installable offline (SURVEY.md §4.4), and the phrase is
 "GraphFrames-STYLE": connected components are hand-rolled DataFrame code.
 
-Two algorithms are provided:
-
-* ``two_phase`` (default) — the alternating large-star / small-star
-  algorithm of Kiveris et al., "Connected Components in MapReduce and
-  Beyond" (SOCC'14): provably O(log^2 n) rounds on any graph, each round two
-  shuffles (groupBy min + join). This is the 100-TB path.
-* ``minprop`` — plain min-label propagation; O(diameter) rounds. Alias
-  clusters are stars (diameter <= 2), so this is cheap too, but it degrades
-  on long chains.
+Connected components use the alternating large-star / small-star
+algorithm of Kiveris et al., "Connected Components in MapReduce and Beyond"
+(SOCC'14): provably O(log^2 n) rounds on any graph, each round two shuffles
+(groupBy min + join). This is the 100-TB path.
 
 Every iteration ``localCheckpoint()``s to truncate lineage (SURVEY.md §4.2).
 
@@ -193,18 +190,11 @@ def _edges_fingerprint(edges: DataFrame) -> tuple[int, int]:
     return int(row["n"]), int(row["h"])
 
 
-def connected_components(edges: DataFrame, algo: str = "two_phase",
-                         max_iter: int = 25) -> DataFrame:
+def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     """edges (src, dst) -> (entity_id, canonical_id), canonical = cluster min.
 
     Only non-root members appear in the output; callers coalesce identity.
     """
-    if algo == "minprop":
-        return _cc_minprop(edges, max_iter)
-    return _cc_two_phase(edges, max_iter)
-
-
-def _cc_two_phase(edges: DataFrame, max_iter: int) -> DataFrame:
     e = edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
     e = e.distinct().localCheckpoint()
     prev_fp = None
@@ -246,37 +236,7 @@ def _cc_two_phase(edges: DataFrame, max_iter: int) -> DataFrame:
                     F.col("dst").alias("canonical_id"))
 
 
-def _cc_minprop(edges: DataFrame, max_iter: int) -> DataFrame:
-    sym = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
-    nodes = sym.select(F.col("src").alias("node")).distinct()
-    labels = nodes.withColumn("label", F.col("node")).localCheckpoint()
-    for _ in range(max_iter):
-        cand = (
-            sym.join(labels, sym["src"] == labels["node"], "inner")
-            .groupBy(F.col("dst").alias("node2"))
-            .agg(F.min("label").alias("cand"))
-        )
-        merged = (
-            labels.join(cand, labels["node"] == cand["node2"], "left")
-            .select(
-                "node",
-                F.least(F.col("label"),
-                        F.coalesce(F.col("cand"), F.col("label"))).alias("new_label"),
-                "label",
-            )
-        )
-        changed = merged.filter(F.col("new_label") != F.col("label")).count()
-        labels = merged.select(
-            "node", F.col("new_label").alias("label")).localCheckpoint()
-        if changed == 0:
-            break
-    return labels.filter(F.col("node") != F.col("label")).select(
-        F.col("node").alias("entity_id"), F.col("label").alias("canonical_id"))
-
-
-def build_canon_map(dict_df: DataFrame, algo: str = "two_phase") -> DataFrame:
+def build_canon_map(dict_df: DataFrame) -> DataFrame:
     """candidate dictionary -> (entity_id, canonical_id) for merged ids.
 
     Surfaces are localCheckpointed: the two-tier similarity join reads them
@@ -284,38 +244,7 @@ def build_canon_map(dict_df: DataFrame, algo: str = "two_phase") -> DataFrame:
     band), and without a materialization each branch would recompute the
     entity_surfaces aggregation from the raw dictionary."""
     edges = similarity_edges(entity_surfaces(dict_df).localCheckpoint())
-    return connected_components(edges, algo=algo)
-
-
-def canonicalize(raw_triples: DataFrame, canon_map: DataFrame) -> DataFrame:
-    """Rewrite subj/obj onto canonical ids and dedup (SURVEY.md A12).
-
-    canon_map is tiny (derived from the dictionary) -> broadcast both joins;
-    the triples side never shuffles for this stage.
-    """
-    cm = F.broadcast(canon_map)
-    t = (
-        raw_triples.join(cm.withColumnRenamed("entity_id", "subj")
-                         .withColumnRenamed("canonical_id", "subj_canon"),
-                         "subj", "left")
-        .join(cm.withColumnRenamed("entity_id", "obj")
-              .withColumnRenamed("canonical_id", "obj_canon"),
-              "obj", "left")
-        .select(
-            F.coalesce("subj_canon", "subj").alias("subj"),
-            "pred",
-            F.coalesce("obj_canon", "obj").alias("obj"),
-            "conv_id",
-            "turn_idx",
-            "conf",
-        )
-    )
-    # groupBy + max(conf), NOT dropDuplicates: when the same triple arises
-    # both intra-turn (conf 1.0) and cross-turn (conf 0.9), dropDuplicates
-    # keeps a plan-dependent arbitrary row; max is deterministic across
-    # partitionings and matches the fused path's per-turn dedup rule.
-    return t.groupBy("subj", "pred", "obj", "conv_id", "turn_idx").agg(
-        F.max("conf").alias("conf"))
+    return connected_components(edges)
 
 
 # --------------------------------------------------------------------------

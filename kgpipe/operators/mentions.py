@@ -7,7 +7,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def extract_mentions(labeled: DataFrame, keep_text: bool = True) -> DataFrame:
+def extract_mentions(labeled: DataFrame) -> DataFrame:
     """labeled transcripts (with ``spans`` col) -> mentions table.
 
     ``mention_id = sha2(conv_id|turn_idx|start|end)`` — deterministic,
@@ -25,9 +25,8 @@ def extract_mentions(labeled: DataFrame, keep_text: bool = True) -> DataFrame:
         F.expr("substring(text, sp.start + 1, sp.end - sp.start)").alias("surface"),
         F.col("sp.ent_type").alias("ent_type"),
         F.col("sp.score").alias("score"),
+        "text",
     ]
-    if keep_text:
-        cols.append("text")
     # explode_outer + IS NOT NULL, not plain explode: the optimizer's
     # InferFiltersFromGenerate adds a size(spans)>0 filter before a plain
     # explode, and predicate pushdown then substitutes the span-producing

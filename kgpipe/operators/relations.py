@@ -2,15 +2,38 @@
 
 The reference emitted structured fields per document by pairing labeled
 spans with pattern phrases (SURVEY.md §2C step 6); lifted to triples per
-BASELINE.json. The graft expresses the whole stage with **window functions
-and broadcast joins — zero Python** in the hot path:
+BASELINE.json. Every triple the engine emits (batch, checkpointed and
+streaming) comes from the two halves below:
 
-* intra-turn: consecutive linked mentions (ordered by span_start) whose
-  between-text normalizes to a predicate phrase -> (prev_entity, pred, entity)
-* cross-turn (the turn-window case): a turn that OPENS with a predicate
-  phrase followed by a mention has a dangling subject; it resolves to the
-  most recent mention in the preceding ``window`` turns of the same
-  conversation (Window.orderBy(turn_idx).rangeBetween(-window, -1)).
+* ``turn_digests``: ONE Arrow-batched pass over the transcripts that
+  labels, links and pairs each turn where its text already lives, and
+  emits one NARROW row per mention-bearing turn — a few ids plus a small
+  intra-triple array, no text.
+* ``emit_triples``: the rules that need the conversation context. Given
+  each digest row's previous mention-bearing turn (``prev_turn``,
+  ``prev_last``) it emits
+
+  - intra-turn: consecutive linked mentions whose between-text normalizes
+    to a predicate phrase -> (prev_entity, pred, entity), conf 1.0;
+  - cross-turn: a turn that OPENS with a predicate phrase followed by a
+    mention has a dangling subject; it resolves to the last mention of the
+    nearest preceding mention-bearing turn if that turn is at most
+    ``window`` turns back -> conf 0.9.
+
+  Batch supplies the previous turn with a ``lag`` over the conv_id window
+  (``triples_from_digests``); the stream carries the same pair in keyed
+  state across micro-batches (streaming/ops.py ``incremental_triples``).
+
+Why digests and not a window over exploded mention rows: such a window
+shuffles every mention row WITH its turn text, ~(corpus bytes x
+mentions-per-turn) — measured on the x256 scaling corpus, 4.19 GB of
+shuffle write for a 6.4 GB input. Everything the window decides is
+turn-local except the cross-turn subject, so only ~50-byte digest rows
+enter the conv_id shuffle: at sf0.1 total shuffle write fell 12.8 -> 6.2 MB
+and executor CPU 40-45% for identical output, with no text in ANY
+shuffle. The exploded plan survives as the test oracle in
+tests/reference_plans.py; equality is pinned by tests/test_relations_fused.py
+and tests/test_properties.py.
 
 Ordering is always explicit on (conv_id, turn_idx, span_start) — never
 partition/task order (BASELINE.json per-row invariant).
@@ -19,166 +42,8 @@ partition/task order (BASELINE.json per-row invariant).
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-
-from kgpipe.predicates import predicates_df
-
-
-def _norm(col):
-    return F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")
-
-
-def extract_triples(spark: SparkSession, linked: DataFrame,
-                    window: int = 3, chunk: int | None = 4096,
-                    predicates=None) -> DataFrame:
-    """linked mentions (with text col) -> raw triples.
-
-    Returns (subj, pred, obj, conv_id, turn_idx, conf). Entity ids are
-    pre-canonicalization (may include ``~v1`` variants).
-
-    ``chunk`` is the skew treatment the north rule calls "salted by
-    conv_id": a per-conversation window puts a 10^6-turn hot conversation
-    into ONE task. With ``chunk=C`` the window partitions by
-    ``(conv_id, turn_idx // C)`` — task size is bounded by C turns no
-    matter how hot the key — and the only rows that lose their lag context
-    (each chunk's first mention-row) are repaired by joining a tiny
-    per-chunk summary (last mention of the previous chunk; the repair is
-    exact because intra-turn pairs never cross a chunk boundary — chunking
-    is by turn — and the cross-turn lookback ``window`` << C).
-    ``chunk=None`` is the unchunked reference plan; equality between the
-    two is pinned by tests/test_relations_chunk.py.
-
-    Single-pass plan: ONE window (per-conversation lag over the explicit
-    total order (turn_idx, span_start, span_end)) yields both cases —
-
-    * intra-turn (prev mention in the SAME turn): the text strictly between
-      the previous mention and this one is a predicate phrase
-      -> (prev_entity, pred, entity), conf 1.0
-    * cross-turn (this row is its turn's FIRST mention): the turn's prefix
-      is a predicate phrase and the nearest preceding mention-bearing turn
-      is within `window` -> that turn's last entity becomes the subject,
-      conf 0.9 — lag(entity) at a turn's first mention IS exactly "last
-      mention of the nearest prior turn", so no groupBy/self-join is needed
-
-    ``predicates`` is any form kgpipe.predicates accepts (dict / pandas /
-    DataFrame / None for the built-in default table) — the extractor is not
-    tied to any particular phrase set.
-
-    — so the whole stage is one shuffle on conv_id plus one broadcast join,
-    replacing the previous three-branch union (two window shuffles + a
-    groupBy + a join) whose repeated subtrees also forced the caller to
-    persist `linked`. Semantics are pinned by the planted-gold e2e tests
-    and the streaming-parity test (the keyed-state op mirrors this logic).
-    """
-    preds = predicates_df(spark, predicates)
-
-    base = linked.select("conv_id", "turn_idx", "span_start", "span_end",
-                         "entity_id", "text")
-    if chunk is None:
-        w = Window.partitionBy("conv_id").orderBy(
-            "turn_idx", "span_start", "span_end")
-        m = (base
-             .withColumn("prev_turn", F.lag("turn_idx").over(w))
-             .withColumn("prev_end", F.lag("span_end").over(w))
-             .withColumn("prev_ent", F.lag("entity_id").over(w)))
-    else:
-        if window >= chunk:
-            raise ValueError("chunk must exceed the turn window")
-        base = base.withColumn(
-            "_chunk", (F.col("turn_idx") / F.lit(chunk)).cast("long"))
-        w = Window.partitionBy("conv_id", "_chunk").orderBy(
-            "turn_idx", "span_start", "span_end")
-        m = (base
-             .withColumn("prev_turn", F.lag("turn_idx").over(w))
-             .withColumn("prev_end", F.lag("span_end").over(w))
-             .withColumn("prev_ent", F.lag("entity_id").over(w)))
-        # repair each chunk's first mention-row: its true predecessor is
-        # the LAST mention of the previous chunk (one summary row per
-        # (conv, chunk) — a tiny shuffle). Only the cross-turn case can
-        # span a boundary, so prev_end needs no repair.
-        # ONE max_by over a (turn, ent) struct: taking turn and entity via
-        # two separate max_by calls could pair them from different rows on
-        # an ordering tie (unreachable today — one linked row per span —
-        # but load-bearing if upstream ever links k>1)
-        summary = (base.groupBy("conv_id", "_chunk").agg(
-            F.max_by(F.struct(F.col("turn_idx").alias("b_turn"),
-                              F.col("entity_id").alias("b_ent")),
-                     F.struct("turn_idx", "span_start", "span_end"))
-             .alias("_b"))
-            .select("conv_id",
-                    (F.col("_chunk") + 1).alias("_chunk"),
-                    F.col("_b.b_turn").alias("b_turn"),
-                    F.col("_b.b_ent").alias("b_ent")))
-        m = (m.join(summary, ["conv_id", "_chunk"], "left")
-             .withColumn("prev_turn",
-                         F.coalesce("prev_turn", "b_turn"))
-             .withColumn("prev_ent",
-                         F.coalesce("prev_ent", "b_ent"))
-             .drop("b_turn", "b_ent", "_chunk"))
-
-    intra_case = F.col("prev_turn") == F.col("turn_idx")
-    cross_case = (
-        F.col("prev_turn").isNotNull()
-        & (F.col("prev_turn") < F.col("turn_idx"))
-        & (F.col("prev_turn") >= F.col("turn_idx") - window)
-    )
-    between = F.col("text").substr(
-        F.col("prev_end") + 1, F.col("span_start") - F.col("prev_end"))
-    prefix = F.col("text").substr(F.lit(1), F.col("span_start"))
-
-    phrased = (
-        m.withColumn(
-            "phrase_norm",
-            F.when(intra_case, _norm(between))
-             .when(cross_case, _norm(prefix)))
-        .filter(F.col("phrase_norm").isNotNull())
-    )
-    return (
-        phrased.join(F.broadcast(preds),
-                     F.col("phrase_norm") == preds["phrase"], "inner")
-        .select(
-            F.col("prev_ent").alias("subj"),
-            F.col("pred"),
-            F.col("entity_id").alias("obj"),
-            "conv_id",
-            "turn_idx",
-            F.when(intra_case, F.lit(1.0)).otherwise(F.lit(0.9))
-             .cast("float").alias("conf"),
-        )
-    )
-
-
-# --------------------------------------------------------------------------
-# Fused turn-digest extraction: the narrow-shuffle form of the same
-# semantics.
-#
-# ``extract_triples`` above windows over EXPLODED mention rows, each
-# carrying the full turn text — so the pipeline's one wide shuffle moves
-# ~(corpus bytes x mentions-per-turn). Measured on the x256 scaling corpus
-# that is 4.19 GB of shuffle write for a 6.4 GB input; at the north rule's
-# 10^12-turn scale it means shuffling the whole table to extract triples.
-#
-# Everything the window actually DECIDES, though, is turn-local except one
-# thing: the cross-turn subject (the last linked mention of the nearest
-# preceding mention-bearing turn). So the fused form computes all
-# turn-local work — link filtering, consecutive-pair predicate matching,
-# the turn-prefix predicate match — in ONE Arrow-batched pass over the
-# labeled rows, where the text already lives, and emits one NARROW row per
-# mention-bearing turn (a few ids + a small intra-triple array, no text).
-# Only those ~50-byte rows enter the conv_id window: the shuffle drops
-# from O(corpus) to O(turns x ids). Measured at sf0.1 (short ~165-byte
-# synthetic turns): total pipeline shuffle write 12.8 -> 6.2 MB and
-# executor CPU -40-45% for identical output; the remaining bytes are the
-# narrow per-turn window plus the final triple dedup — no text in ANY
-# shuffle. On realistic kilobyte-scale turns the factor is the
-# text-to-ids byte ratio (~20x and up). The dictionary + predicate tables ride the SAME
-# broadcast mechanism the labeler already uses (spark broadcast of plain
-# dicts — the scale-correct form; a JVM map literal would bloat the plan
-# past a few thousand aliases).
-#
-# Equality with the exploded path on both labeler paths is pinned by
-# tests/test_relations_fused.py; semantics doc is `extract_triples`'s.
 
 
 def turn_digests(spark: SparkSession, labeled: DataFrame,
@@ -199,22 +64,23 @@ def turn_digests(spark: SparkSession, labeled: DataFrame,
     * ``last_ent``: the turn's last linked mention — the resolver target
       for the NEXT turn's dangling subject.
 
-    Linking replicates the exploded path exactly: top-1 candidate per
-    (normalized alias, class) with the (prior desc, entity_id asc) total
-    order; mentions without a dictionary alias are dropped BEFORE pairing,
-    exactly like link_entities' inner join. Normalization matches the
-    fixture generator's python ``_norm`` (lower + whitespace collapse);
-    the JVM ``norm_surface`` agrees on space-delimited text, which the
-    alias registry guarantees for its side.
+    Linking is link_entities' k=1 join (the ``linked`` side output)
+    exactly: top-1 candidate per (normalized alias, class) with the
+    (prior desc, entity_id asc) total order; mentions without a dictionary
+    alias are dropped BEFORE pairing, like the join drops them.
+    Normalization matches the fixture generator's python ``_norm`` (lower
+    + whitespace collapse); the JVM ``norm_surface`` agrees on
+    space-delimited text, which the alias registry guarantees for its side.
+    The dictionary and predicate tables ship as one spark broadcast of
+    plain dicts, like the labeler's gazetteer (a JVM map literal would
+    bloat the plan past a few thousand aliases).
 
     ``canon`` (entity_id -> canonical_id, driver-side dict): when given,
     it is composed into the link map HERE, at broadcast-build time — the
-    digests then carry canonical ids everywhere and the downstream
-    canonicalize stage (two broadcast joins + a corpus-scale dedup
-    exchange) disappears entirely. The composition is free: the canon map
-    derives from the same broadcast-sized dictionary (operators/canon.py
-    build_canon_map_local), so rewriting the link map's values is a
-    driver-side dict pass, not a join.
+    digests then carry canonical ids everywhere, and no join rewrites ids
+    downstream. The canon map has at most one row per dictionary entity
+    (pipeline.canon_map_for), so composing it is a driver-side dict pass
+    over a map that is broadcast anyway.
 
     ``inline_labeler``: when ``"gaz"`` or ``"trained"``, sequence labeling
     runs INSIDE this UDF (``labeled`` may then be the bare transcripts) —
@@ -354,45 +220,38 @@ def turn_digests(spark: SparkSession, labeled: DataFrame,
 def triples_from_digests(digests: DataFrame, window: int = 3,
                          chunk: int | None = 4096,
                          dedup: bool = False) -> DataFrame:
-    """Per-turn digests -> raw triples; same output contract as
-    ``extract_triples``.
+    """Per-turn digests -> triples (subj, pred, obj, conv_id, turn_idx,
+    conf): a ``lag`` over the conv_id window finds each row's previous
+    mention-bearing turn, then ``emit_triples`` applies the rules.
 
-    SINGLE-PASS plan: the digest subtree (scan -> labeler UDF -> digest
-    UDF) is consumed exactly ONCE. The first fused form consumed it three
-    times — window branch, per-chunk summary branch, intra-explode branch
-    — and Catalyst cannot ReusedExchange them (each branch prunes
-    different columns, so the exchange subplans differ): the x256 probe
+    SINGLE-PASS plan: the digest subtree (scan -> digest UDF) is consumed
+    exactly ONCE. A form that consumed it from several branches (window,
+    per-chunk summary join, intra explode) cannot share them through
+    ReusedExchange (each branch prunes different columns): the x256 probe
     showed the full scan+Arrow-UDF stage executing 2-3x (636s + 457s
-    executor CPU for one corpus). Two rewrites fix it structurally:
+    executor CPU for one corpus). Hence:
 
-    * **ghost-row chunk overlap instead of a summary join.** A digest row
-      within ``window`` turns of its chunk's end (``turn_idx % chunk >=
-      chunk - window`` — row-local, no aggregate needed) is duplicated
-      into the NEXT chunk as a non-emitting ghost. Ghost turn_idx values
-      are strictly below every real turn of that chunk, so after the
+    * **ghost-row chunk overlap instead of a summary join.** ``chunk``
+      bounds a hot conversation's window task at ``chunk`` turns by
+      partitioning on (conv_id, turn_idx // chunk). A digest row within
+      ``window`` turns of its chunk's end (``turn_idx % chunk >= chunk -
+      window`` — row-local, no aggregate needed) is duplicated into the
+      NEXT chunk as a non-emitting ghost. Ghost turn_idx values are
+      strictly below every real turn of that chunk, so after the
       (conv_id, _chunk) window sort the ghosts sit at the front and only
-      the chunk's FIRST real row can see one via lag(1) — exactly the row
-      the old summary join repaired. Equivalence with the join form: the
-      old repair handed the first row the previous chunk's last digest
-      unconditionally and the ``>= turn_idx - window`` filter discarded
-      far-away subjects; ghosts only reach back ``window`` turns, so the
-      post-filter result is identical. Duplication is bounded by
-      window/chunk (~0.1% of rows), vs a join whose build side is one row
-      per (conv, chunk).
-    * **one explode instead of union(intra, cross).** Each post-window row
-      emits concat(its intra triples with conf 1.0, the cross triple as a
-      0-or-1-element array with conf 0.9) through a single explode —
-      union(A(d), B(d)) would have duplicated the d subtree again.
+      the chunk's FIRST real row can see one via lag(1). A subject further
+      back than ``window`` turns is discarded by the cross rule anyway, so
+      the result equals the unchunked window (``chunk=None``). Duplication
+      is bounded by window/chunk (~0.1% of rows).
+    * **one explode instead of union(intra, cross)** (``emit_triples``).
 
     The ONLY shuffle is the conv_id window over the narrow digest rows.
     Output equality with the exploded reference plan (and chunk=None) is
     pinned by tests/test_relations_fused.py."""
-    if chunk is None:
-        w = Window.partitionBy("conv_id").orderBy("turn_idx")
-        d = (digests.withColumn("_ghost", F.lit(False))
-             .withColumn("prev_turn", F.lag("turn_idx").over(w))
-             .withColumn("prev_last", F.lag("last_ent").over(w)))
-    else:
+    live = None
+    d = digests
+    w = Window.partitionBy("conv_id").orderBy("turn_idx")
+    if chunk is not None:
         if window >= chunk:
             raise ValueError("chunk must exceed the turn window")
         own = F.struct(
@@ -402,7 +261,7 @@ def triples_from_digests(digests: DataFrame, window: int = 3,
             ((F.col("turn_idx") / F.lit(chunk)).cast("long") + 1).alias("c"),
             F.lit(True).alias("g"))
         near_end = (F.col("turn_idx") % F.lit(chunk)) >= F.lit(chunk - window)
-        d = (digests
+        d = (d
              .withColumn("_cg", F.explode(
                  F.when(near_end, F.array(own, ghost))
                   .otherwise(F.array(own))))
@@ -410,13 +269,27 @@ def triples_from_digests(digests: DataFrame, window: int = 3,
              .withColumn("_ghost", F.col("_cg.g"))
              .drop("_cg"))
         w = Window.partitionBy("conv_id", "_chunk").orderBy("turn_idx")
-        d = (d
-             .withColumn("prev_turn", F.lag("turn_idx").over(w))
-             .withColumn("prev_last", F.lag("last_ent").over(w)))
+        live = ~F.col("_ghost")
+    d = (d
+         .withColumn("prev_turn", F.lag("turn_idx").over(w))
+         .withColumn("prev_last", F.lag("last_ent").over(w)))
+    return emit_triples(d, window=window, dedup=dedup, live=live)
 
+
+def emit_triples(d: DataFrame, window: int, dedup: bool = False,
+                 live: Column | None = None) -> DataFrame:
+    """Digest rows carrying their conversation's previous mention-bearing
+    turn (``prev_turn``, ``prev_last``; null for a conversation's first)
+    -> triples. The one implementation of the triple rules: the batch
+    window and the streaming state both end here.
+
+    Each row emits concat(its intra triples at conf 1.0, the cross triple
+    as a 0-or-1-element array at conf 0.9 when ``first_pred`` matched and
+    ``prev_turn >= turn_idx - window``) through a single explode —
+    union(A(d), B(d)) would consume the d subtree twice. Rows where the
+    ``live`` column is false emit nothing (the chunk ghosts)."""
     cross_ok = (
-        ~F.col("_ghost")
-        & F.col("first_pred").isNotNull()
+        F.col("first_pred").isNotNull()
         & F.col("prev_turn").isNotNull()
         & (F.col("prev_turn") >= F.col("turn_idx") - window)
     )
@@ -426,14 +299,14 @@ def triples_from_digests(digests: DataFrame, window: int = 3,
     # coalesce: a null intra would null the whole concat and silently drop
     # the row's cross triple with it (digest rows always carry [], but the
     # guard costs nothing and the failure mode is silent data loss)
-    intra_items = F.when(
-        ~F.col("_ghost"),
-        F.coalesce(
-            F.transform("intra", lambda x: F.struct(
-                x["subj"].alias("subj"), x["pred"].alias("pred"),
-                x["obj"].alias("obj"), conf_f(1.0).alias("conf"))),
-            empty),
-    ).otherwise(empty)
+    intra_items = F.coalesce(
+        F.transform("intra", lambda x: F.struct(
+            x["subj"].alias("subj"), x["pred"].alias("pred"),
+            x["obj"].alias("obj"), conf_f(1.0).alias("conf"))),
+        empty)
+    if live is not None:
+        cross_ok = live & cross_ok
+        intra_items = F.when(live, intra_items).otherwise(empty)
     cross_items = F.when(cross_ok, F.array(F.struct(
         F.col("prev_last").alias("subj"),
         F.col("first_pred").alias("pred"),
@@ -481,7 +354,7 @@ def extract_triples_fused(spark: SparkSession, labeled: DataFrame,
     output is the FINAL canonical triple table — link map composed with
     the canon map at broadcast-build time, per-turn max-conf dedup — and
     the plan's only shuffle is the narrow digest window. Defaults produce
-    pre-canonicalization raw triples, identical to ``extract_triples``.
+    the pre-canonicalization raw triples.
     ``inline_labeler``/``model``: run labeling inside the digest UDF (see
     turn_digests) — ``labeled`` may then be the bare transcripts."""
     return triples_from_digests(

@@ -94,47 +94,6 @@ class TrainedLabeler:
         return masked
 
 
-# coarse POS tag ids for the rule tagger (SURVEY.md §2C step 4: the
-# reference feeds NLTK POS tags to its CRF as features; NLTK is absent in
-# this sandbox, so tags come from the standard no-dependency fallback — a
-# closed-class lexicon plus suffix/shape rules. Same feature ROLE: a
-# syntactic-category signal whose per-tag weights are learned).
-# 0=other/noun 1=DET 2=ADP 3=CONJ 4=PRON 5=AUX 6=VERB-ish 7=ADV
-# 8=NUM 9=PUNCT 10=PROPN 11=derived-NOUN
-_POS_LEXICON = {
-    "the": 1, "a": 1, "an": 1, "this": 1, "that": 1, "these": 1, "those": 1,
-    "of": 2, "in": 2, "on": 2, "at": 2, "by": 2, "for": 2, "with": 2,
-    "from": 2, "to": 2, "as": 2,
-    "and": 3, "or": 3, "but": 3, "nor": 3,
-    "i": 4, "you": 4, "he": 4, "she": 4, "it": 4, "we": 4, "they": 4,
-    "is": 5, "are": 5, "was": 5, "were": 5, "be": 5, "been": 5, "am": 5,
-    "has": 5, "have": 5, "had": 5, "do": 5, "does": 5, "did": 5,
-    "will": 5, "would": 5, "can": 5, "could": 5, "may": 5, "might": 5,
-}
-
-
-def pos_tag_ids(s: pd.Series, low: pd.Series) -> np.ndarray:
-    """Vectorized deterministic POS tag ids over a token Series (``s`` the
-    raw tokens, ``low`` their lowercase). Rule order: closed-class lexicon
-    wins, then punctuation/digit/capitalization shape, then suffix rules;
-    default 0 (common noun / other). All pandas C-side ops — no per-token
-    Python."""
-    lex = low.map(_POS_LEXICON)
-    conds = [
-        lex.notna().to_numpy(bool),
-        (~s.str.contains(r"[A-Za-z0-9]", regex=True)).to_numpy(bool),
-        s.str.contains(r"\d", regex=True).to_numpy(bool),
-        s.str[:1].str.isupper().fillna(False).to_numpy(bool),
-        low.str.endswith("ly").to_numpy(bool),
-        (low.str.endswith("ing") | low.str.endswith("ed")).to_numpy(bool),
-        (low.str.endswith("tion") | low.str.endswith("ness")
-         | low.str.endswith("ment") | low.str.endswith("ity")).to_numpy(bool),
-    ]
-    choices = [lex.fillna(0).to_numpy().astype(np.int64),
-               9, 8, 10, 7, 6, 11]
-    return np.select(conds, choices, default=0).astype(np.int64)
-
-
 def _hashed(h: np.ndarray, salt: np.uint64, D: int) -> np.ndarray:
     with np.errstate(over="ignore"):
         mixed = (h ^ salt) * np.uint64(0x9E3779B97F4A7C15)
@@ -254,9 +213,9 @@ def extract_features(texts: pd.Series, gaz: dict, D: int,
     add(all_pos, _hashed(prev_h, _SALTS["prev"], D))
     add(all_pos, _hashed(next_h, _SALTS["next"], D))
 
-    # NO POS template, by measurement (§2C step 4 closes REJECTED): the
-    # rule tagger exists (pos_tag_ids) and three wirings were holdout-
-    # gated — unigram+bigram: withheld-span recall 0.89 -> 0.50; dense
+    # NO POS template, by measurement (§2C step 4 closes REJECTED): a
+    # closed-class-lexicon + suffix/shape rule tagger was built and three
+    # wirings were holdout-gated — unigram+bigram: withheld-span recall 0.89 -> 0.50; dense
     # unigram: 0.18 (the near-constant default tag trains into a second
     # O-biased bias term); sparse non-default unigram: 0.55. On this
     # corpus every variant accelerates training-set separation enough

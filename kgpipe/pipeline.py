@@ -1,8 +1,10 @@
 """End-to-end KG-construction pipeline (BASELINE.json north_rule).
 
-scan -> stable order -> CRF-style labeling (Arrow UDF) -> mention explode ->
-broadcast entity linking -> turn-window triple extraction (window functions)
--> similarity-join + connected-components canonicalization -> triples.
+scan -> one Arrow UDF per turn (CRF-style labeling, entity linking onto
+canonical ids, predicate pairing: operators/relations.py turn_digests) ->
+conv_id window over the narrow per-turn digests -> triples. The canon map
+(similarity join + connected components) is built from the dictionary
+before any corpus job and composed into the UDF's link map.
 
 Every stage is a DataFrame-in/DataFrame-out function so stages can be
 checkpointed and resumed independently (operators/checkpoint.py).
@@ -17,11 +19,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kgpipe.operators.canon import canonicalize
 from kgpipe.operators.labeler import label_transcripts
 from kgpipe.operators.linker import dict_to_df, link_entities, top1_dict
 from kgpipe.operators.mentions import extract_mentions
-from kgpipe.operators.relations import extract_triples
 from kgpipe.schemas import TRANSCRIPTS
 
 
@@ -64,15 +64,20 @@ def locate_transcripts(fixture_dir: str) -> str:
 LOCAL_CANON_MAX_DICT = 200_000
 
 
-def canon_map_for(spark: SparkSession, candidate_dict: pd.DataFrame,
-                  cc_algo: str = "two_phase") -> DataFrame:
+def canon_map_for(spark: SparkSession,
+                  candidate_dict: pd.DataFrame) -> pd.DataFrame:
+    """The dictionary's canon map (entity_id, canonical_id; non-roots
+    only) as pandas, for composing into the digest link map.
+
+    Collecting the distributed result is safe at any dictionary size the
+    digest UDF accepts: that UDF already ships the whole top-1 link map to
+    every worker as a driver dict, and the canon map has at most one row
+    per entity."""
     from kgpipe.operators.canon import build_canon_map, build_canon_map_local
 
     if len(candidate_dict) > LOCAL_CANON_MAX_DICT:
-        return build_canon_map(dict_to_df(spark, candidate_dict), algo=cc_algo)
-    pdf = build_canon_map_local(candidate_dict)
-    return spark.createDataFrame(
-        pdf, schema="entity_id string, canonical_id string")
+        return build_canon_map(dict_to_df(spark, candidate_dict)).toPandas()
+    return build_canon_map_local(candidate_dict)
 
 
 def _label(spark: SparkSession, transcripts: DataFrame,
@@ -114,84 +119,66 @@ def run_pipeline(
     transcripts: DataFrame,
     candidate_dict: pd.DataFrame,
     window: int = 3,
-    cc_algo: str = "two_phase",
     predicates=None,
     labeler_model=None,
-    extractor: str = "fused",
 ) -> dict[str, DataFrame]:
     """Plan the product ``triples``; the other stages are built on demand.
 
+    The product is one plan at every dictionary size: scan -> one
+    ArrowEvalPython (labeling, linking onto canonical ids and predicate
+    pairing inside the digest UDF: operators/relations.py turn_digests)
+    -> the conv_id window over ~50-byte per-turn rows -> per-turn
+    max-conf dedup. The canon map (``canon_map_for``) is composed into the
+    UDF's link map, so no join rewrites ids and no exchange dedups; the
+    only shuffle carries no text.
+
     ``labeler_model``: optional ``TrainedLabeler`` (operators/train.py) —
     when given, labeling uses the learned perceptron weights instead of
-    the hand-weighted gazetteer decoder; every downstream stage is
-    identical (same spans schema).
-
-    ``extractor``: ``"fused"`` (default) extracts triples via the
-    narrow-shuffle turn-digest path (operators/relations.py:
-    turn_digests — the conv_id window shuffles ~50-byte per-turn rows
-    instead of per-mention rows carrying the full text: measured at
-    sf0.1, total shuffle write 12.8 -> 6.2 MB and executor CPU -40%
-    for identical output; the factor grows with turn length at real
-    transcript scale);
-    ``"exploded"`` is the window-over-mentions reference plan. Output
-    equality between the two is pinned by tests/test_relations_fused.py.
+    the hand-weighted gazetteer decoder; everything downstream is
+    identical.
 
     Return contract: a dict of LAZY DataFrames under the keys
     ``labeled``, ``mentions``, ``linked``, ``raw_triples``, ``canon_map``
-    and ``triples``. Only ``triples`` — the product — is planned here; each
-    side output is planned on its first ``out[key]`` read (then kept, and
-    shared by any stage that depends on it), so a caller that reads only
+    and ``triples``. Only ``triples`` is planned here; each side output is
+    planned on its first ``out[key]`` read (then kept, and shared by any
+    side output that depends on it), so a caller that reads only
     ``triples`` builds the gazetteer once and plans nothing else. Keys
-    appear in the dict once read. On the fused small-dict path
-    ``raw_triples`` (the pre-canonicalization form) is an INDEPENDENT
-    plan from ``triples`` — they share no subtree, so evaluating both
-    runs the corpus scan + inline labeling twice.
+    appear in the dict once read. ``raw_triples`` is the same digest plan
+    without the canon map and dedup — an INDEPENDENT plan from
+    ``triples``, so evaluating both runs the corpus scan + inline
+    labeling twice.
     """
-    # no persist anywhere: every intermediate is referenced exactly once,
-    # so the plan is one straight pipeline. Block-manager persists
-    # measurably ANTI-scaled at high core counts (MemoryStore unroll
-    # contention: 46s vs 16s to build the same 2.8M-row stage at local[32]).
-    thunks = {
+    from kgpipe.operators.relations import extract_triples_fused
+
+    # Labeling runs INSIDE the digest UDF: the labeled->digest two-UDF
+    # chain cannot be merged by Spark (dependent Python UDFs), so it ships
+    # every turn's text across the JVM<->Python boundary twice and the
+    # span structs back in between. Inline = one ArrowEvalPython, half the
+    # Arrow traffic.
+    fused = functools.partial(
+        extract_triples_fused, spark,
+        _inline_source(spark, transcripts, labeler_model), candidate_dict,
+        window=window, predicates=predicates, model=labeler_model,
+        inline_labeler="gaz" if labeler_model is None else "trained")
+    canon_pdf = canon_map_for(spark, candidate_dict)
+    # no persist anywhere: every intermediate is referenced at most once
+    # per plan. Block-manager persists measurably ANTI-scaled at high core
+    # counts (MemoryStore unroll contention: 46s vs 16s to build the same
+    # 2.8M-row stage at local[32]).
+    out = _LazyOutputs({
         "labeled": lambda: _label(
             spark, transcripts, candidate_dict, labeler_model),
         "mentions": lambda: extract_mentions(out["labeled"]),
         "linked": lambda: link_entities(
             out["mentions"], dict_to_df(spark, top1_dict(candidate_dict)),
             k=1, ranked=False),
-        "canon_map": lambda: canon_map_for(spark, candidate_dict, cc_algo),
-        "raw_triples": lambda: extract_triples(
-            spark, out["linked"], window=window, predicates=predicates),
-        "triples": lambda: canonicalize(out["raw_triples"], out["canon_map"]),
-    }
-    if extractor == "fused":
-        from kgpipe.operators.relations import extract_triples_fused
-
-        # Labeling runs INSIDE the digest UDF on the product path: the
-        # labeled->digest two-UDF chain cannot be merged by Spark
-        # (dependent Python UDFs), so it ships every turn's text across
-        # the JVM<->Python boundary twice and the span structs back in
-        # between. Inline = one ArrowEvalPython, half the Arrow traffic.
-        fused = functools.partial(
-            extract_triples_fused, spark,
-            _inline_source(spark, transcripts, labeler_model), candidate_dict,
-            window=window, predicates=predicates, model=labeler_model,
-            inline_labeler="gaz" if labeler_model is None else "trained")
-        thunks["raw_triples"] = fused
-        if len(candidate_dict) <= LOCAL_CANON_MAX_DICT:
-            # single-shuffle product path: the canon map (driver-side,
-            # dict-derived, broadcast-sized by construction) is composed
-            # into the digest UDF's link map and dedup happens per turn —
-            # the generic canonicalize stage's two broadcast joins and
-            # corpus-scale dedup exchange vanish.
-            from kgpipe.operators.canon import build_canon_map_local
-
-            canon_pdf = build_canon_map_local(candidate_dict)
-            thunks["triples"] = lambda: fused(
-                canon=dict(zip(canon_pdf["entity_id"],
-                               canon_pdf["canonical_id"])), dedup=True)
-            thunks["canon_map"] = lambda: spark.createDataFrame(
-                canon_pdf, schema="entity_id string, canonical_id string")
-    out = _LazyOutputs(thunks)
+        "canon_map": lambda: spark.createDataFrame(
+            canon_pdf, schema="entity_id string, canonical_id string"),
+        "raw_triples": fused,
+        "triples": lambda: fused(
+            canon=dict(zip(canon_pdf["entity_id"],
+                           canon_pdf["canonical_id"])), dedup=True),
+    })
     out["triples"]  # the product is planned now, side outputs on first read
     return out
 
@@ -202,40 +189,24 @@ def run_pipeline_checkpointed(
     run_dir: str,
     window: int = 3,
     n_buckets: int = 32,
-    cc_algo: str = "two_phase",
     predicates=None,
     labeler_model=None,
-    stage_layout: str = "digests",
 ) -> dict[str, object]:
     """A14 resumable run: conv_id-bucketed stages with per-bucket lineage
     manifests (operators/checkpoint.py). Re-invoking with the same
     ``run_dir`` + unchanged input skips every completed bucket; a run
     interrupted mid-stage resumes from the last durably-committed bucket.
 
-    Two durable-stage layouts, both conv_id-bucket-resumable:
-
-    * ``stage_layout="linked"``: stages the EXPLODED ``linked``
-      intermediate — the durable cut between labeling and extraction makes
-      the expensive Arrow-UDF labeling stage independently resumable, and
-      the staged table doubles as the mentions product. The cost is that
-      the staged rows carry the full turn text (the wide form the fused
-      product plan eliminated).
-    * ``stage_layout="digests"`` (default — the product economics): stages
-      the FUSED per-turn digests
-      (operators/relations.py turn_digests, labeling inlined) — the
-      durable tables are the ~50-byte narrow rows, so the resumable path
-      keeps the single-shuffle product economics end to end: stage 1 is
-      scan -> one ArrowEvalPython -> narrow bucket write (labeling still
-      independently resumable, at bucket granularity), stage 2 is the
-      narrow window + per-turn dedup. Canonical ids are composed into the
-      digest link map (small-dict product path), so no canonicalize stage
-      exists to checkpoint. Requires len(candidate_dict) <=
-      LOCAL_CANON_MAX_DICT; larger dictionaries fall back to "linked"
-      (the composed-canon trick needs the driver-side map).
-
-    Output parity across layouts and with the plain paths holds because
-    fused == exploded is pinned by tests/test_relations_fused.py and
-    full == checkpointed (both layouts) by tests/test_checkpoint.py.
+    The durable cut is the product plan's own: stage ``digests`` is scan
+    -> one ArrowEvalPython (operators/relations.py turn_digests, labeling
+    inlined, canonical ids composed into the link map) -> narrow bucket
+    write, so the expensive labeling stays independently resumable at
+    bucket granularity while the staged rows are the ~50-byte digests,
+    not text. Stage ``triples`` is the conv_id window + per-turn dedup
+    (the window partitions by conv_id, so it is bucket-local). Every
+    dictionary size takes this path, with the canon map from
+    ``canon_map_for``. Output equals ``run_pipeline``'s ``triples``,
+    pinned by tests/test_checkpoint.py.
 
     Stage fingerprints chain (fp_{k+1} = h(fp_k, params)): the pipeline is
     deterministic, so a stage's output is fully determined by its input
@@ -245,7 +216,8 @@ def run_pipeline_checkpointed(
     import hashlib
 
     from kgpipe.operators.checkpoint import CheckpointedRun, input_fingerprint
-
+    from kgpipe.operators.relations import triples_from_digests, turn_digests
+    from kgpipe.predicates import predicates_dict
     from kgpipe.sources.transcripts import read_transcripts_any
 
     tpath = locate_transcripts(fixture_dir)
@@ -253,98 +225,49 @@ def run_pipeline_checkpointed(
     transcripts = read_transcripts_any(spark, tpath)
     candidate_dict = pd.read_parquet(dpath)
 
-    from kgpipe.predicates import predicates_dict
-
     pred_map = predicates_dict(predicates)
     # the predicate table is stage config: changing it must invalidate the
-    # raw_triples checkpoint (and transitively everything downstream)
+    # digests checkpoint (and transitively everything downstream)
     pred_fp = hashlib.sha256(
         repr(sorted(pred_map.items())).encode()).hexdigest()[:8]
     # the labeler weights are stage-1 config: a different trained model (or
-    # switching gazetteer<->trained) must invalidate the linked checkpoint
+    # switching gazetteer<->trained) must invalidate the digests checkpoint
     model_fp = (
         hashlib.sha256(labeler_model.W.tobytes()
                        + labeler_model.trans.tobytes()).hexdigest()[:8]
         if labeler_model is not None else "gazetteer"
     )
+    # digests depend on the dictionary+canon (both derived from dpath),
+    # the predicate table (first_pred/intra matching happens inside the
+    # digest UDF) and the labeler weights — but NOT on the turn window
+    fpd1 = input_fingerprint(
+        [tpath, dpath],
+        {"stage": "digests", "v": 1, "labeler": model_fp, "p": pred_fp})
+    fpd2 = hashlib.sha256(
+        f"{fpd1}|triples|w={window}|v=1".encode()).hexdigest()[:16]
 
-    if stage_layout == "digests" and len(candidate_dict) > LOCAL_CANON_MAX_DICT:
-        import warnings
+    canon_pdf = canon_map_for(spark, candidate_dict)
+    canon_d = dict(zip(canon_pdf["entity_id"], canon_pdf["canonical_id"]))
+    inline_mode = "gaz" if labeler_model is None else "trained"
 
-        warnings.warn(
-            f"stage_layout='digests' needs a broadcastable dictionary "
-            f"(<= {LOCAL_CANON_MAX_DICT} rows; got {len(candidate_dict)}) — "
-            f"falling back to the 'linked' layout", stacklevel=2)
-        stage_layout = "linked"
+    def _digests(df: DataFrame) -> DataFrame:
+        return turn_digests(
+            spark, _inline_source(spark, df, labeler_model),
+            candidate_dict, predicates=pred_map,
+            canon=canon_d, inline_labeler=inline_mode,
+            model=labeler_model)
 
     run = CheckpointedRun(spark, run_dir)
-
-    if stage_layout == "digests":
-        from kgpipe.operators.canon import build_canon_map_local
-        from kgpipe.operators.relations import (
-            triples_from_digests,
-            turn_digests,
-        )
-
-        canon_pdf = build_canon_map_local(candidate_dict)
-        canon_d = dict(zip(canon_pdf["entity_id"], canon_pdf["canonical_id"]))
-        inline_mode = "gaz" if labeler_model is None else "trained"
-        # digests depend on the dictionary+canon (both derived from dpath),
-        # the predicate table (first_pred/intra matching happens inside the
-        # digest UDF) and the labeler weights — but NOT on the turn window
-        fpd1 = input_fingerprint(
-            [tpath, dpath],
-            {"stage": "digests", "v": 1, "labeler": model_fp, "p": pred_fp})
-        fpd2 = hashlib.sha256(
-            f"{fpd1}|triples|w={window}|v=1".encode()).hexdigest()[:16]
-
-        def _digests(df: DataFrame) -> DataFrame:
-            return turn_digests(
-                spark, _inline_source(spark, df, labeler_model),
-                candidate_dict, predicates=pred_map,
-                canon=canon_d, inline_labeler=inline_mode,
-                model=labeler_model)
-
-        s1 = run.stage("digests", transcripts, _digests,
-                       n_buckets=n_buckets, fingerprint=fpd1)
-        # the window partitions by conv_id, so triples are bucket-local too
-        s2 = run.stage(
-            "triples", s1.df,
-            lambda df: triples_from_digests(df, window=window, dedup=True),
-            n_buckets=n_buckets, fingerprint=fpd2)
-        canon_map = spark.createDataFrame(
-            canon_pdf, schema="entity_id string, canonical_id string")
-        run.write_metrics()
-        return {"triples": s2.df, "digests": s1.df, "canon_map": canon_map,
-                "metrics": run.metrics, "run": run}
-
-    fp1 = input_fingerprint(
-        [tpath, dpath], {"stage": "linked", "v": 1, "labeler": model_fp})
-    fp2 = hashlib.sha256(
-        f"{fp1}|raw_triples|w={window}|p={pred_fp}|v=1".encode()
-    ).hexdigest()[:16]
-    fp3 = hashlib.sha256(f"{fp2}|triples|cc={cc_algo}|v=1".encode()).hexdigest()[:16]
-
-    top1_df = dict_to_df(spark, top1_dict(candidate_dict))
-    s1 = run.stage(
-        "linked", transcripts,
-        lambda df: link_entities(
-            extract_mentions(
-                _label(spark, df, candidate_dict, labeler_model)),
-            top1_df, k=1, ranked=False),
-        n_buckets=n_buckets, fingerprint=fp1)
+    s1 = run.stage("digests", transcripts, _digests,
+                   n_buckets=n_buckets, fingerprint=fpd1)
     s2 = run.stage(
-        "raw_triples", s1.df,
-        lambda df: extract_triples(spark, df, window=window,
-                                   predicates=pred_map),
-        n_buckets=n_buckets, fingerprint=fp2)
-    canon_map = canon_map_for(spark, candidate_dict, cc_algo)
-    s3 = run.stage(
-        "triples", s2.df,
-        lambda df: canonicalize(df, canon_map),
-        n_buckets=n_buckets, fingerprint=fp3)
+        "triples", s1.df,
+        lambda df: triples_from_digests(df, window=window, dedup=True),
+        n_buckets=n_buckets, fingerprint=fpd2)
+    canon_map = spark.createDataFrame(
+        canon_pdf, schema="entity_id string, canonical_id string")
     run.write_metrics()
-    return {"triples": s3.df, "linked": s1.df, "raw_triples": s2.df,
+    return {"triples": s2.df, "digests": s1.df, "canon_map": canon_map,
             "metrics": run.metrics, "run": run}
 
 

@@ -1,11 +1,11 @@
 """Predicate phrase table: the pattern surface the relation extractor
 matches between/before linked mentions (SURVEY.md §2C step 6).
 
-This is ENGINE CONFIG, not fixture data: ``extract_triples`` /
-``incremental_triples`` accept any ``{surface phrase -> predicate id}``
-mapping (dict, pandas, DataFrame, or a parquet/CSV path via
-``load_predicates``), broadcast to executors exactly like the candidate
-dictionary. ``DEFAULT_PRED_PHRASES`` is the built-in starter table; the
+This is ENGINE CONFIG, not fixture data: ``turn_digests`` (and so every
+triple entry point, batch or streaming) accepts any ``{surface phrase ->
+predicate id}`` mapping (dict, pandas, DataFrame, or a parquet/CSV path
+via ``load_predicates``), broadcast to executors exactly like the
+candidate dictionary. ``DEFAULT_PRED_PHRASES`` is the built-in starter table; the
 test fixtures import it from here (fixtures depend on engine config, never
 the reverse — round 1 had the dependency backwards, which hard-wired the
 extractor to the fixture package).

@@ -5,18 +5,18 @@ so the engine also covers the incremental regime: event-time windowed
 aggregation with watermarks, session windows, watermark-bounded dedup, and
 a custom stateful operator (``applyInPandasWithState``) that extends the
 batch turn-window triple extraction across micro-batch boundaries — the
-conversation's recent-mention context lives in keyed state instead of a
-``Window.rangeBetween`` frame, so a conversation whose turns arrive in
-different micro-batches still yields the identical triples (parity test in
-tests/test_streaming.py).
+batch pipeline's ``lag`` over the conv_id window becomes keyed state, so a
+conversation whose turns arrive in different micro-batches still yields
+the identical triples (parity test in tests/test_streaming.py).
 
 All sources are file sources (parquet dirs) — the sandbox has no Kafka —
 but nothing below depends on the source kind; swapping
 ``spark.readStream.format('parquet')`` for ``format('kafka')`` +
 ``from_json`` is the only production delta. State-store scale notes: keyed
-state is one small record per conv_id (bounded deque of recent mentions),
-partitioned by ``conv_id`` hash — the same key the batch pipeline shuffles
-on, so skew treatment (salting upstream of the grouping) carries over.
+state is one fixed-size record per conv_id (the last mention-bearing
+turn's ``turn_idx`` and ``last_ent``), partitioned by ``conv_id`` hash —
+the same key the batch pipeline shuffles on, so skew treatment (salting
+upstream of the grouping) carries over.
 """
 
 from __future__ import annotations
@@ -29,7 +29,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from kgpipe.predicates import predicates_dict
 from kgpipe.schemas import TRANSCRIPTS
 
 EVENTS = T.StructType([
@@ -126,94 +125,57 @@ def stream_dedup(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
 
 _TRIPLE_OUT = ("subj string, pred string, obj string, conv_id string, "
                "turn_idx int, conf float")
-_STATE_SCHEMA = "turn_idxs array<int>, last_ents array<string>"
+_LAGGED = ("conv_id string, turn_idx int, "
+           "intra array<struct<subj:string,pred:string,obj:string>>, "
+           "first_ent string, first_pred string, "
+           "prev_turn int, prev_last string")
+_STATE_SCHEMA = "prev_turn int, prev_last string"
 
 
-def _make_triple_stateful_fn(pred_phrases: dict[str, str], window: int):
-    """Returns an applyInPandasWithState fn carrying, per conv_id, the last
-    linked entity of each recent turn (the batch pipeline's
-    ``Window.rangeBetween(-window, -1)`` context) across micro-batches."""
-
-    def fn(key: tuple, pdfs: Iterable[pd.DataFrame],
-           state: GroupState) -> Iterable[pd.DataFrame]:
-        (conv_id,) = key
-        if state.exists:
-            turn_idxs, last_ents = state.get
-            ctx = dict(zip(list(turn_idxs), list(last_ents)))
-        else:
-            ctx = {}
-        out_rows: list[tuple] = []
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        # stable order is explicit — never micro-batch arrival order
-        rows = rows.sort_values(["turn_idx", "span_start", "span_end"],
-                                kind="mergesort")
-        for turn_idx, grp in rows.groupby("turn_idx", sort=True):
-            text = grp["text"].iloc[0]
-            ents = list(zip(grp["span_start"], grp["span_end"],
-                            grp["entity_id"]))
-            # intra-turn: consecutive mentions with a predicate phrase between
-            for (ps, pe, pent), (cs, ce, cent) in zip(ents, ents[1:]):
-                phrase = " ".join(text[pe:cs].strip().lower().split())
-                pred = pred_phrases.get(phrase)
-                if pred:
-                    out_rows.append((pent, pred, cent, conv_id,
-                                     int(turn_idx), 1.0))
-            # cross-turn: turn opens with a predicate phrase -> subject is
-            # the most recent mention in the preceding `window` turns
-            cs, ce, cent = ents[0]
-            prefix = " ".join(text[:cs].strip().lower().split())
-            pred = pred_phrases.get(prefix)
-            if pred:
-                prior = [t for t in ctx if turn_idx - window <= t < turn_idx]
-                if prior:
-                    subj = ctx[max(prior)]
-                    out_rows.append((subj, pred, cent, conv_id,
-                                     int(turn_idx), 0.9))
-            ctx[int(turn_idx)] = ents[-1][2]
-        # keep only the turns that can still matter for future batches
-        if ctx:
-            hi = max(ctx)
-            ctx = {t: e for t, e in ctx.items() if t > hi - window - 1}
-        state.update((list(ctx.keys()), list(ctx.values())))
-        yield pd.DataFrame(out_rows, columns=[
-            "subj", "pred", "obj", "conv_id", "turn_idx", "conf"])
-
-    return fn
+def _lag_across_batches(key: tuple, pdfs: Iterable[pd.DataFrame],
+                        state: GroupState) -> Iterable[pd.DataFrame]:
+    """Attach to each digest row its conversation's previous
+    mention-bearing turn (``prev_turn``, ``prev_last``) in turn order —
+    the batch ``lag`` over the conv_id window — carrying the last row's
+    pair to the next micro-batch in state."""
+    rows = pd.concat(list(pdfs), ignore_index=True)
+    # stable order is explicit — never micro-batch arrival order
+    rows = rows.sort_values("turn_idx", kind="mergesort")
+    turns = rows["turn_idx"].tolist()
+    lasts = rows["last_ent"].tolist()
+    prev = state.get if state.exists else (None, None)
+    rows["prev_turn"] = pd.array([prev[0]] + turns[:-1], dtype="Int32")
+    rows["prev_last"] = [prev[1]] + lasts[:-1]
+    state.update((int(turns[-1]), lasts[-1]))
+    yield rows[["conv_id", "turn_idx", "intra", "first_ent", "first_pred",
+                "prev_turn", "prev_last"]]
 
 
 def incremental_triples(spark: SparkSession, transcripts_stream: DataFrame,
                         candidate_dict: pd.DataFrame,
                         window: int = 3, predicates=None) -> DataFrame:
-    """Streaming KG construction: labeler -> mentions -> broadcast linking
-    (all stateless, identical code to batch) then stateful turn-window
-    triple extraction with per-conversation keyed state.
+    """Streaming KG construction: the batch digest UDF (labeling, linking
+    and pairing inline: relations.turn_digests), a stateful lag per
+    conversation, then the batch triple rules (relations.emit_triples).
 
-    Requires conversations to arrive in turn order across micro-batches
-    (true for an append-only transcript log); within a batch order is
-    re-established explicitly.
+    Emits the batch pipeline's ``raw_triples`` (pre-canonicalization, no
+    dedup). Text never leaves the digest UDF: the shuffle into the state
+    operator moves digest rows only. Requires conversations to arrive in
+    turn order across micro-batches (true for an append-only transcript
+    log); within a batch order is re-established explicitly.
     """
-    from kgpipe.operators.labeler import label_transcripts
-    from kgpipe.operators.linker import dict_to_df, link_entities
-    from kgpipe.operators.mentions import extract_mentions
+    from kgpipe.operators.relations import emit_triples, turn_digests
 
-    labeled = label_transcripts(spark, transcripts_stream, candidate_dict)
-    mentions = extract_mentions(labeled, keep_text=True)
-    # ranking windows are unsupported on streams; k=1 linking is made
-    # window-free by deduping the broadcast dictionary (same total order as
-    # the batch path — see linker.top1_dict)
-    from kgpipe.operators.linker import top1_dict
-
-    dict_df = dict_to_df(spark, top1_dict(candidate_dict))
-    linked = link_entities(mentions, dict_df, k=1, ranked=False)
-    sel = linked.select("conv_id", "turn_idx", "span_start", "span_end",
-                        "entity_id", "text")
-    return sel.groupBy("conv_id").applyInPandasWithState(
-        _make_triple_stateful_fn(predicates_dict(predicates), window),
-        outputStructType=_TRIPLE_OUT,
+    digests = turn_digests(spark, transcripts_stream, candidate_dict,
+                           predicates, inline_labeler="gaz")
+    lagged = digests.groupBy("conv_id").applyInPandasWithState(
+        _lag_across_batches,
+        outputStructType=_LAGGED,
         stateStructType=_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
+    return emit_triples(lagged, window=window)
 
 
 # -- B32 sink half: foreachBatch + batch-id-keyed idempotent append ---------

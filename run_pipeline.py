@@ -26,7 +26,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--output", required=True, help="output dir for the triples table")
     ap.add_argument("--master", default=None, help="spark master (default local[$SPARK_GRAFT_CPUS])")
     ap.add_argument("--window", type=int, default=3, help="turn-window size for cross-turn relations")
-    ap.add_argument("--cc-algo", default="two_phase", choices=["two_phase", "minprop"])
     ap.add_argument("--eval", action="store_true",
                     help="evaluate P/R vs gold_triples.parquet in the input dir")
     ap.add_argument("--predicates", default=None,
@@ -40,16 +39,6 @@ def main(argv: list[str] | None = None) -> int:
                     help="A14 resumable mode: per-bucket lineage manifests under "
                          "this dir; re-running with the same dir resumes from "
                          "the last committed bucket")
-    ap.add_argument("--stage-layout", default="digests",
-                    choices=["linked", "digests"],
-                    help="checkpointed stage layout: 'digests' (default) "
-                         "stages the narrow fused per-turn digests — the "
-                         "single-shuffle product economics, resumable "
-                         "(9.3s vs 14.3s cold at sf0.1; auto-falls-back to "
-                         "'linked' when the dictionary exceeds the "
-                         "broadcast bound); 'linked' stages the exploded "
-                         "text-bearing mentions table for when that table "
-                         "is itself the product")
     ap.add_argument("--expire-keep-last", type=int, default=None,
                     metavar="K",
                     help="after committing, expire all but the newest K "
@@ -95,8 +84,7 @@ def main(argv: list[str] | None = None) -> int:
                     os.path.join(args.input, "candidate_dict.parquet")))
         out = run_pipeline_checkpointed(
             spark, args.input, args.checkpoint_dir, window=args.window,
-            cc_algo=args.cc_algo, predicates=predicates,
-            labeler_model=model, stage_layout=args.stage_layout)
+            predicates=predicates, labeler_model=model)
     else:
         from kgpipe.pipeline import run_from_dir
 

@@ -1,0 +1,170 @@
+"""Reference plans for the triple rules, kept as test oracles.
+
+``extract_triples`` is the window-over-exploded-mentions plan and
+``canonicalize`` the broadcast-join id rewrite plus groupBy dedup. The
+product builds every triple from turn digests
+(kgpipe/operators/relations.py); these independent plans are what the
+fused == reference gates compare it against.
+"""
+
+from __future__ import annotations
+
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from kgpipe.predicates import predicates_df
+
+
+def _norm(col):
+    return F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")
+
+
+def extract_triples(spark: SparkSession, linked: DataFrame,
+                    window: int = 3, chunk: int | None = 4096,
+                    predicates=None) -> DataFrame:
+    """linked mentions (with text col) -> raw triples.
+
+    Returns (subj, pred, obj, conv_id, turn_idx, conf). Entity ids are
+    pre-canonicalization (may include ``~v1`` variants).
+
+    ``chunk`` is the skew treatment the north rule calls "salted by
+    conv_id": a per-conversation window puts a 10^6-turn hot conversation
+    into ONE task. With ``chunk=C`` the window partitions by
+    ``(conv_id, turn_idx // C)`` — task size is bounded by C turns no
+    matter how hot the key — and the only rows that lose their lag context
+    (each chunk's first mention-row) are repaired by joining a tiny
+    per-chunk summary (last mention of the previous chunk; the repair is
+    exact because intra-turn pairs never cross a chunk boundary — chunking
+    is by turn — and the cross-turn lookback ``window`` << C).
+    ``chunk=None`` is the unchunked reference plan; equality between the
+    two is pinned by tests/test_relations_chunk.py.
+
+    Single-pass plan: ONE window (per-conversation lag over the explicit
+    total order (turn_idx, span_start, span_end)) yields both cases —
+
+    * intra-turn (prev mention in the SAME turn): the text strictly between
+      the previous mention and this one is a predicate phrase
+      -> (prev_entity, pred, entity), conf 1.0
+    * cross-turn (this row is its turn's FIRST mention): the turn's prefix
+      is a predicate phrase and the nearest preceding mention-bearing turn
+      is within `window` -> that turn's last entity becomes the subject,
+      conf 0.9 — lag(entity) at a turn's first mention IS exactly "last
+      mention of the nearest prior turn", so no groupBy/self-join is needed
+
+    ``predicates`` is any form kgpipe.predicates accepts (dict / pandas /
+    DataFrame / None for the built-in default table) — the extractor is not
+    tied to any particular phrase set.
+
+    — so the whole stage is one shuffle on conv_id plus one broadcast join,
+    replacing the previous three-branch union (two window shuffles + a
+    groupBy + a join) whose repeated subtrees also forced the caller to
+    persist `linked`. Semantics are pinned by the planted-gold e2e tests
+    and the streaming-parity test (the keyed-state op mirrors this logic).
+    """
+    preds = predicates_df(spark, predicates)
+
+    base = linked.select("conv_id", "turn_idx", "span_start", "span_end",
+                         "entity_id", "text")
+    if chunk is None:
+        w = Window.partitionBy("conv_id").orderBy(
+            "turn_idx", "span_start", "span_end")
+        m = (base
+             .withColumn("prev_turn", F.lag("turn_idx").over(w))
+             .withColumn("prev_end", F.lag("span_end").over(w))
+             .withColumn("prev_ent", F.lag("entity_id").over(w)))
+    else:
+        if window >= chunk:
+            raise ValueError("chunk must exceed the turn window")
+        base = base.withColumn(
+            "_chunk", (F.col("turn_idx") / F.lit(chunk)).cast("long"))
+        w = Window.partitionBy("conv_id", "_chunk").orderBy(
+            "turn_idx", "span_start", "span_end")
+        m = (base
+             .withColumn("prev_turn", F.lag("turn_idx").over(w))
+             .withColumn("prev_end", F.lag("span_end").over(w))
+             .withColumn("prev_ent", F.lag("entity_id").over(w)))
+        # repair each chunk's first mention-row: its true predecessor is
+        # the LAST mention of the previous chunk (one summary row per
+        # (conv, chunk) — a tiny shuffle). Only the cross-turn case can
+        # span a boundary, so prev_end needs no repair.
+        # ONE max_by over a (turn, ent) struct: taking turn and entity via
+        # two separate max_by calls could pair them from different rows on
+        # an ordering tie (unreachable today — one linked row per span —
+        # but load-bearing if upstream ever links k>1)
+        summary = (base.groupBy("conv_id", "_chunk").agg(
+            F.max_by(F.struct(F.col("turn_idx").alias("b_turn"),
+                              F.col("entity_id").alias("b_ent")),
+                     F.struct("turn_idx", "span_start", "span_end"))
+             .alias("_b"))
+            .select("conv_id",
+                    (F.col("_chunk") + 1).alias("_chunk"),
+                    F.col("_b.b_turn").alias("b_turn"),
+                    F.col("_b.b_ent").alias("b_ent")))
+        m = (m.join(summary, ["conv_id", "_chunk"], "left")
+             .withColumn("prev_turn",
+                         F.coalesce("prev_turn", "b_turn"))
+             .withColumn("prev_ent",
+                         F.coalesce("prev_ent", "b_ent"))
+             .drop("b_turn", "b_ent", "_chunk"))
+
+    intra_case = F.col("prev_turn") == F.col("turn_idx")
+    cross_case = (
+        F.col("prev_turn").isNotNull()
+        & (F.col("prev_turn") < F.col("turn_idx"))
+        & (F.col("prev_turn") >= F.col("turn_idx") - window)
+    )
+    between = F.col("text").substr(
+        F.col("prev_end") + 1, F.col("span_start") - F.col("prev_end"))
+    prefix = F.col("text").substr(F.lit(1), F.col("span_start"))
+
+    phrased = (
+        m.withColumn(
+            "phrase_norm",
+            F.when(intra_case, _norm(between))
+             .when(cross_case, _norm(prefix)))
+        .filter(F.col("phrase_norm").isNotNull())
+    )
+    return (
+        phrased.join(F.broadcast(preds),
+                     F.col("phrase_norm") == preds["phrase"], "inner")
+        .select(
+            F.col("prev_ent").alias("subj"),
+            F.col("pred"),
+            F.col("entity_id").alias("obj"),
+            "conv_id",
+            "turn_idx",
+            F.when(intra_case, F.lit(1.0)).otherwise(F.lit(0.9))
+             .cast("float").alias("conf"),
+        )
+    )
+
+
+def canonicalize(raw_triples: DataFrame, canon_map: DataFrame) -> DataFrame:
+    """Rewrite subj/obj onto canonical ids and dedup (SURVEY.md A12).
+
+    canon_map is tiny (derived from the dictionary) -> broadcast both joins;
+    the triples side never shuffles for this stage.
+    """
+    cm = F.broadcast(canon_map)
+    t = (
+        raw_triples.join(cm.withColumnRenamed("entity_id", "subj")
+                         .withColumnRenamed("canonical_id", "subj_canon"),
+                         "subj", "left")
+        .join(cm.withColumnRenamed("entity_id", "obj")
+              .withColumnRenamed("canonical_id", "obj_canon"),
+              "obj", "left")
+        .select(
+            F.coalesce("subj_canon", "subj").alias("subj"),
+            "pred",
+            F.coalesce("obj_canon", "obj").alias("obj"),
+            "conv_id",
+            "turn_idx",
+            "conf",
+        )
+    )
+    # groupBy + max(conf), NOT dropDuplicates: when the same triple arises
+    # both intra-turn (conf 1.0) and cross-turn (conf 0.9), dropDuplicates
+    # keeps a plan-dependent arbitrary row; max is deterministic across
+    # partitionings and matches the fused path's per-turn dedup rule.
+    return t.groupBy("subj", "pred", "obj", "conv_id", "turn_idx").agg(
+        F.max("conf").alias("conf"))

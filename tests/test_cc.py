@@ -1,5 +1,6 @@
 """Connected components on known graphs (SURVEY.md §5.2): chain, star,
-two components, self-loop — both algorithms must agree with ground truth."""
+two components, self-loop, empty — two_phase must agree with ground
+truth."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -16,25 +17,22 @@ GRAPHS = {
     "self_loop": ([("a", "a"), ("a", "b")], {"b": "a"}),
     "triangle_plus_edge": ([("m", "n"), ("n", "o"), ("m", "o"), ("o", "p")],
                            {"n": "m", "o": "m", "p": "m"}),
+    "empty": ([], {}),
 }
 
 
-@pytest.mark.parametrize("algo", ["two_phase", "minprop"])
-@pytest.mark.parametrize("name", sorted(GRAPHS))
-def test_cc(spark, algo, name):
+# the id suffix names the algorithm under test (two_phase, the one
+# connected-components implementation)
+@pytest.mark.parametrize("name", sorted(GRAPHS),
+                         ids=lambda name: f"{name}-two_phase")
+def test_cc(spark, name):
     edges, want = GRAPHS[name]
     df = spark.createDataFrame(edges, "src string, dst string")
     got = {
         r["entity_id"]: r["canonical_id"]
-        for r in connected_components(df, algo=algo).collect()
+        for r in connected_components(df).collect()
     }
-    assert got == want, f"{algo}/{name}: {got} != {want}"
-
-
-@pytest.mark.parametrize("algo", ["two_phase", "minprop"])
-def test_cc_empty(spark, algo):
-    df = spark.createDataFrame([], "src string, dst string")
-    assert connected_components(df, algo=algo).count() == 0
+    assert got == want, f"{name}: {got} != {want}"
 
 
 def test_cc_long_chain_converges(spark):
@@ -43,7 +41,7 @@ def test_cc_long_chain_converges(spark):
     nodes = [f"n{i:03d}" for i in range(40)]
     edges = list(zip(nodes, nodes[1:]))
     df = spark.createDataFrame(edges, "src string, dst string")
-    got = connected_components(df, algo="two_phase", max_iter=15)
+    got = connected_components(df, max_iter=15)
     assert got.filter(F.col("canonical_id") != "n000").count() == 0
     assert got.count() == 39
 
@@ -125,12 +123,12 @@ def test_similarity_block_cap_bounds_adversarial_block(spark):
 
 
 def test_cc_algos_agree_on_random_graphs(spark):
-    """Property gate over RANDOM graphs: two_phase (large/small star) and
-    minprop must both equal a plain Python union-find ground truth —
-    across dense blobs, long chains, forests of stars and lone edges.
-    Hypothesis is overkill here (each example costs Spark jobs); seeded
-    draws cover the shapes deterministically (4 trials x 2 algos keeps
-    the iterative-CC driver-round latency within suite budget)."""
+    """Property gate over RANDOM graphs: two_phase (large/small star) must
+    agree with a plain Python union-find ground truth — across dense
+    blobs, long chains, forests of stars and lone edges. Hypothesis is
+    overkill here (each example costs Spark jobs); seeded draws cover the
+    shapes deterministically (4 trials keep the iterative-CC driver-round
+    latency within suite budget)."""
     import random
 
     def truth(edges):
@@ -172,8 +170,6 @@ def test_cc_algos_agree_on_random_graphs(spark):
             hub, *spokes = nodes[n // 2:] or ["h"]
             edges += [(hub, s) for s in spokes]
         df = spark.createDataFrame(edges, "src string, dst string")
-        want = truth(edges)
-        for algo in ("two_phase", "minprop"):
-            got = {r["entity_id"]: r["canonical_id"]
-                   for r in connected_components(df, algo=algo).collect()}
-            assert got == want, (trial, algo)
+        got = {r["entity_id"]: r["canonical_id"]
+               for r in connected_components(df).collect()}
+        assert got == truth(edges), trial

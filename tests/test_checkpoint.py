@@ -29,17 +29,22 @@ def plain_triples(spark, fixture_dir):
 
 
 def test_checkpointed_equals_plain(spark, fixture_dir, plain_triples, tmp_path_factory):
+    """The checkpointed run stages the narrow per-turn digests, then the
+    triples; output equals the plain run exactly."""
     run_dir = str(tmp_path_factory.mktemp("ckpt-full"))
-    out = run_pipeline_checkpointed(spark, fixture_dir, run_dir,
-                                    stage_layout="linked")
+    out = run_pipeline_checkpointed(spark, fixture_dir, run_dir)
     assert _triple_set(out["triples"]) == plain_triples
     # lineage manifests exist per stage with per-bucket rows
-    for stage in ("linked", "raw_triples", "triples"):
+    for stage in ("digests", "triples"):
         mpath = os.path.join(run_dir, stage, "manifest.jsonl")
         rows = [json.loads(line) for line in open(mpath)]
         assert {r["bucket"] for r in rows} == set(range(32))
         assert all(r["status"] == "done" and "rows_out" in r for r in rows)
     assert os.path.exists(os.path.join(run_dir, "metrics.json"))
+    # the durable digest rows are NARROW: no text column is staged
+    assert set(out["digests"].columns) == {
+        "conv_id", "turn_idx", "intra", "first_ent", "first_pred",
+        "last_ent"}
 
 
 def test_resume_skips_completed_buckets(spark, fixture_dir, plain_triples, tmp_path_factory):
@@ -58,23 +63,20 @@ def test_crash_mid_stage_resumes_only_missing(spark, fixture_dir, plain_triples,
     last 10 manifest rows (data dirs stay on disk, as after a real kill).
     Resume must recompute exactly those buckets and produce equal triples."""
     run_dir = str(tmp_path_factory.mktemp("ckpt-crash"))
-    run_pipeline_checkpointed(spark, fixture_dir, run_dir,
-                              stage_layout="linked")
+    run_pipeline_checkpointed(spark, fixture_dir, run_dir)
 
-    mpath = os.path.join(run_dir, "linked", "manifest.jsonl")
+    mpath = os.path.join(run_dir, "digests", "manifest.jsonl")
     rows = [json.loads(line) for line in open(mpath)]
     dropped = {r["bucket"] for r in rows[-10:]}
     with open(mpath, "w") as f:
         for r in rows[:-10]:
             f.write(json.dumps(r) + "\n")
-    # downstream stages also "not yet run" in the crash scenario
+    # the downstream stage is also "not yet run" in the crash scenario
     import shutil
-    shutil.rmtree(os.path.join(run_dir, "raw_triples"))
     shutil.rmtree(os.path.join(run_dir, "triples"))
 
-    out = run_pipeline_checkpointed(spark, fixture_dir, run_dir,
-                                    stage_layout="linked")
-    m = out["metrics"]["linked"]
+    out = run_pipeline_checkpointed(spark, fixture_dir, run_dir)
+    m = out["metrics"]["digests"]
     assert m["buckets_computed"] == len(dropped)
     assert m["buckets_skipped"] == 32 - len(dropped)
     assert _triple_set(out["triples"]) == plain_triples
@@ -86,8 +88,7 @@ def test_changed_input_invalidates(spark, fixture_dir, tmp_path_factory, tmp_pat
     import shutil
 
     run_dir = str(tmp_path_factory.mktemp("ckpt-inval"))
-    run_pipeline_checkpointed(spark, fixture_dir, run_dir,
-                              stage_layout="linked")
+    run_pipeline_checkpointed(spark, fixture_dir, run_dir)
 
     # shrink the input: copy fixture, truncate transcripts to 40 convs
     alt = tmp_path / "alt_fixture"
@@ -99,11 +100,10 @@ def test_changed_input_invalidates(spark, fixture_dir, tmp_path_factory, tmp_pat
         os.path.join(alt, "transcripts.parquet"), index=False,
         coerce_timestamps="us", allow_truncated_timestamps=True)
 
-    out = run_pipeline_checkpointed(spark, str(alt), run_dir,
-                                    stage_layout="linked")
+    out = run_pipeline_checkpointed(spark, str(alt), run_dir)
     got = out["triples"].select("conv_id").distinct().collect()
     assert {r.conv_id for r in got} <= set(keep)
-    m = out["metrics"]["linked"]
+    m = out["metrics"]["digests"]
     assert m["buckets_computed"] == 32  # full invalidation, nothing stale
 
 
@@ -137,7 +137,7 @@ def test_checkpointed_trained_labeler_and_model_invalidation(
         spark, fixture_dir, tmp_path_factory):
     """--trained-labeler must work through the checkpointed path (round-2
     review: the flag was silently ignored with --checkpoint-dir), and a
-    different labeler model must invalidate the linked checkpoint."""
+    different labeler model must invalidate the digests checkpoint."""
     import pandas as pd
 
     from kgpipe.operators.evaluate import evaluate_triples
@@ -149,17 +149,15 @@ def test_checkpointed_trained_labeler_and_model_invalidation(
         cd)
     run_dir = str(tmp_path_factory.mktemp("ckpt-trained"))
     out = run_pipeline_checkpointed(
-        spark, fixture_dir, run_dir, labeler_model=model,
-        stage_layout="linked")
+        spark, fixture_dir, run_dir, labeler_model=model)
     gold = spark.read.parquet(
         os.path.join(fixture_dir, "gold_triples.parquet"))
     m = evaluate_triples(out["triples"], gold)
     assert m["precision"] >= 0.95 and m["recall"] >= 0.95, m
     # switching to the gazetteer labeler must NOT reuse the trained-model
-    # checkpoint: the linked stage recomputes under a different fingerprint
-    out2 = run_pipeline_checkpointed(spark, fixture_dir, run_dir,
-                                     stage_layout="linked")
-    assert out2["run"].metrics["linked"]["buckets_computed"] > 0
+    # checkpoint: the digests stage recomputes under a different fingerprint
+    out2 = run_pipeline_checkpointed(spark, fixture_dir, run_dir)
+    assert out2["run"].metrics["digests"]["buckets_computed"] > 0
 
 
 def test_lost_checkpoint_data_fails_loudly(spark, fixture_dir,
@@ -171,12 +169,10 @@ def test_lost_checkpoint_data_fails_loudly(spark, fixture_dir,
     import pytest as _pytest
 
     run_dir = str(tmp_path_factory.mktemp("ckpt-lost"))
-    run_pipeline_checkpointed(spark, fixture_dir, run_dir,
-                              stage_layout="linked")
-    shutil.rmtree(os.path.join(run_dir, "linked", "data"))
+    run_pipeline_checkpointed(spark, fixture_dir, run_dir)
+    shutil.rmtree(os.path.join(run_dir, "digests", "data"))
     with _pytest.raises(RuntimeError, match="deleted or modified"):
-        run_pipeline_checkpointed(spark, fixture_dir, run_dir,
-                                  stage_layout="linked")
+        run_pipeline_checkpointed(spark, fixture_dir, run_dir)
 
 
 def test_single_lost_bucket_fails_loudly(spark, fixture_dir,
@@ -190,15 +186,13 @@ def test_single_lost_bucket_fails_loudly(spark, fixture_dir,
     import pytest as _pytest
 
     run_dir = str(tmp_path_factory.mktemp("ckpt-lost-bucket"))
-    run_pipeline_checkpointed(spark, fixture_dir, run_dir,
-                              stage_layout="linked")
+    run_pipeline_checkpointed(spark, fixture_dir, run_dir)
     bdirs = sorted(glob.glob(
-        os.path.join(run_dir, "linked", "data", "_ckpt_bucket=*")))
+        os.path.join(run_dir, "digests", "data", "_ckpt_bucket=*")))
     assert len(bdirs) > 1
     shutil.rmtree(bdirs[0])
     with _pytest.raises(RuntimeError, match="deleted or modified"):
-        run_pipeline_checkpointed(spark, fixture_dir, run_dir,
-                                  stage_layout="linked")
+        run_pipeline_checkpointed(spark, fixture_dir, run_dir)
 
 
 def test_missing_schema_on_all_empty_stage_is_clear_error(
@@ -222,83 +216,85 @@ def test_missing_schema_on_all_empty_stage_is_clear_error(
                    n_buckets=2, fingerprint="fp1")
 
 
-# -- digest stage layout ----------------------------------------------------
-
-
-def test_digest_layout_equals_plain(spark, fixture_dir, plain_triples,
-                                    tmp_path_factory):
-    """stage_layout='digests' stages the narrow fused per-turn digests
-    instead of the text-bearing linked table; triples must equal the plain
-    run exactly, with per-bucket manifests for both stages."""
-    run_dir = str(tmp_path_factory.mktemp("ckpt-digests"))
-    out = run_pipeline_checkpointed(
-        spark, fixture_dir, run_dir, stage_layout="digests")
-    assert _triple_set(out["triples"]) == plain_triples
-    for stage in ("digests", "triples"):
-        mpath = os.path.join(run_dir, stage, "manifest.jsonl")
-        rows = [json.loads(line) for line in open(mpath)]
-        assert {r["bucket"] for r in rows} == set(range(32))
-    # the durable digest rows are NARROW: no text column is staged
-    assert "text" not in out["digests"].columns
-    assert set(out["digests"].columns) == {
-        "conv_id", "turn_idx", "intra", "first_ent", "first_pred",
-        "last_ent"}
-
-
 def test_digest_layout_crash_resume(spark, fixture_dir, plain_triples,
                                     tmp_path_factory):
-    """Crash after part of the digests stage committed: resume recomputes
-    exactly the missing buckets and the final triples are identical."""
+    """Crash after part of the SECOND stage committed: resume skips every
+    digests bucket, recomputes exactly the missing triples buckets, and
+    the final triples are identical."""
     run_dir = str(tmp_path_factory.mktemp("ckpt-digests-crash"))
-    run_pipeline_checkpointed(
-        spark, fixture_dir, run_dir, stage_layout="digests")
+    run_pipeline_checkpointed(spark, fixture_dir, run_dir)
 
-    mpath = os.path.join(run_dir, "digests", "manifest.jsonl")
+    mpath = os.path.join(run_dir, "triples", "manifest.jsonl")
     rows = [json.loads(line) for line in open(mpath)]
     dropped = {r["bucket"] for r in rows[-10:]}
     with open(mpath, "w") as f:
         for r in rows[:-10]:
             f.write(json.dumps(r) + "\n")
-    import shutil
-    shutil.rmtree(os.path.join(run_dir, "triples"))
 
-    out = run_pipeline_checkpointed(
-        spark, fixture_dir, run_dir, stage_layout="digests")
-    m = out["metrics"]["digests"]
+    out = run_pipeline_checkpointed(spark, fixture_dir, run_dir)
+    assert out["metrics"]["digests"]["buckets_computed"] == 0
+    m = out["metrics"]["triples"]
     assert m["buckets_computed"] == len(dropped)
     assert m["buckets_skipped"] == 32 - len(dropped)
     assert _triple_set(out["triples"]) == plain_triples
 
 
+def test_digest_layout_equals_plain(spark, fixture_dir, tmp_path_factory,
+                                    monkeypatch):
+    """The digests layout serves dictionaries above LOCAL_CANON_MAX_DICT
+    too (distributed canon map): same triples as the plain run, conf
+    included, no fallback warning, and the staged plans keep the product
+    shape — one ArrowEvalPython in the digests stage, one Exchange (the
+    conv_id window) in the triples stage."""
+    import re
+    import warnings
+
+    import kgpipe.operators.relations as relations
+    import kgpipe.pipeline as pipeline
+
+    def full_set(df):
+        return sorted(map(tuple, df.select(
+            "subj", "pred", "obj", "conv_id", "turn_idx", "conf").collect()))
+
+    want = full_set(run_from_dir(spark, fixture_dir)["triples"])
+
+    plans = {}
+    for name in ("turn_digests", "triples_from_digests"):
+        def record(*a, _name=name, _real=getattr(relations, name), **k):
+            plans[_name] = df = _real(*a, **k)
+            return df
+        monkeypatch.setattr(relations, name, record)
+    monkeypatch.setattr(pipeline, "LOCAL_CANON_MAX_DICT", 0)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        out = run_pipeline_checkpointed(
+            spark, fixture_dir, str(tmp_path_factory.mktemp("ckpt-cap")))
+    assert not [w for w in caught if w.category is UserWarning], caught
+    assert full_set(out["triples"]) == want and want
+    assert out["canon_map"].count() > 0
+
+    def count(df, node):
+        p = df._jdf.queryExecution().executedPlan().toString()
+        return len(re.findall(node, p))
+
+    d, t = plans["turn_digests"], plans["triples_from_digests"]
+    assert (count(d, "ArrowEvalPython"), count(d, r"\bExchange ")) == (1, 0)
+    assert (count(t, "ArrowEvalPython"), count(t, r"\bExchange ")) == (0, 1)
+
+
 def test_digest_layout_resume_skips_everything(spark, fixture_dir,
-                                               plain_triples,
                                                tmp_path_factory):
+    """The digests fingerprint excludes the turn window: a window change
+    reuses every digests bucket and recomputes only the triples stage,
+    and a rerun under the new window then skips everything."""
     run_dir = str(tmp_path_factory.mktemp("ckpt-digests-skip"))
-    run_pipeline_checkpointed(
-        spark, fixture_dir, run_dir, stage_layout="digests")
-    out2 = run_pipeline_checkpointed(
-        spark, fixture_dir, run_dir, stage_layout="digests")
+    run_pipeline_checkpointed(spark, fixture_dir, run_dir)
+    out = run_pipeline_checkpointed(spark, fixture_dir, run_dir, window=2)
+    assert out["metrics"]["digests"]["buckets_computed"] == 0
+    assert out["metrics"]["triples"]["buckets_skipped"] == 0
+    want = _triple_set(run_from_dir(spark, fixture_dir, window=2)["triples"])
+    assert _triple_set(out["triples"]) == want
+    out2 = run_pipeline_checkpointed(spark, fixture_dir, run_dir, window=2)
     for stage, m in out2["metrics"].items():
         assert m["buckets_computed"] == 0, (stage, m)
-    assert _triple_set(out2["triples"]) == plain_triples
-
-
-def test_default_layout_is_digests(spark, fixture_dir, plain_triples,
-                                   tmp_path_factory):
-    """The product default follows the product economics: calling
-    run_pipeline_checkpointed (and the CLI) without --stage-layout stages
-    the narrow digests, not the text-bearing linked table."""
-    import inspect
-
-    run_dir = str(tmp_path_factory.mktemp("ckpt-default"))
-    out = run_pipeline_checkpointed(spark, fixture_dir, run_dir)
-    assert _triple_set(out["triples"]) == plain_triples
-    assert os.path.exists(os.path.join(run_dir, "digests", "manifest.jsonl"))
-    assert not os.path.exists(os.path.join(run_dir, "linked"))
-
-    # the library default and the CLI default must agree
-    sig = inspect.signature(run_pipeline_checkpointed)
-    assert sig.parameters["stage_layout"].default == "digests"
-    import run_pipeline as cli
-    cli_src = inspect.getsource(cli.main)
-    assert '"--stage-layout", default="digests"' in cli_src
+    assert _triple_set(out2["triples"]) == want

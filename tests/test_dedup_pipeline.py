@@ -360,3 +360,71 @@ def test_lock_contention_falls_back_to_private_dir(spark, monkeypatch,
 
     with dp.locked_run_dir(spark, paths, fps) as rd2:
         assert rd2 == str(shared)
+
+
+def test_private_dir_use_refreshes_mtime_against_age_sweep(
+        spark, monkeypatch, tmp_path):
+    """Nested stage writes never touch a dir's top-level mtime, so a live
+    session whose private fallback dir was created long ago must stay safe
+    from the age sweep: every locked_run_dir use marks the dir live."""
+    import tempfile
+    import time
+
+    import kgpipe.dedup_pipeline as dp
+
+    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
+    monkeypatch.setattr(dp, "shared_run_dir", lambda paths, fp=None: None)
+    paths = [os.path.join(SF_DIR, "documents.parquet")]
+    fps = dp.stage_fingerprints(paths, corpus=dp.DUP_CORPUS_TAG)
+    old = time.time() - 2 * dp.PRIVATE_DIR_MAX_AGE_S
+
+    with dp.locked_run_dir(spark, paths, fps) as rd:
+        assert "private" in rd
+        os.makedirs(os.path.join(rd, "sigs"))  # a nested stage write
+    os.utime(rd, (old, old))
+    crashed = tmp_path / "kgpipe-dedup-private-crashed"  # a dead session
+    crashed.mkdir()
+    os.utime(crashed, (old, old))
+
+    with dp.locked_run_dir(spark, paths, fps) as rd2:
+        assert rd2 == rd
+        assert os.path.isdir(os.path.join(rd, "sigs"))  # survived the sweep
+        assert os.path.getmtime(rd) > old + dp.PRIVATE_DIR_MAX_AGE_S
+    assert not crashed.exists()
+
+
+def test_superseded_shared_dirs_swept_only_when_unlocked(
+        spark, monkeypatch, tmp_path):
+    """Shared fingerprint dirs stranded by a changed input or version bump
+    are removed once unused for PRIVATE_DIR_MAX_AGE_S — but only when
+    their .lock can be taken: a live holder's dir is never touched, and
+    neither are recent dirs or the dir in use."""
+    import fcntl
+    import tempfile
+    import time
+
+    import kgpipe.dedup_pipeline as dp
+
+    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
+    paths = [os.path.join(SF_DIR, "documents.parquet")]
+    fps = dp.stage_fingerprints(paths, corpus=dp.DUP_CORPUS_TAG)
+    root = os.path.dirname(dp.shared_run_dir(paths))
+    old = time.time() - 2 * dp.PRIVATE_DIR_MAX_AGE_S
+
+    def stage_dir(name, age):
+        d = os.path.join(root, name)
+        os.makedirs(os.path.join(d, "sigs"))
+        open(os.path.join(d, ".lock"), "w").close()
+        os.utime(d, (age, age))
+        return d
+
+    stale = stage_dir("stale", old)
+    live = stage_dir("live", old)
+    recent = stage_dir("recent", time.time())
+    with open(os.path.join(live, ".lock"), "w") as holder:
+        fcntl.flock(holder, fcntl.LOCK_EX)
+        with dp.locked_run_dir(spark, paths, fps) as rd:
+            assert os.path.dirname(rd) == root and os.path.isdir(rd)
+    assert not os.path.exists(stale)
+    assert os.path.isdir(os.path.join(live, "sigs"))
+    assert os.path.isdir(os.path.join(recent, "sigs"))

@@ -121,9 +121,8 @@ _ALL_OUTPUTS = {"labeled", "mentions", "linked", "raw_triples", "canon_map",
                 "triples"}
 
 
-@pytest.mark.parametrize("extractor", ["fused", "exploded"])
 def test_run_pipeline_plans_only_the_product(spark, unit_fixture_dir,
-                                             monkeypatch, extractor):
+                                             monkeypatch):
     """run_pipeline plans ``triples`` alone — one gazetteer build — and
     every side output is still built (once) on first read."""
     import pandas as pd
@@ -138,11 +137,9 @@ def test_run_pipeline_plans_only_the_product(spark, unit_fixture_dir,
     tr = read_transcripts(spark, f"{unit_fixture_dir}/transcripts.parquet")
     cd = pd.read_parquet(f"{unit_fixture_dir}/candidate_dict.parquet")
 
-    out = run_pipeline(spark, tr, cd, extractor=extractor)
+    out = run_pipeline(spark, tr, cd)
     assert len(calls) == 1
-    # the exploded triples plan reads the stages it depends on
-    assert set(out) == ({"triples"} if extractor == "fused"
-                        else _ALL_OUTPUTS)
+    assert set(out) == {"triples"}
     for k in sorted(_ALL_OUTPUTS):
         assert out[k].columns and out[k] is out[k], k
     assert set(out) == _ALL_OUTPUTS
@@ -151,6 +148,37 @@ def test_run_pipeline_plans_only_the_product(spark, unit_fixture_dir,
         out["nope"]
     out["gold"] = out["triples"]  # plain assignment still works
     assert out["gold"] is out["triples"]
+
+
+def test_over_cap_dictionary_keeps_product_plan(spark, unit_fixture_dir,
+                                                monkeypatch):
+    """Above LOCAL_CANON_MAX_DICT the canon map comes from the distributed
+    similarity join + CC, but the product plan is unchanged: same triples
+    (conf included) as the default run, one Exchange, one ArrowEvalPython,
+    and no warning."""
+    import re
+    import warnings
+
+    import pandas as pd
+
+    import kgpipe.pipeline as pipeline
+
+    tr = read_transcripts(spark, f"{unit_fixture_dir}/transcripts.parquet")
+    cd = pd.read_parquet(f"{unit_fixture_dir}/candidate_dict.parquet")
+    cols = ["subj", "pred", "obj", "conv_id", "turn_idx", "conf"]
+
+    want = sorted(map(tuple, pipeline.run_pipeline(spark, tr, cd)["triples"]
+                      .select(*cols).collect()))
+    monkeypatch.setattr(pipeline, "LOCAL_CANON_MAX_DICT", 0)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        out = pipeline.run_pipeline(spark, tr, cd)
+    assert not [w for w in caught if w.category is UserWarning], caught
+    got = sorted(map(tuple, out["triples"].select(*cols).collect()))
+    assert got == want and want
+    p = out["triples"]._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"\bExchange ", p)) == 1, p[:1200]
+    assert len(re.findall(r"ArrowEvalPython", p)) == 1, p[:1200]
 
 
 def test_locate_transcripts_names_probed_files(tmp_path):

@@ -76,17 +76,29 @@ def test_whole_stage_codegen_covers_relational_ops(spark):
     assert "*(" in p, p[:800]
 
 
+def _text_exchanges(df) -> tuple[int, int]:
+    """(all, text-carrying) Exchange nodes of ``df``'s formatted plan."""
+    import io
+    import re
+    from contextlib import redirect_stdout
+
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    blocks = [b for b in re.split(r"\n\(\d+\) ", buf.getvalue())
+              if b.split("\n")[0].startswith("Exchange")]
+    return len(blocks), sum(1 for b in blocks if re.search(r"\btext#", b))
+
+
 def test_fused_triples_shuffle_no_text(spark):
     """The fused extractor's whole point: no Exchange in the triples plan
     may carry the text column (the exploded reference plan has exactly
     that text-bearing exchange — asserted as the negative control so this
     test keeps discriminating if plan formatting changes)."""
-    import io
     import os
-    import re
-    from contextlib import redirect_stdout
 
     import pandas as pd
+    from reference_plans import extract_triples
 
     from kgpipe.fixtures.generator import materialize
     from kgpipe.pipeline import read_transcripts, run_pipeline
@@ -94,19 +106,32 @@ def test_fused_triples_shuffle_no_text(spark):
     fx = materialize("unit")
     t = read_transcripts(spark, os.path.join(fx, "transcripts.parquet"))
     cd = pd.read_parquet(os.path.join(fx, "candidate_dict.parquet"))
+    out = run_pipeline(spark, t, cd)
+    assert _text_exchanges(out["triples"])[1] == 0
+    # negative control
+    assert _text_exchanges(extract_triples(spark, out["linked"]))[1] >= 1
 
-    def text_exchanges(mode: str) -> int:
-        out = run_pipeline(spark, t, cd, extractor=mode)
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            out["triples"].explain("formatted")
-        blocks = re.split(r"\n\(\d+\) ", buf.getvalue())
-        return sum(1 for b in blocks
-                   if b.split("\n")[0].startswith("Exchange")
-                   and re.search(r"\btext#", b))
 
-    assert text_exchanges("fused") == 0
-    assert text_exchanges("exploded") >= 1  # negative control
+def test_stream_triples_shuffle_no_text(spark, tmp_path):
+    """The streaming extractor shuffles digest rows into its state
+    operator, never the turn text: the digest UDF runs before the conv_id
+    exchange, exactly as in the batch plan."""
+    import os
+
+    import pandas as pd
+
+    from kgpipe.fixtures.generator import materialize
+    from kgpipe.streaming import incremental_triples, read_transcripts_stream
+
+    fx = materialize("unit")
+    d = str(tmp_path / "stream_in")
+    os.makedirs(d)
+    pd.read_parquet(os.path.join(fx, "transcripts.parquet")).head(50) \
+        .to_parquet(os.path.join(d, "a.parquet"), index=False,
+                    coerce_timestamps="us", allow_truncated_timestamps=True)
+    cd = pd.read_parquet(os.path.join(fx, "candidate_dict.parquet"))
+    df = incremental_triples(spark, read_transcripts_stream(spark, d), cd)
+    assert _text_exchanges(df) == (1, 0)
 
 
 def test_fused_triples_single_corpus_pass(spark):
@@ -128,7 +153,7 @@ def test_fused_triples_single_corpus_pass(spark):
     fx = materialize("unit")
     t = read_transcripts(spark, os.path.join(fx, "transcripts.parquet"))
     cd = pd.read_parquet(os.path.join(fx, "candidate_dict.parquet"))
-    out = run_pipeline(spark, t, cd, extractor="fused")
+    out = run_pipeline(spark, t, cd)
     p = out["triples"]._jdf.queryExecution().executedPlan().toString()
     assert p.count("transcripts.parquet") == 1, p[:1200]
     # ... and the ONLY shuffle is the narrow digest window: with the canon
@@ -163,7 +188,7 @@ def test_labeler_udf_executes_once_in_mention_plans(spark):
     fx = materialize("unit")
     t = read_transcripts(spark, os.path.join(fx, "transcripts.parquet"))
     cd = pd.read_parquet(os.path.join(fx, "candidate_dict.parquet"))
-    out = run_pipeline(spark, t, cd, extractor="fused")
+    out = run_pipeline(spark, t, cd)
     for name in ("mentions", "linked"):
         p = out[name]._jdf.queryExecution().executedPlan().toString()
         assert p.count("transcripts.parquet") == 1, (name, p[:900])

@@ -7,7 +7,7 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
-from kgpipe.operators.relations import extract_triples
+from kgpipe.operators.relations import extract_triples_fused
 from kgpipe.predicates import (
     DEFAULT_PRED_PHRASES,
     load_predicates,
@@ -17,40 +17,52 @@ from kgpipe.predicates import (
 
 
 @pytest.fixture()
-def custom_linked(spark):
-    """Hand-built linked mentions whose connective phrase ('leads') is NOT
-    in the default predicate table."""
-    rows = [
+def custom_labeled(spark):
+    """Hand-built labeled turns (spans given, as in test_relations_fused's
+    edge corpus) whose connective phrase ('leads') is NOT in the default
+    predicate table, plus the dictionary that links them."""
+    from kgpipe.schemas import TRANSCRIPTS
+
+    turns = [
         # intra-turn: "Alice leads Platform" — spans at [0,5) and [12,20)
-        ("c1", 0, 0, 5, "ent:alice", "Alice leads Platform"),
-        ("c1", 0, 12, 20, "ent:platform", "Alice leads Platform"),
+        ("c1", 0, "Alice leads Platform", [(0, 5, "PER"), (12, 20, "ORG")]),
         # cross-turn: turn 1 opens with "leads " then a mention
-        ("c1", 1, 6, 11, "ent:squad", "leads Squad"),
+        ("c1", 1, "leads Squad", [(6, 11, "ORG")]),
     ]
-    return spark.createDataFrame(
-        rows,
-        "conv_id string, turn_idx int, span_start int, span_end int, "
-        "entity_id string, text string",
-    )
+    t = spark.createDataFrame(
+        [(c, i, "user", text, None, None) for c, i, text, _ in turns],
+        schema=TRANSCRIPTS)
+    sp = spark.createDataFrame(
+        [(c, i, [{"start": a, "end": b, "ent_type": ty, "score": 1.0}
+                 for a, b, ty in spans]) for c, i, _, spans in turns],
+        schema="conv_id string, turn_idx int, spans array<struct<"
+               "start:int,end:int,ent_type:string,score:float>>")
+    cd = pd.DataFrame({
+        "alias": ["alice", "platform", "squad"],
+        "entity_id": ["ent:alice", "ent:platform", "ent:squad"],
+        "prior": [1.0] * 3,
+        "ent_class": ["PER", "ORG", "ORG"],
+    })
+    return t.join(sp, ["conv_id", "turn_idx"]), cd
 
 
-def test_custom_predicates_extract(spark, custom_linked):
+def test_custom_predicates_extract(spark, custom_labeled):
+    labeled, cd = custom_labeled
     custom = {"leads": "leads_team"}
     got = {
         (r.subj, r.pred, r.obj)
-        for r in extract_triples(
-            spark, custom_linked, window=3, predicates=custom
+        for r in extract_triples_fused(
+            spark, labeled, cd, window=3, predicates=custom
         ).collect()
     }
     assert ("ent:alice", "leads_team", "ent:platform") in got
     assert ("ent:platform", "leads_team", "ent:squad") in got
 
 
-def test_default_predicates_miss_custom_phrase(spark, custom_linked):
+def test_default_predicates_miss_custom_phrase(spark, custom_labeled):
     # with the default table, 'leads' matches nothing
-    assert (
-        extract_triples(spark, custom_linked, window=3).count() == 0
-    )
+    labeled, cd = custom_labeled
+    assert extract_triples_fused(spark, labeled, cd, window=3).count() == 0
 
 
 def test_operators_no_longer_import_fixtures():

@@ -165,10 +165,9 @@ def _random_corpus(draw):
 def test_fused_equals_exploded_on_random_corpora(spark, corpus):
     from kgpipe.operators.linker import dict_to_df, link_entities, top1_dict
     from kgpipe.operators.mentions import extract_mentions
-    from kgpipe.operators.relations import (
-        extract_triples,
-        extract_triples_fused,
-    )
+    from reference_plans import extract_triples
+
+    from kgpipe.operators.relations import extract_triples_fused
     from kgpipe.schemas import TRANSCRIPTS
 
     t_rows, s_rows = corpus

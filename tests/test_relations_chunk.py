@@ -1,6 +1,7 @@
-"""Chunked (skew-bounded) turn-window extraction must equal the unchunked
-reference plan — chunk boundaries are exercised hard with chunk=4 over the
-unit fixture (avg ~10 turns/conv, hot conv much longer)."""
+"""The exploded reference plan (tests/reference_plans.py), chunked for
+skew, must equal its unchunked form — chunk boundaries are exercised hard
+with chunk=4 over the unit fixture (avg ~10 turns/conv, hot conv much
+longer). The product's chunking is pinned in test_relations_fused.py."""
 
 from __future__ import annotations
 
@@ -8,11 +9,12 @@ import os
 
 import pandas as pd
 import pytest
+from reference_plans import extract_triples
 
 from kgpipe.operators.labeler import label_transcripts
 from kgpipe.operators.linker import dict_to_df, link_entities, top1_dict
 from kgpipe.operators.mentions import extract_mentions
-from kgpipe.operators.relations import extract_triples
+from kgpipe.operators.relations import triples_from_digests
 from kgpipe.pipeline import read_transcripts
 
 
@@ -54,6 +56,10 @@ def test_chunk_bounds_hot_conversation(spark, linked):
     assert n_chunks > 1
 
 
-def test_window_must_be_smaller_than_chunk(spark, linked):
+def test_window_must_be_smaller_than_chunk(spark):
+    digests = spark.createDataFrame(
+        [], "conv_id string, turn_idx int, "
+            "intra array<struct<subj:string,pred:string,obj:string>>, "
+            "first_ent string, first_pred string, last_ent string")
     with pytest.raises(ValueError):
-        extract_triples(spark, linked, window=8, chunk=4)
+        triples_from_digests(digests, window=8, chunk=4)

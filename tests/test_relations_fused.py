@@ -11,15 +11,12 @@ import os
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+from reference_plans import canonicalize, extract_triples
 
 from kgpipe.operators.labeler import label_transcripts
 from kgpipe.operators.linker import dict_to_df, link_entities, top1_dict
 from kgpipe.operators.mentions import extract_mentions
-from kgpipe.operators.relations import (
-    extract_triples,
-    extract_triples_fused,
-    turn_digests,
-)
+from kgpipe.operators.relations import extract_triples_fused, turn_digests
 from kgpipe.pipeline import read_transcripts
 
 
@@ -180,15 +177,20 @@ def test_digest_rows_are_narrow(spark, unit):
 
 def test_fused_in_pipeline_matches_exploded_pipeline(
         spark, unit_fixture_dir):
+    """run_pipeline's product (canon map composed into the digest link
+    map, per-turn dedup) equals the reference composition: the exploded
+    plan over ``linked``, then canonicalize's broadcast joins + groupBy."""
     from kgpipe.pipeline import run_pipeline
 
     t = read_transcripts(
         spark, os.path.join(unit_fixture_dir, "transcripts.parquet"))
     cd = pd.read_parquet(
         os.path.join(unit_fixture_dir, "candidate_dict.parquet"))
-    a = run_pipeline(spark, t, cd, extractor="fused")["triples"]
-    b = run_pipeline(spark, t, cd, extractor="exploded")["triples"]
-    # conf included: both dedup rules are deterministic max-conf now (the
+    out = run_pipeline(spark, t, cd)
+    a = out["triples"]
+    b = canonicalize(extract_triples(spark, out["linked"], window=3),
+                     out["canon_map"])
+    # conf included: both dedup rules are deterministic max-conf (the
     # fused per-turn array dedup and canonicalize's groupBy+max)
     sel = ["subj", "pred", "obj", "conv_id", "turn_idx", "conf"]
     ra = sorted(map(tuple, a.select(*sel).collect()))
@@ -202,7 +204,6 @@ def test_per_turn_dedup_keeps_max_conf(spark):
     deterministically carrying conf 1.0 — in the fused per-turn array
     dedup AND in canonicalize's groupBy+max (dropDuplicates kept a
     plan-dependent arbitrary row)."""
-    from kgpipe.operators.canon import canonicalize
     from kgpipe.operators.relations import triples_from_digests
 
     digests = spark.createDataFrame(

@@ -173,6 +173,40 @@ def test_incremental_triples_match_batch_across_microbatches(spark, tmp_path):
     assert got == want
 
 
+def test_incremental_triples_three_microbatches_equal_batch(spark, tmp_path):
+    """Thirds of every conversation arrive in three micro-batches, so the
+    keyed lag state carries across two boundaries: the stream must emit
+    exactly the batch raw triples, row for row, conf included."""
+    import time
+
+    from kgpipe.pipeline import run_from_dir
+
+    fixture = materialize("unit")
+    cols = ["subj", "pred", "obj", "conv_id", "turn_idx", "conf"]
+    want = sorted(map(tuple, run_from_dir(spark, fixture)["raw_triples"]
+                      .select(*cols).collect()))
+
+    t = pd.read_parquet(os.path.join(fixture, "transcripts.parquet"))
+    t = t.sort_values(["conv_id", "turn_idx"], kind="mergesort")
+    third = (3 * t.groupby("conv_id").cumcount()
+             // t.groupby("conv_id")["turn_idx"].transform("count"))
+    d = str(tmp_path / "stream_in")
+    os.makedirs(d)
+    for i in range(3):
+        if i:
+            time.sleep(1.1)  # file-source ordering is by modification time
+        t[third == i].to_parquet(os.path.join(d, f"p{i}.parquet"),
+                                 index=False, coerce_timestamps="us",
+                                 allow_truncated_timestamps=True)
+
+    cd = pd.read_parquet(os.path.join(fixture, "candidate_dict.parquet"))
+    got_df = _run_stream(
+        incremental_triples(spark, read_transcripts_stream(spark, d), cd),
+        str(tmp_path), mode="append")
+    got = sorted(map(tuple, got_df.select(*cols).collect()))
+    assert got == want and want
+
+
 def test_idempotent_sink_crash_mid_batch_no_duplicates(spark, tmp_path):
     """B32 exactly-once sink half: kill the stream in the WORST crash
     window (batch data renamed into place, manifest commit not yet

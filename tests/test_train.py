@@ -233,18 +233,3 @@ def test_cluster_template_survives_disk_roundtrip(corpus, tmp_path):
     p1 = decode_spans(test["text"].head(100), m1, g)
     p2 = decode_spans(test["text"].head(100), m2, g)
     assert list(p1) == list(p2)
-
-
-def test_pos_tag_ids_rules():
-    """§2C step 4 POS template: closed-class lexicon beats shape, shape
-    beats suffix, suffix beats the noun default."""
-    import pandas as pd
-
-    from kgpipe.operators.train import pos_tag_ids
-
-    toks = ["the", "Alice", "works", "quickly", "at", "42", "promotion",
-            ".", "walking", "may", "desk"]
-    s = pd.Series(toks, dtype="object")
-    got = pos_tag_ids(s, s.str.lower()).tolist()
-    #      DET  PROPN AUX?.. see ids in train.py
-    assert got == [1, 10, 0, 7, 2, 8, 11, 9, 6, 5, 0]
