@@ -1,22 +1,27 @@
 """Bench evidence for the LARGE-dictionary canonicalization path
-(SURVEY.md A10-A12 above LOCAL_CANON_MAX_DICT): distributed blocked
-similarity join (two-tier: all-pairs under the block cap, sorted-
-neighborhood band inside over-cap blocks) + two-phase connected
-components, at a dictionary scale the driver fixtures never reach.
+(SURVEY.md A10-A12 above LOCAL_CANON_MAX_DICT), at a dictionary scale the
+driver fixtures never reach. Both canon builders run the same per-block
+function (operators/canon.py ``canon_blocks``: candidate pairs, all pairs
+under the block cap and a sorted-neighborhood band inside over-cap
+blocks, then a vectorized Levenshtein verify and union-find):
+``build_canon_map`` per block through ``applyInPandas``, and
+``build_canon_map_local`` over every block at once on the driver. The
+bench times both on the same dictionary and fails unless their maps are
+identical.
 
-Synthesizes a deterministic >200k-entity dictionary (seeded numpy):
+Synthesizes a deterministic ~1M-entity dictionary (seeded numpy):
 
 * realistic region: first tokens zipf-drawn from a 3k vocab -> many
-  modest blocks, exercised by the exact all-pairs tier;
+  modest blocks, paired all-pairs;
 * planted duplicate clusters (pair of 1-edit variants per cluster) whose
   recovery rate is the correctness metric — a canon bench that only
   reports a wall could be fast by finding nothing;
-* adversarial region: one shared-first-token block of 30k surfaces
+* adversarial region: one shared-first-token block of 160k surfaces
   (>> CANON_BLOCK_CAP) with planted adjacent variants, exercising the
-  sorted-neighborhood tier that bounds the 100-TB worst block.
+  sorted-neighborhood band that bounds the worst block.
 
 Run per parallelism level (the JSON records the master); two levels give
-the scaling-efficiency evidence for this path:
+the scaling-efficiency evidence for the distributed builder:
 
     KGPIPE_CANON_MASTER=local[8]  python bench_canon.py
     KGPIPE_CANON_MASTER=local[32] python bench_canon.py
@@ -103,6 +108,7 @@ def main() -> int:
     from kgpipe.operators.canon import (
         CANON_BLOCK_CAP,
         build_canon_map,
+        build_canon_map_local,
         entity_surfaces,
     )
     from kgpipe.operators.linker import dict_to_df
@@ -138,10 +144,18 @@ def main() -> int:
     canon = build_canon_map(dict_df).cache()
     n_map = canon.count()
     wall = time.time() - t0
+    roots = {r["entity_id"]: r["canonical_id"] for r in canon.collect()}
+
+    t0 = time.time()
+    local = build_canon_map_local(cd)
+    local_wall = time.time() - t0
+    local_roots = dict(zip(local["entity_id"], local["canonical_id"]))
+    if local_roots != roots or len(local) != n_map:
+        raise SystemExit("build_canon_map_local and build_canon_map "
+                         f"disagree: {len(local)} vs {n_map} map rows")
 
     # planted recovery: both members of a planted pair must resolve to the
     # same root (canon maps non-roots only; identity otherwise)
-    roots = {r["entity_id"]: r["canonical_id"] for r in canon.collect()}
     hit = sum(roots.get(a, a) == roots.get(b, b) for a, b in planted)
     recall = hit / len(planted)
 
@@ -152,6 +166,7 @@ def main() -> int:
         "planted_recall": round(recall, 4),
         "canon_map_rows": int(n_map),
         "wall_sec": round(wall, 2),
+        "local_wall_sec": round(local_wall, 2),
         "entities_per_sec": round(len(cd) / wall, 1),
         "block_cap": CANON_BLOCK_CAP,
         "blocks": {k: int(hist[k]) for k in

@@ -13,8 +13,8 @@ The engine re-expresses the reference's extraction pipeline Spark-first:
   (``operators.linker``)
 * relation/triple extraction per turn-window is pure window-function DataFrame
   code — no Python in the hot path (``operators.relations``)
-* canonicalization is a salted similarity join + DataFrame connected
-  components (``operators.canon``)
+* canonicalization is a blocked similarity join + union-find, one pandas
+  function per (class, first-token) block (``operators.canon``)
 * triples materialize to partitioned tables with per-partition lineage
   manifests for resume (``sources.storage``, ``operators.checkpoint``)
 

@@ -1,29 +1,26 @@
-"""Canonicalization: similarity join + connected components -> canon map
-(SURVEY.md A10-A12; BASELINE.json: "canonicalization via GraphFrames-style
-connected components on a salted similarity join"). The id rewrite itself
-happens in the digest UDF's link map (operators/relations.py
-turn_digests), so no join ever rewrites the triples.
+"""Canonicalization: blocked similarity join + union-find -> canon map
+(SURVEY.md A10-A12), composed into the digest UDF's link map
+(operators/relations.py turn_digests), so no join rewrites the triples.
 
-GraphFrames is not installable offline (SURVEY.md §4.4), and the phrase is
-"GraphFrames-STYLE": connected components are hand-rolled DataFrame code.
+Candidates only pair members of one (ent_class, first token) block, so
+every cluster lies inside one block and union-find runs per block:
+``canon_blocks`` generates candidates, verifies them (a banded Levenshtein
+DP vectorized over all pairs at once) and clusters the verified edges —
+filter-then-verify (PAPERS.md ICDE'22), verify vectorized (CIDR'22).
+``build_canon_map_local`` runs it once on the driver; ``build_canon_map``
+per block through ``applyInPandas``.
 
-Connected components use the alternating large-star / small-star
-algorithm of Kiveris et al., "Connected Components in MapReduce and Beyond"
-(SOCC'14): provably O(log^2 n) rounds on any graph, each round two shuffles
-(groupBy min + join). This is the 100-TB path.
-
-Every iteration ``localCheckpoint()``s to truncate lineage (SURVEY.md §4.2).
-
-Similarity-join scaling: candidate pairs are generated ONLY within a blocking
-key (ent_class, first token, length bucket) — an equi-join Catalyst can
-shuffle-partition — and the quadratic Levenshtein filter runs per block.
-Skewed blocks are covered by AQE skew-join splitting (enabled in session.py);
-at 100-TB scale block caps / salting bound the worst block.
+``connected_components`` serves graphs whose edges cross any key (the LSH
+near-dup graph, queries/textops.py): Kiveris et al.'s large/small star
+(SOCC'14), O(log^2 n) rounds, hand-rolled since GraphFrames is not
+installable offline (SURVEY.md §4.4).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -35,151 +32,128 @@ def entity_surfaces(dict_df: DataFrame) -> DataFrame:
     )
 
 
-# All-pairs candidate generation runs only inside blocks up to this size;
-# bigger blocks (an adversarial shared-prefix dictionary puts millions of
-# surfaces behind one first token) switch to a sorted-neighborhood rank
-# band, bounding per-block candidates at O(b*W) instead of O(b^2). W trades
-# recall for work: true lev<=2 duplicates share long prefixes and sort
-# adjacently, so a small band recovers them; pairs > W ranks apart inside
-# an over-cap block are the one disclosed recall bound of this operator.
+# Blocks up to CANON_BLOCK_CAP members pair every two members; bigger ones
+# (a shared-prefix dictionary can put millions of surfaces behind one first
+# token) pair members <= CANON_SORT_WINDOW ranks apart by (surface, id):
+# sorted neighborhood (Hernandez & Stolfo, SIGMOD'95), O(b*W) candidates.
+# Pairs > W ranks apart in an over-cap block are the disclosed recall bound.
 CANON_BLOCK_CAP = 1024
 CANON_SORT_WINDOW = 8
+# candidate pairs verified together: bounds the DP's working set
+_VERIFY_BATCH = 1 << 17
 
 
-def similarity_edges(surfaces: DataFrame, max_lev: int = 2,
-                     block_cap: int = CANON_BLOCK_CAP,
-                     sort_window: int = CANON_SORT_WINDOW) -> DataFrame:
-    """Candidate duplicate pairs (src < dst) via blocked Levenshtein join.
+def code_points(strings: list[str]):
+    """(cp, off, ln): string s is ``cp[off[s]:off[s] + ln[s]]`` in one flat
+    code-point array, followed by 4 entries the DP may read past the end."""
+    ln = np.fromiter(map(len, strings), np.int64, len(strings))
+    cp = np.concatenate([
+        np.frombuffer("".join(strings).encode("utf-32-le"), np.uint32),
+        np.zeros(4, np.uint32)])
+    return cp, np.cumsum(ln) - ln, ln
 
-    Two-tier blocking keeps the worst block bounded at any scale:
 
-    * blocks (ent_class, first token) with <= ``block_cap`` members get the
-      exact all-pairs equi-join (quadratic only within the cap);
-    * bigger blocks get the sorted-neighborhood method (Hernandez & Stolfo,
-      SIGMOD'95): rank members by surface inside the block and pair only
-      rows <= ``sort_window`` ranks apart — candidates are O(b*W) and the
-      band join is a plain equi-join on (block, rank+k), so Catalyst
-      shuffle-partitions it like any other key. The per-block rank itself
-      is one window sort over b NARROW rows (bounded task = O(b log b)
-      time, O(b) rows — the b^2 join blow-up is what the cap removes; a
-      block too big even to sort in one task would need salted range
-      ranks, which the dictionary sizes this engine targets don't reach).
+def lev_within_2(cp: np.ndarray, off: np.ndarray, ln: np.ndarray,
+                 a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """``lev(s[a[p]], s[b[p]]) <= 2`` per pair p of ``code_points`` strings,
+    as Spark's ``F.levenshtein``: one DP over all pairs within 2 in length,
+    row i keeping cells j = i-2..i+2 (a path of cost <= 2 stays there). A
+    pair leaves at row la (answer D[la][lb]) or once all 5 cells exceed 2;
+    cells past the end of b hold garbage that D[la][lb] never reads."""
+    la, lb = ln[a], ln[b]
+    out = np.zeros(len(a), bool)
+    idx = np.flatnonzero(np.abs(la - lb) <= 2)
+    la, lb, oa, ob = la[idx], lb[idx], off[a[idx]], off[b[idx]]
+    # DP row 0, cells j = -2..2; 3 stands for any distance > 2
+    row = np.tile(np.array([3, 3, 0, 1, 2], np.int8), (len(idx), 1))
+    i = 0
+    while True:
+        end = la == i
+        out[idx[end]] = row[end, lb[end] - i + 2] <= 2
+        live = ~end & (row.min(axis=1) <= 2)
+        if not live.any():
+            return out
+        idx, la, lb, oa, ob, row = (x[live] for x in (idx, la, lb, oa, ob,
+                                                      row))
+        i += 1
+        ai = cp[oa + i - 1]
+        new = np.empty_like(row)
+        left = 3  # D[i][j-1]; cell d holds j = i + d - 2
+        for d in range(5):
+            # diagonal D[i-1][j-1] compares a[i-1] with b[j-1]; up D[i-1][j]
+            # is cell d+1 of the previous row (outside the band at d = 4)
+            cell = row[:, d] + (ai != cp[ob + i + d - 3])
+            if d < 4:
+                cell = np.minimum(cell, row[:, d + 1] + 1)
+            new[:, d] = left = np.minimum(np.minimum(cell, left + 1), 3)
+        row = new
 
-    ``block_cap=None`` disables capping (the exact reference used by the
-    equality gate on small dictionaries)."""
-    s = surfaces.select(
-        "entity_id",
-        "surface",
-        "ent_class",
-        F.split(F.col("surface"), " ").getItem(0).alias("block_tok"),
-        F.length("surface").alias("slen"),
-    )
 
-    def finish(pairs: DataFrame) -> DataFrame:
-        # cheap length filter before the quadratic edit distance
-        return (
-            pairs.filter(F.abs(F.col("a_slen") - F.col("b_slen")) <= max_lev)
-            .filter(F.levenshtein(F.col("a_surface"),
-                                  F.col("b_surface")) <= max_lev)
-            .select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
-        )
+def _sorted_blocks(surfaces: pd.DataFrame) -> pd.DataFrame:
+    """(entity_id, surface, ent_class) + block, sorted by (ent_class, block,
+    surface, entity_id). A null id, class or surface never merges."""
+    s = surfaces[["entity_id", "surface", "ent_class"]].dropna()
+    s = s.assign(block=s["surface"].str.split(" ", n=1).str[0])
+    return s.sort_values(["ent_class", "block", "surface", "entity_id"],
+                         ignore_index=True)
 
-    def allpairs(src: DataFrame) -> DataFrame:
-        a = src.alias("a")
-        b = src.alias("b")
-        return a.join(
-            b,
-            (F.col("a.ent_class") == F.col("b.ent_class"))
-            & (F.col("a.block_tok") == F.col("b.block_tok"))
-            & (F.col("a.entity_id") < F.col("b.entity_id")),
-            "inner",
-        ).select(
-            F.col("a.entity_id").alias("a_id"),
-            F.col("b.entity_id").alias("b_id"),
-            F.col("a.surface").alias("a_surface"),
-            F.col("b.surface").alias("b_surface"),
-            F.col("a.slen").alias("a_slen"),
-            F.col("b.slen").alias("b_slen"),
-        )
 
-    if block_cap is None:
-        return finish(allpairs(s))
+def _candidates(s: pd.DataFrame):
+    """Batches of candidate pairs (r, r + k) over ``_sorted_blocks`` rows:
+    1 <= k < b in blocks of b <= CANON_BLOCK_CAP members, else
+    1 <= k <= CANON_SORT_WINDOW."""
+    g = s.groupby(["ent_class", "block"], sort=False)
+    size = g["entity_id"].transform("size").to_numpy()
+    after = size - g.cumcount().to_numpy() - 1  # members ranked later
+    lim = np.where(size <= CANON_BLOCK_CAP, after,
+                   np.minimum(after, CANON_SORT_WINDOW))
+    src, k, batch = np.flatnonzero(lim > 0), 1, []
+    while len(src):
+        batch.append((src, src + k))
+        k += 1
+        src = src[lim[src] >= k]
+        if sum(len(r) for r, _ in batch) >= _VERIFY_BATCH or not len(src):
+            a, b = (np.concatenate(x) for x in zip(*batch))
+            for j in range(0, len(a), _VERIFY_BATCH):
+                yield a[j:j + _VERIFY_BATCH], b[j:j + _VERIFY_BATCH]
+            batch = []
 
-    # block sizing via groupBy (map-side combine to one row per block) +
-    # broadcast join back — NOT a count-over-window, which would shuffle
-    # every surface row into size-skewed window partitions just to learn
-    # its block size. #blocks ~ first-token vocabulary: broadcastable far
-    # beyond dictionary scales that themselves stopped being broadcastable.
-    sizes = s.groupBy("ent_class", "block_tok").agg(
-        F.count(F.lit(1)).alias("bsz"))
-    sized = s.join(F.broadcast(sizes), ["ent_class", "block_tok"])
-    small = sized.filter(F.col("bsz") <= block_cap).drop("bsz")
 
-    big = sized.filter(F.col("bsz") > block_cap).drop("bsz")
-    # global per-block rank WITHOUT a per-block window (an over-cap block
-    # is by definition too big for a single window partition): sub-bucket
-    # on an order-consistent sort-key prefix (string prefix order agrees
-    # with full-string order), row_number inside the small sub-buckets,
-    # then add each sub-bucket's cumulative offset — computed on the TINY
-    # (block, sub-bucket) count table. Rank values are identical to a
-    # single global window; only the partitioning is bounded. The one
-    # adversarial residue: surfaces sharing the whole 12-char prefix
-    # beyond the first token collapse into one sub-bucket again (the
-    # count table grows with prefix length — 12 keeps it at one row per
-    # distinct prefix, still tiny relative to the surfaces themselves,
-    # while a block would need to share token + 12 further chars across
-    # millions of members to degenerate).
-    sub = big.withColumn(
-        "rb", F.expr("substring(surface, length(block_tok) + 2, 12)"))
-    counts = sub.groupBy("ent_class", "block_tok", "rb").agg(
-        F.count(F.lit(1)).alias("cnt"))
-    offs = counts.withColumn(
-        "off",
-        F.coalesce(
-            F.sum("cnt").over(
-                Window.partitionBy("ent_class", "block_tok").orderBy("rb")
-                .rowsBetween(Window.unboundedPreceding, -1)),
-            F.lit(0))).drop("cnt")
-    subw = Window.partitionBy("ent_class", "block_tok", "rb").orderBy(
-        "surface", "entity_id")
-    ranked = (
-        sub.withColumn("r_in", F.row_number().over(subw))
-        .join(offs, ["ent_class", "block_tok", "rb"])
-        .withColumn("rnk", (F.col("r_in") + F.col("off")).cast("int"))
-        .drop("rb", "r_in", "off")
-    )
-    probe = ranked.withColumn(
-        "k", F.explode(F.sequence(F.lit(1), F.lit(sort_window)))
-    ).withColumn("rnk_b", F.col("rnk") + F.col("k"))
-    r = ranked.select(
-        F.col("ent_class").alias("r_class"),
-        F.col("block_tok").alias("r_tok"),
-        F.col("rnk").alias("rnk_b"),
-        F.col("entity_id").alias("r_id"),
-        F.col("surface").alias("r_surface"),
-        F.col("slen").alias("r_slen"),
-    )
-    band = probe.join(
-        r,
-        (F.col("ent_class") == F.col("r_class"))
-        & (F.col("block_tok") == F.col("r_tok"))
-        & (probe["rnk_b"] == r["rnk_b"]),
-        "inner",
-    ).select(
-        F.least("entity_id", "r_id").alias("a_id"),
-        F.greatest("entity_id", "r_id").alias("b_id"),
-        F.when(F.col("entity_id") <= F.col("r_id"),
-               F.col("surface")).otherwise(F.col("r_surface"))
-        .alias("a_surface"),
-        F.when(F.col("entity_id") <= F.col("r_id"),
-               F.col("r_surface")).otherwise(F.col("surface"))
-        .alias("b_surface"),
-        F.when(F.col("entity_id") <= F.col("r_id"),
-               F.col("slen")).otherwise(F.col("r_slen")).alias("a_slen"),
-        F.when(F.col("entity_id") <= F.col("r_id"),
-               F.col("r_slen")).otherwise(F.col("slen")).alias("b_slen"),
-    )
-    return finish(allpairs(small)).unionByName(finish(band))
+def _roots(u: np.ndarray, v: np.ndarray, n: int) -> np.ndarray:
+    """Union-find over nodes 0..n-1 -> each node's root, its component's
+    min: compress paths, hook the larger root of each crossing edge."""
+    p = np.arange(n)
+    while True:
+        while not np.array_equal(p[p], p):
+            p = p[p]
+        ru, rv = p[u], p[v]
+        cross = ru != rv
+        if not cross.any():
+            return p
+        np.minimum.at(p, np.maximum(ru, rv)[cross], np.minimum(ru, rv)[cross])
+
+
+def canon_blocks(surfaces: pd.DataFrame) -> pd.DataFrame:
+    """(entity_id, surface, ent_class) of any number of whole blocks ->
+    (entity_id, canonical_id) for merged ids, non-roots only; canonical =
+    the component's min id."""
+    s = _sorted_blocks(surfaces)
+    cp, off, ln = code_points(s["surface"].tolist())
+    # lev(p + x, p + y) = lev(x, y), and every member of a block starts
+    # with its block token: verify only what follows the token
+    skip = s["block"].str.len().to_numpy()
+    off, ln = off + skip, ln - skip
+    src, dst = [np.zeros(0, np.int64)], [np.zeros(0, np.int64)]
+    for a, b in _candidates(s):
+        ok = lev_within_2(cp, off, ln, a, b)
+        src.append(a[ok])
+        dst.append(b[ok])
+    ids, node = np.unique(s["entity_id"].to_numpy()[np.concatenate(src + dst)],
+                          return_inverse=True)
+    root = _roots(node[:len(node) // 2], node[len(node) // 2:], len(ids))
+    moved = root != np.arange(len(ids))
+    return pd.DataFrame({"entity_id": ids[moved],
+                         "canonical_id": ids[root[moved]]})
 
 
 def _edges_fingerprint(edges: DataFrame) -> tuple[int, int]:
@@ -237,57 +211,21 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
 
 
 def build_canon_map(dict_df: DataFrame) -> DataFrame:
-    """candidate dictionary -> (entity_id, canonical_id) for merged ids.
-
-    Surfaces are localCheckpointed: the two-tier similarity join reads them
-    from three branches (block sizes, small-block all-pairs, big-block
-    band), and without a materialization each branch would recompute the
-    entity_surfaces aggregation from the raw dictionary."""
-    edges = similarity_edges(entity_surfaces(dict_df).localCheckpoint())
-    return connected_components(edges)
-
-
-# --------------------------------------------------------------------------
-# driver-side fast path for broadcast-sized dictionaries
+    """candidate dictionary -> (entity_id, canonical_id) for merged ids:
+    ``canon_blocks`` per (ent_class, first token) block. Any block fits in
+    one Python worker: it is at most the whole dictionary, which every
+    worker already holds as the gazetteer broadcast."""
+    return entity_surfaces(dict_df).groupBy(
+        "ent_class", F.split("surface", " ").getItem(0).alias("block")
+    ).applyInPandas(canon_blocks, "entity_id string, canonical_id string")
 
 
-def _lev(a: str, b: str, cap: int) -> int:
-    """Plain Levenshtein (matches Spark's F.levenshtein), early-exit > cap."""
-    la, lb = len(a), len(b)
-    if abs(la - lb) > cap:
-        return cap + 1
-    prev = list(range(lb + 1))
-    for i in range(1, la + 1):
-        cur = [i] + [0] * lb
-        best = cur[0]
-        for j in range(1, lb + 1):
-            cur[j] = min(prev[j] + 1, cur[j - 1] + 1,
-                         prev[j - 1] + (a[i - 1] != b[j - 1]))
-            best = min(best, cur[j])
-        if best > cap:
-            return cap + 1
-        prev = cur
-    return prev[lb]
-
-
-def build_canon_map_local(candidate_dict, max_lev: int = 2):
-    """Same (entity_id, canonical_id) mapping as build_canon_map, computed
-    driver-side in pandas + union-find.
-
-    The candidate dictionary is broadcast-sized BY CONSTRUCTION (it ships to
-    every labeler worker), so the canon map derived from it never needs a
-    cluster: blocked pairwise Levenshtein over a few thousand surfaces is
-    microseconds-to-milliseconds, versus seconds of driver-loop latency for
-    the iterative DataFrame CC. The distributed path (build_canon_map)
-    remains the correct tool when canonicalizing an OPEN entity set (e.g.
-    clustering emergent entities mined from the corpus itself) and is kept
-    tested against this one (tests/test_cc.py::test_local_equals_distributed).
-
-    Returns a pandas DataFrame (entity_id, canonical_id), non-roots only.
-    """
-    import pandas as pd
-
-    df = candidate_dict[["entity_id", "alias", "prior", "ent_class"]].copy()
+def build_canon_map_local(candidate_dict: pd.DataFrame) -> pd.DataFrame:
+    """Same (entity_id, canonical_id) mapping as build_canon_map as pandas,
+    non-roots only: ``canon_blocks`` over every block at once, on the
+    driver. The dictionary is broadcast-sized by construction (it ships to
+    every labeler worker), so this needs no Spark job."""
+    df = candidate_dict[["entity_id", "alias", "prior", "ent_class"]]
     # per entity: best surface = max by (prior, alias) — sort ascending and
     # take the last row per entity (same as Spark's max_by(struct(...)))
     cls_first = df.groupby("entity_id", sort=False)["ent_class"].first()
@@ -295,33 +233,4 @@ def build_canon_map_local(candidate_dict, max_lev: int = 2):
     best = (df.groupby("entity_id", sort=False).last().reset_index()
             [["entity_id", "alias"]].rename(columns={"alias": "surface"}))
     best["ent_class"] = best["entity_id"].map(cls_first)
-
-    parent: dict[str, str] = {}
-
-    def find(x: str) -> str:
-        r = x
-        while parent.get(r, r) != r:
-            r = parent[r]
-        while parent.get(x, x) != x:
-            parent[x], x = r, parent[x]
-        return r
-
-    def union(a: str, b: str) -> None:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            lo, hi = (ra, rb) if ra < rb else (rb, ra)
-            parent[hi] = lo
-
-    best["block"] = best["surface"].str.split(" ").str[0]
-    for (_, _), grp in best.groupby(["ent_class", "block"], sort=False):
-        rows = sorted(zip(grp["entity_id"], grp["surface"]))
-        for i in range(len(rows)):
-            for j in range(i + 1, len(rows)):
-                ei, si = rows[i]
-                ej, sj = rows[j]
-                if abs(len(si) - len(sj)) <= max_lev and \
-                        _lev(si, sj, max_lev) <= max_lev:
-                    union(ei, ej)
-
-    out = [(e, find(e)) for e in best["entity_id"] if find(e) != e]
-    return pd.DataFrame(out, columns=["entity_id", "canonical_id"])
+    return canon_blocks(best)

@@ -7,9 +7,9 @@ Each pipeline stage is checkpointed at **bucket granularity**: rows are
 bucketed by ``pmod(xxhash64(conv_id), n_buckets)`` — the same conv_id keying
 the pipeline already shuffles on — and a stage's output is written as a
 parquet table partitioned by ``_ckpt_bucket``. A JSONL **lineage manifest**
-(one row per completed bucket: stage, bucket, rows_out, wall_ms, input
-fingerprint, files) is appended *after* the bucket data is durably written,
-so the commit protocol is:
+(one row per completed bucket: stage, bucket, rows_out, input fingerprint)
+is appended *after* the bucket data is durably written, so the commit
+protocol is:
 
     write bucket dirs (dynamic partition overwrite) -> fsync manifest rows
 
@@ -217,23 +217,16 @@ class CheckpointedRun:
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy(BUCKET_COL)
                 .parquet(data_dir))
-            # per-bucket lineage rows from parquet footers (driver-side)
-            wall_ms = int((time.time() - t0) * 1000)
+            # per-bucket lineage rows from parquet footers (driver-side); the
+            # buckets share one Spark job, so only the stage wall is measured
             bucket_rows_map = {}
             for b in todo:
                 bdir = os.path.join(data_dir, f"{BUCKET_COL}={b}")
                 rows = _parquet_rows(bdir) if os.path.isdir(bdir) else 0
                 bucket_rows_map[b] = rows
                 computed_rows += rows
-            # the buckets ran inside ONE Spark job, so per-bucket wall is
-            # not directly observable; attribute proportionally to rows_out
-            # so lineage shows time skew, not a uniform fiction (uniform
-            # fallback only when the whole stage emitted nothing)
-            total_rows = sum(bucket_rows_map.values())
             manifest_rows = [{
                 "stage": name, "bucket": b, "rows_out": r,
-                "wall_ms": (wall_ms * r // total_rows if total_rows
-                            else wall_ms // max(1, len(todo))),
                 "fingerprint": fingerprint, "status": "done",
             } for b, r in bucket_rows_map.items()]
             # persist the output schema BEFORE the manifest commit: if every

@@ -3,7 +3,7 @@
 scan -> one Arrow UDF per turn (CRF-style labeling, entity linking onto
 canonical ids, predicate pairing: operators/relations.py turn_digests) ->
 conv_id window over the narrow per-turn digests -> triples. The canon map
-(similarity join + connected components) is built from the dictionary
+(blocked similarity join + union-find) is built from the dictionary
 before any corpus job and composed into the UDF's link map.
 
 Every stage is a DataFrame-in/DataFrame-out function so stages can be
@@ -57,10 +57,9 @@ def locate_transcripts(fixture_dir: str) -> str:
         f"no transcripts file in {fixture_dir}; probed {', '.join(probed)}")
 
 
-# above this many dictionary rows the canon map is built with the
-# distributed similarity-join + CC path; below it, driver-side (the dict is
-# broadcast-sized by construction, so the iterative DataFrame CC would pay
-# seconds of driver-loop job latency to compute milliseconds of work)
+# Both canon builders run canon_blocks and return the same map: up to this
+# many dictionary rows once on the driver (no Spark job latency), above it
+# per block through applyInPandas (spread over the cores).
 LOCAL_CANON_MAX_DICT = 200_000
 
 

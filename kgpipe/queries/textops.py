@@ -764,8 +764,8 @@ def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(cluster_id, n_docs, min_doc, max_doc) per near-dup cluster.
 
     Edges are the size-capped LSH candidate pairs; components computed by
-    the same O(log^2 n) two-phase CC operator canonicalization uses
-    (operators/canon.py — large-star/small-star, per-iteration
+    the O(log^2 n) two-phase CC operator (operators/canon.py
+    connected_components — large-star/small-star, per-iteration
     localCheckpoint). Singleton documents (no candidate edge) are excluded:
     at scale the interesting output is the dup groups, not a row per
     unique doc. Doc ids are zero-padded before entering the string-keyed CC

@@ -20,7 +20,7 @@ def get_spark(
     """Build (or fetch) a SparkSession tuned for this engine.
 
     * AQE on (runtime shuffle coalescing + skew-join splitting — the backstop
-      for the salted similarity join, SURVEY.md §4.1/§4.2).
+      for skewed join keys, SURVEY.md §4.1/§4.2).
     * Arrow on for all pandas-UDF boundaries (BASELINE.json input_hint:
       "vectorized pandas/Arrow UDFs (no per-row Python)").
     * Session timezone pinned to UTC so results hash identically against the

@@ -4,7 +4,9 @@
 ``canonicalize`` the broadcast-join id rewrite plus groupBy dedup. The
 product builds every triple from turn digests
 (kgpipe/operators/relations.py); these independent plans are what the
-fused == reference gates compare it against.
+fused == reference gates compare it against. ``_lev`` is the plain
+Levenshtein DP the vectorized canon verify kernel
+(kgpipe/operators/canon.py) is checked against.
 """
 
 from __future__ import annotations
@@ -168,3 +170,22 @@ def canonicalize(raw_triples: DataFrame, canon_map: DataFrame) -> DataFrame:
     # partitionings and matches the fused path's per-turn dedup rule.
     return t.groupBy("subj", "pred", "obj", "conv_id", "turn_idx").agg(
         F.max("conf").alias("conf"))
+
+
+def _lev(a: str, b: str, cap: int) -> int:
+    """Plain Levenshtein (matches Spark's F.levenshtein), early-exit > cap."""
+    la, lb = len(a), len(b)
+    if abs(la - lb) > cap:
+        return cap + 1
+    prev = list(range(lb + 1))
+    for i in range(1, la + 1):
+        cur = [i] + [0] * lb
+        best = cur[0]
+        for j in range(1, lb + 1):
+            cur[j] = min(prev[j] + 1, cur[j - 1] + 1,
+                         prev[j - 1] + (a[i - 1] != b[j - 1]))
+            best = min(best, cur[j])
+        if best > cap:
+            return cap + 1
+        prev = cur
+    return prev[lb]

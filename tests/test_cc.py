@@ -1,9 +1,19 @@
 """Connected components on known graphs (SURVEY.md §5.2): chain, star,
 two components, self-loop, empty — two_phase must agree with ground
-truth."""
+truth. Canonicalization: the per-block canon builder against brute force,
+its Levenshtein kernel against the plain DP, and the driver-side map
+against the distributed one."""
 
+import itertools
+import string
+
+import numpy as np
+import pandas as pd
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
+from reference_plans import _lev
 
 from kgpipe.operators.canon import connected_components
 
@@ -19,6 +29,28 @@ GRAPHS = {
                            {"n": "m", "o": "m", "p": "m"}),
     "empty": ([], {}),
 }
+
+
+def _union_find(edges):
+    """Ground truth: {node: min node of its component}, non-roots only."""
+    parent = {}
+
+    def find(x):
+        r = x
+        while parent.get(r, r) != r:
+            r = parent[r]
+        while parent.get(x, x) != x:
+            parent[x], x = r, parent[x]
+        return r
+
+    nodes = set()
+    for a, b in edges:
+        nodes.update((a, b))
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            lo, hi = (ra, rb) if ra < rb else (rb, ra)
+            parent[hi] = lo
+    return {n: find(n) for n in nodes if find(n) != n}
 
 
 # the id suffix names the algorithm under test (two_phase, the one
@@ -46,80 +78,129 @@ def test_cc_long_chain_converges(spark):
     assert got.count() == 39
 
 
-def test_local_equals_distributed(spark):
-    """Driver-side canon map (pandas union-find) must equal the distributed
-    similarity-join + CC path on the fixture dictionary."""
-    import pandas as pd
+def _megacorp_block() -> pd.DataFrame:
+    """One over-cap (ORG, "megacorp") block: 1,352 "megacorp unit {a}{b}{x|y}"
+    surfaces that lev <= 2 pairs within CANON_SORT_WINDOW ranks chain into
+    one cluster, then "megacorp a" and "megacorp va" (1 edit apart) sorted
+    on either side of all of them."""
+    surfs = [f"megacorp unit {a}{b}{c}"
+             for a, b in itertools.product(string.ascii_lowercase, repeat=2)
+             for c in "xy"]
+    return pd.DataFrame({
+        "alias": surfs + ["megacorp a", "megacorp va"],
+        "entity_id": [f"MEGA{i:04d}" for i in range(len(surfs))]
+        + ["MEGA_A", "MEGA_VA"],
+        "prior": 1.0,
+        "ent_class": "ORG",
+    })
 
+
+def test_local_equals_distributed(spark):
+    """Driver-side canon map must equal the distributed one on the fixture
+    dictionary plus an over-cap block: both band the block the same way,
+    so the far pair "megacorp a" / "megacorp va" merges on neither."""
     from kgpipe.fixtures.generator import materialize
     from kgpipe.operators.canon import build_canon_map, build_canon_map_local
     from kgpipe.operators.linker import dict_to_df
 
     fx = materialize("unit")
-    cd = pd.read_parquet(fx + "/candidate_dict.parquet")
+    cd = pd.concat([pd.read_parquet(fx + "/candidate_dict.parquet"),
+                    _megacorp_block()], ignore_index=True)
     dist = {(r.entity_id, r.canonical_id)
             for r in build_canon_map(dict_to_df(spark, cd)).collect()}
     local = set(map(tuple, build_canon_map_local(cd).itertuples(index=False)))
     assert local == dist
-    assert local, "fixture must exercise at least one merged variant"
+    assert any(not e.startswith("MEGA") for e, _ in local), (
+        "fixture must exercise at least one merged variant")
+    assert not {"MEGA_A", "MEGA_VA"} & {e for e, _ in local}
 
 
-def test_similarity_block_cap_bounds_adversarial_block(spark):
-    """Shared-prefix adversarial dictionary: one (class, first-token) block
-    whose EVERY pair is a true lev<=2 duplicate. Uncapped all-pairs is
-    provably quadratic (b(b-1)/2 edges); the capped operator must bound
-    candidates at O(b*W) via the sorted-neighborhood band while the
-    rank-adjacent edge chain still connects the block into ONE cluster —
-    same clustering, bounded work."""
-    import itertools
-    import string
+def test_similarity_block_cap_bounds_adversarial_block():
+    """Shared-prefix adversarial block of b > CANON_BLOCK_CAP members, each
+    within 2 edits of many others: candidates stay at O(b*W) through the
+    sorted-neighborhood band while the chain of rank-adjacent edges still
+    connects the block into ONE cluster."""
+    from kgpipe.operators import canon
 
-    import pandas as pd
+    block = _megacorp_block().iloc[:-2].rename(columns={"alias": "surface"})
+    b = len(block)
+    assert b > canon.CANON_BLOCK_CAP
+    pairs = sum(len(a) for a, _ in canon._candidates(
+        canon._sorted_blocks(block)))
+    assert 0 < pairs <= b * canon.CANON_SORT_WINDOW
+    cm = canon.canon_blocks(block)
+    assert len(cm) == b - 1
+    assert set(cm["canonical_id"]) == {"MEGA0000"}
 
-    from kgpipe.operators.canon import (
-        connected_components,
-        entity_surfaces,
-        similarity_edges,
-    )
-    from kgpipe.operators.linker import dict_to_df
 
-    surfs = [f"megacorp unit {a}{b}"
-             for a, b in itertools.product(string.ascii_lowercase, repeat=2)]
-    b = len(surfs)  # 676 > cap
-    cd = pd.DataFrame({
-        "alias": surfs,
-        "entity_id": [f"E{i:04d}" for i in range(b)],
-        "prior": [1.0] * b,
-        "ent_class": ["ORG"] * b,
-    })
-    surfaces = entity_surfaces(dict_to_df(spark, cd)).cache()
+_chars = st.sampled_from(list("ab é\u4e2d\U0001F600"))
+_word = st.text(_chars, max_size=8)
 
-    capped = similarity_edges(surfaces, block_cap=256, sort_window=8)
-    n_capped = capped.count()
-    assert 0 < n_capped <= b * 8  # the bound the 100-TB path lives on
 
-    # the chain of rank-adjacent edges keeps the cluster CONNECTED: CC over
-    # the banded edges merges the whole block exactly like the exact join
-    cc = connected_components(capped)
-    assert cc.count() == b - 1
-    assert cc.select("canonical_id").distinct().count() == 1
+@st.composite
+def _pair(draw):
+    """(a, b) with b either independent of a or a after 0-4 random edits
+    (length differences 0-4)."""
+    a = draw(_word)
+    if draw(st.booleans()):
+        return a, draw(_word)
+    b = list(a)
+    for _ in range(draw(st.integers(0, 4))):
+        pos = draw(st.integers(0, len(b)))
+        op = draw(st.sampled_from("ids"))
+        if op == "i":
+            b.insert(pos, draw(_chars))
+        elif pos < len(b):
+            if op == "d":
+                del b[pos]
+            else:
+                b[pos] = draw(_chars)
+    return a, "".join(b)
 
-    # reference: the uncapped join on this block really is quadratic
-    exact = similarity_edges(surfaces, block_cap=None)
-    assert exact.count() == b * (b - 1) // 2
 
-    # and on a dictionary with no over-cap block, capped == uncapped exactly
-    small = pd.DataFrame({
-        "alias": ["acme corp", "acme corpp", "acme inc", "zeta llc"],
-        "entity_id": ["E_a", "E_b", "E_c", "E_d"],
-        "prior": [1.0] * 4,
-        "ent_class": ["ORG"] * 4,
-    })
-    ssurf = entity_surfaces(dict_to_df(spark, small))
-    got = {tuple(r) for r in similarity_edges(ssurf).collect()}
-    ref = {tuple(r) for r in
-           similarity_edges(ssurf, block_cap=None).collect()}
-    assert got == ref and got
+@settings(max_examples=300, deadline=None)
+@given(st.lists(_pair(), min_size=1, max_size=20))
+def test_lev_kernel_equals_reference(pairs):
+    """The vectorized banded verify kernel is exactly ``lev <= 2``."""
+    from kgpipe.operators.canon import code_points, lev_within_2
+
+    cp, off, ln = code_points([x for p in pairs for x in p])
+    even = np.arange(0, 2 * len(pairs), 2)
+    got = lev_within_2(cp, off, ln, even, even + 1)
+    assert got.tolist() == [_lev(a, b, 2) <= 2 for a, b in pairs]
+
+
+@st.composite
+def _entities(draw):
+    n = draw(st.integers(0, 30))
+    ids = [f"E{i:03d}" for i in draw(st.permutations(range(n)))]
+    surfs = draw(st.lists(st.none() | st.text(st.sampled_from(list("ab é")),
+                                              max_size=6),
+                          min_size=n, max_size=n))
+    classes = draw(st.lists(st.sampled_from(["ORG", "PER", None]),
+                            min_size=n, max_size=n))
+    return pd.DataFrame({"entity_id": ids, "surface": surfs,
+                         "ent_class": classes}, dtype=object)
+
+
+@settings(max_examples=200, deadline=None)
+@given(_entities())
+def test_canon_blocks_equals_brute_force(ents):
+    """On dictionaries with no over-cap block, ``canon_blocks`` is exactly
+    all-pairs lev <= 2 within (ent_class, first token) blocks, clustered
+    by union-find (a null class or surface never merges)."""
+    from kgpipe.operators.canon import canon_blocks
+
+    rows = [r for r in ents.itertuples(index=False)
+            if r.surface is not None and r.ent_class is not None]
+    edges = [(x.entity_id, y.entity_id)
+             for x, y in itertools.combinations(rows, 2)
+             if x.ent_class == y.ent_class
+             and x.surface.split(" ")[0] == y.surface.split(" ")[0]
+             and _lev(x.surface, y.surface, 2) <= 2]
+    got = canon_blocks(ents)
+    assert dict(zip(got["entity_id"], got["canonical_id"])) == \
+        _union_find(edges)
 
 
 def test_cc_algos_agree_on_random_graphs(spark):
@@ -130,26 +211,6 @@ def test_cc_algos_agree_on_random_graphs(spark):
     shapes deterministically (4 trials keep the iterative-CC driver-round
     latency within suite budget)."""
     import random
-
-    def truth(edges):
-        parent = {}
-
-        def find(x):
-            r = x
-            while parent.get(r, r) != r:
-                r = parent[r]
-            while parent.get(x, x) != x:
-                parent[x], x = r, parent[x]
-            return r
-
-        nodes = set()
-        for a, b in edges:
-            nodes.update((a, b))
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
-        return {n: find(n) for n in nodes if find(n) != n}
 
     rng = random.Random(20260818)
     for trial in range(4):
@@ -172,4 +233,4 @@ def test_cc_algos_agree_on_random_graphs(spark):
         df = spark.createDataFrame(edges, "src string, dst string")
         got = {r["entity_id"]: r["canonical_id"]
                for r in connected_components(df).collect()}
-        assert got == truth(edges), trial
+        assert got == _union_find(edges), trial

@@ -40,6 +40,9 @@ def test_checkpointed_equals_plain(spark, fixture_dir, plain_triples, tmp_path_f
         rows = [json.loads(line) for line in open(mpath)]
         assert {r["bucket"] for r in rows} == set(range(32))
         assert all(r["status"] == "done" and "rows_out" in r for r in rows)
+        # lineage records what was measured: no per-bucket wall (the
+        # buckets share one Spark job; metrics.json has the stage wall)
+        assert not any("wall_ms" in r for r in rows)
     assert os.path.exists(os.path.join(run_dir, "metrics.json"))
     # the durable digest rows are NARROW: no text column is staged
     assert set(out["digests"].columns) == {
@@ -50,6 +53,12 @@ def test_checkpointed_equals_plain(spark, fixture_dir, plain_triples, tmp_path_f
 def test_resume_skips_completed_buckets(spark, fixture_dir, plain_triples, tmp_path_factory):
     run_dir = str(tmp_path_factory.mktemp("ckpt-resume"))
     run_pipeline_checkpointed(spark, fixture_dir, run_dir)
+    # manifests written before per-bucket wall_ms was dropped still resume
+    for stage in ("digests", "triples"):
+        mpath = os.path.join(run_dir, stage, "manifest.jsonl")
+        rows = [json.loads(line) for line in open(mpath)]
+        with open(mpath, "w") as f:
+            f.writelines(json.dumps({**r, "wall_ms": 1}) + "\n" for r in rows)
     out2 = run_pipeline_checkpointed(spark, fixture_dir, run_dir)
     for stage, m in out2["metrics"].items():
         assert m["buckets_computed"] == 0, (stage, m)

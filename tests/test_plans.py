@@ -195,16 +195,17 @@ def test_labeler_udf_executes_once_in_mention_plans(spark):
         assert len(re.findall(r"ArrowEvalPython", p)) == 1, (name, p[:900])
 
 
-def test_capped_similarity_join_plan_shape(spark):
-    """The two-tier canon similarity join must keep its scale shapes in
-    the physical plan: the block-size table joins back via BROADCAST (one
-    row per block, never a shuffle of the surfaces for sizing), no
-    cartesian/BNLJ anywhere, and the over-cap band pairs via equi-join
-    (SMJ/SHJ/BHJ) — the all-pairs blow-up stays confined to under-cap
-    blocks by construction."""
+def test_canon_map_plan_shape(spark):
+    """The distributed canon map is one grouped pandas pass: the
+    entity_surfaces shuffle, the (ent_class, block) shuffle and one
+    FlatMapGroupsInPandas running the per-block similarity join and
+    union-find — no join of any kind, so no pair ever crosses a
+    shuffle."""
+    import re
+
     import pandas as pd
 
-    from kgpipe.operators.canon import entity_surfaces, similarity_edges
+    from kgpipe.operators.canon import build_canon_map
     from kgpipe.operators.linker import dict_to_df
 
     cd = pd.DataFrame({
@@ -213,9 +214,9 @@ def test_capped_similarity_join_plan_shape(spark):
         "prior": [1.0] * 300,
         "ent_class": ["ORG"] * 300,
     })
-    edges = similarity_edges(entity_surfaces(dict_to_df(spark, cd)),
-                             block_cap=16, sort_window=4)
-    p = edges._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in p, p  # the sizes join-back
-    assert "CartesianProduct" not in p, p
-    assert "BroadcastNestedLoopJoin" not in p, p
+    p = build_canon_map(dict_to_df(spark, cd))._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert p.count("FlatMapGroupsInPandas") == 1, p
+    assert len(re.findall(r"\bExchange ", p)) <= 2, p
+    for node in ("Join", "CartesianProduct", "BroadcastNestedLoopJoin"):
+        assert node not in p, (node, p)
