@@ -4,17 +4,22 @@ The reference labels each document's token sequence with a linear-chain CRF
 (python-crfsuite; SURVEY.md §2C steps 4-6, [R-MEM]). The graft re-expresses
 the same decode as a **vectorized linear sequence model + Viterbi** inside a
 scalar Arrow/pandas UDF (BASELINE.json input_hint: "vectorized pandas/Arrow
-UDFs (no per-row Python)"):
+UDFs (no per-row Python)").
 
-* Emission scores are built batch-wide in numpy/pandas: gazetteer n-gram
-  features (token n-gram is a known alias of class c -> boost B-c at the
-  match start and I-c over the continuation), plus generic shape features
-  (capitalization, digit-shape) weighted too low to open a span on their own.
-* Transition scores are a dense (T, T) matrix enforcing BIO consistency
-  (O->I-*, B-x->I-y, I-x->I-y are -inf).
-* Decode is Viterbi, vectorized over the *batch* dimension: all turns in an
-  Arrow batch are padded into an (R, L, T) emission tensor and the DP runs
-  once per timestep over (R, T, T) — no per-row Python loop.
+There is ONE decode (``decode_batch``) with two sets of emission weights:
+
+* **hand-set** (``model=None``): gazetteer n-gram features (token n-gram is
+  a known alias of class c -> boost B-c at the match start and I-c over the
+  continuation), plus generic shape features (capitalization) weighted too
+  low to open a span on their own; rows without a gazetteer hit skip the DP.
+* **learned** (a ``TrainedLabeler``, operators/train.py): hashed sparse
+  feature weights fit by the averaged structured perceptron, the gazetteer
+  hits among them as features.
+
+Both pad into an (R, L, T) emission tensor and run ``viterbi_batch``,
+vectorized over the *batch* dimension, with (T, T) transitions enforcing BIO
+consistency (O->I-*, B-x->I-y, I-x->I-y are -inf). ``label_transcripts`` is
+the one Spark labeler for both, ``spread_for`` the one rebalance rule.
 
 Because labeling is per-turn (scalar UDF), no grouping by conv_id is needed
 at this stage at all — a 10^6-turn hot conversation costs nothing extra here
@@ -36,12 +41,17 @@ N_TAGS = len(TAGS)
 _O = 0
 _B = {c: 1 + 2 * i for i, c in enumerate(ENT_CLASSES)}  # B-c tag index
 _I = {c: 2 + 2 * i for i, c in enumerate(ENT_CLASSES)}  # I-c tag index
+_B_OF_CLS = np.array([_B[c] for c in ENT_CLASSES], dtype=np.int64)
+_I_OF_CLS = np.array([_I[c] for c in ENT_CLASSES], dtype=np.int64)
 
 W_GAZ = 4.0       # per-token boost for a gazetteer n-gram match
 W_SHAPE = 0.2     # capitalization / shape prior (< O baseline: never opens
 W_O = 0.5         # a span alone)
 NEG = -1e9
 MAX_ALIAS_TOKENS = 4
+
+# token length -> (sorted uint64 alias-hash keys, aligned int8 class indices)
+Gazetteer = dict[int, tuple[np.ndarray, np.ndarray]]
 
 
 def build_transitions() -> np.ndarray:
@@ -69,7 +79,7 @@ def _fold_hashes(tok_h: np.ndarray, ln: int, limit: int) -> np.ndarray:
     return h
 
 
-def build_gazetteer(candidate_dict: pd.DataFrame) -> dict[int, tuple]:
+def build_gazetteer(candidate_dict: pd.DataFrame) -> Gazetteer:
     """normalized alias (by token length) -> (sorted uint64 hash keys,
     aligned class indices).
 
@@ -97,7 +107,7 @@ def build_gazetteer(candidate_dict: pd.DataFrame) -> dict[int, tuple]:
         np.array([t for ts in toks[keep] for t in ts], dtype=object))
     first = np.zeros(n_tok.size, np.int64)
     np.cumsum(n_tok[:-1], out=first[1:])
-    gaz: dict[int, tuple] = {}
+    gaz: Gazetteer = {}
     for ln in pd.unique(n_tok):
         sel = np.flatnonzero(n_tok == ln)
         win = (first[sel, None] + np.arange(ln)).ravel()  # contiguous group
@@ -107,45 +117,12 @@ def build_gazetteer(candidate_dict: pd.DataFrame) -> dict[int, tuple]:
     return gaz
 
 
-def _label_core(texts: pd.Series, gaz: dict[int, dict[str, int]],
-                trans: np.ndarray):
-    """Batch body: text -> flat span arrays (rows_of, start, end, cls_idx).
-
-    Rows without a single gazetteer hit are provably all-O (the shape prior
-    W_SHAPE < the O baseline W_O, so only gazetteer emissions can open a
-    span) — they skip the Viterbi DP entirely; the padded tensors cover
-    only hit-bearing rows.
-    """
-    toks, starts, ends, row_id, row_lengths = tokenize_batch(texts)
-    n_tok = len(toks)
-    n_rows = len(texts)
-    nothing = (np.empty(0, np.int64),) * 4
-    if n_tok == 0:
-        return nothing + (n_rows,)
-
-    tok_series = pd.Series(toks, dtype="object")
-    norm_np = tok_series.str.lower().to_numpy()
-    # one keyed-siphash pass over the batch tokens; every n-gram compare
-    # after this is pure uint64 arithmetic (memory-light — the previous
-    # np.char string-concat matcher saturated memory bandwidth with 32
-    # concurrent workers and flattened core-count scaling)
-    tok_h = pd.util.hash_array(norm_np)
-
-    # --- emissions ---------------------------------------------------------
-    em = np.zeros((n_tok, N_TAGS), dtype=np.float32)
-    em[:, _O] = W_O
-
-    # shape features: capitalized token -> weak prior on all B-*
-    first_char = tok_series.str[:1]
-    is_cap = first_char.str.isupper().fillna(False).to_numpy(dtype=bool)
-    for c in ENT_CLASSES:
-        em[is_cap, _B[c]] += W_SHAPE
-
-    # gazetteer n-gram features: fold window hashes, binary-search the
-    # sorted alias-hash table — no string allocation, no object hash map
-    b_tag_of_cls = np.array([_B[c] for c in ENT_CLASSES], dtype=np.int64)
-    i_tag_of_cls = np.array([_I[c] for c in ENT_CLASSES], dtype=np.int64)
-    row_has_hit = np.zeros(n_rows, dtype=bool)
+def gazetteer_hits(tok_h: np.ndarray, row_id: np.ndarray, gaz: Gazetteer):
+    """Yields ``(ln, hit_pos, hit_cls)`` per alias length with a hit: the
+    flat start positions of matching ``ln``-token windows (never crossing a
+    row) and their class indices. Folded window hashes are binary-searched
+    in the sorted alias-hash table — no string allocation."""
+    n_tok = tok_h.size
     for ln, (keys, vals) in gaz.items():
         limit = n_tok - ln + 1
         if limit <= 0:
@@ -157,55 +134,86 @@ def _label_core(texts: pd.Series, gaz: dict[int, dict[str, int]],
         if ln > 1:
             found &= row_id[:limit] == row_id[ln - 1:]  # no row crossing
         hit_pos = np.flatnonzero(found)
-        if hit_pos.size == 0:
-            continue
+        if hit_pos.size:
+            yield ln, hit_pos, vals[pos_c[hit_pos]].astype(np.int64)
+
+
+def _gazetteer_emissions(toks: list[str], row_id: np.ndarray, n_rows: int,
+                         gaz: Gazetteer) -> tuple[np.ndarray, np.ndarray]:
+    """Hand-weighted (n_tok, T) emissions, and which rows have a hit."""
+    tok_series = pd.Series(toks, dtype="object")
+    # one keyed-siphash pass over the batch tokens; every n-gram compare
+    # after this is pure uint64 arithmetic (memory-light — the previous
+    # np.char string-concat matcher saturated memory bandwidth with 32
+    # concurrent workers and flattened core-count scaling)
+    tok_h = pd.util.hash_array(tok_series.str.lower().to_numpy())
+    em = np.zeros((len(toks), N_TAGS), dtype=np.float32)
+    em[:, _O] = W_O
+    # shape features: capitalized token -> weak prior on all B-*
+    is_cap = tok_series.str[:1].str.isupper().fillna(False).to_numpy(
+        dtype=bool)
+    for c in ENT_CLASSES:
+        em[is_cap, _B[c]] += W_SHAPE
+    row_has_hit = np.zeros(n_rows, dtype=bool)
+    for ln, hit_pos, hit_cls in gazetteer_hits(tok_h, row_id, gaz):
         row_has_hit[row_id[hit_pos]] = True
-        hit_cls = vals[pos_c[hit_pos]].astype(np.int64)
-        np.add.at(em, (hit_pos, b_tag_of_cls[hit_cls]), W_GAZ)
+        np.add.at(em, (hit_pos, _B_OF_CLS[hit_cls]), W_GAZ)
         for off in range(1, ln):
-            np.add.at(em, (hit_pos + off, i_tag_of_cls[hit_cls]), W_GAZ)
+            np.add.at(em, (hit_pos + off, _I_OF_CLS[hit_cls]), W_GAZ)
+    return em, row_has_hit
 
-    if not row_has_hit.any():
-        return (np.empty(0, np.int64),) * 4 + (n_rows,)
 
-    # --- subset to hit-bearing rows, pad to (R, L, T), batch Viterbi -------
-    sel = np.flatnonzero(row_has_hit)
-    tok_mask = row_has_hit[row_id]
-    em = em[tok_mask]
-    starts = np.asarray(starts)[tok_mask]
-    ends = np.asarray(ends)[tok_mask]
-    row_id = np.searchsorted(sel, row_id[tok_mask])  # compact row ids
-    row_lengths = row_lengths[sel]
-    n_tok = int(tok_mask.sum())
-    n_rows_sub = sel.size
-
+def pad_rows(em: np.ndarray, row_id: np.ndarray,
+             row_lengths: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Flat (n_tok, T) emissions of non-empty rows ``0..R-1`` -> (R, L, T)
+    Viterbi input (padding forces O at zero cost) and token positions."""
+    n_rows = row_lengths.size
     lmax = int(row_lengths.max())
-    row_start = np.zeros(n_rows_sub, np.int64)
+    row_start = np.zeros(n_rows, np.int64)
     np.cumsum(row_lengths[:-1], out=row_start[1:])
-    pos_in_row = np.arange(n_tok) - row_start[row_id]
-
-    em_pad = np.full((n_rows_sub, lmax, N_TAGS), NEG, dtype=np.float32)
+    pos_in_row = np.arange(em.shape[0]) - row_start[row_id]
+    em_pad = np.full((n_rows, lmax, N_TAGS), NEG, dtype=np.float32)
     em_pad[row_id, pos_in_row] = em
-    # padding steps: force O at zero cost so they never affect real scores
     pad_mask = np.arange(lmax)[None, :] >= row_lengths[:, None]
     em_pad[pad_mask] = np.array([0.0] + [NEG] * (N_TAGS - 1), dtype=np.float32)
+    return em_pad, pos_in_row
 
-    tags_pad = viterbi_batch(em_pad, trans)
 
-    flat = tags_pad[row_id, pos_in_row].astype(np.int64)  # (n_tok,)
-    b_pos, s_char, e_char, cls_i = bio_flat_to_spans(flat, starts, ends)
-    if not b_pos.size:
-        return (np.empty(0, np.int64),) * 4 + (n_rows,)
-    rows_of = sel[row_id[b_pos]]  # back to original row ordinals
-    return rows_of, s_char, e_char, cls_i, n_rows
+def decode_batch(texts: pd.Series, gaz: Gazetteer, trans: np.ndarray,
+                 model=None):
+    """The one batch decode: tokenize -> emissions -> pad -> Viterbi ->
+    ``(tokenize_batch(texts), tok_mask, tags)``: int64 tags of the decoded
+    flat tokens (``tok_mask``; the rest are O).
+
+    ``model is None``: hand-weighted gazetteer emissions; rows without a
+    gazetteer hit are provably all-O (W_SHAPE < W_O, so only gazetteer
+    emissions open a span) and skip the DP. A ``TrainedLabeler`` supplies
+    learned emissions and every non-empty row is decoded."""
+    if model is None:
+        tokenized = tokenize_batch(texts)
+        em, decoded = _gazetteer_emissions(
+            tokenized[0], tokenized[3], len(texts), gaz)
+    else:
+        em, tokenized = model.emissions(texts, gaz)
+        decoded = tokenized[4] > 0
+    row_id, row_lengths = tokenized[3], tokenized[4]
+    tok_mask = decoded[row_id]
+    rows = np.flatnonzero(decoded)
+    if not rows.size:
+        return tokenized, tok_mask, np.empty(0, np.int64)
+    rid = np.searchsorted(rows, row_id[tok_mask])  # compact row ids
+    em_pad, pos_in_row = pad_rows(em[tok_mask], rid, row_lengths[rows])
+    tags = viterbi_batch(em_pad, trans)[rid, pos_in_row].astype(np.int64)
+    return tokenized, tok_mask, tags
 
 
 def viterbi_batch(em_pad: np.ndarray, trans: np.ndarray) -> np.ndarray:
     """Batched Viterbi decode: (R, L, T) emissions + (T, T) transitions ->
     (R, L) int8 tags. The DP runs once per timestep over the whole batch
-    (no per-row Python). Padding rows must carry O-only emissions (the
-    caller sets them up) so they never affect real scores. Shared by the
-    gazetteer labeler and the trained perceptron (operators/train.py)."""
+    (no per-row Python). Padding steps must carry O-only emissions
+    (``pad_rows`` sets them up) so they never affect real scores. Used by
+    ``decode_batch`` for both weight sets and by perceptron training
+    (operators/train.py), with that model's masked transitions."""
     n_rows_sub, lmax, _ = em_pad.shape
     # start constraint: I-* cannot start a sequence
     start_pen = np.zeros(N_TAGS, dtype=np.float32)
@@ -276,46 +284,71 @@ def bio_flat_to_spans(flat: np.ndarray, starts: np.ndarray,
     return b_pos, s_char, e_char, cls_i
 
 
-def label_texts(texts: pd.Series, gaz: dict[int, dict[str, int]],
-                trans: np.ndarray) -> pd.Series:
-    """text -> list[(start, end, ent_type, score)] per row (test surface)."""
-    rows_of, s_char, e_char, cls_i, n_rows = _label_core(texts, gaz, trans)
-    out_lists: list[list[tuple]] = [[] for _ in range(n_rows)]
-    for r, s, e, c in zip(rows_of.tolist(), s_char.tolist(),
+def _spans_per_row(texts: pd.Series, gaz: Gazetteer, trans: np.ndarray,
+                   model, fmt) -> list[list]:
+    """``fmt(start, end, cls_idx)`` of every decoded span, grouped by row."""
+    (_, starts, ends, row_id, _), tok_mask, tags = decode_batch(
+        texts, gaz, trans, model)
+    b_pos, s_char, e_char, cls_i = bio_flat_to_spans(
+        tags, starts[tok_mask], ends[tok_mask])
+    out: list[list] = [[] for _ in range(len(texts))]
+    for r, s, e, c in zip(row_id[tok_mask][b_pos].tolist(), s_char.tolist(),
                           e_char.tolist(), cls_i.tolist()):
-        out_lists[r].append((s, e, ENT_CLASSES[c], 1.0))
-    return pd.Series(out_lists, index=texts.index)
+        out[r].append(fmt(s, e, c))
+    return out
 
 
-def label_texts_packed(texts: pd.Series, gaz: dict[int, dict[str, int]],
-                       trans: np.ndarray) -> pd.Series:
+def label_texts(texts: pd.Series, gaz: Gazetteer, trans: np.ndarray,
+                model=None) -> pd.Series:
+    """text -> list[(start, end, ent_type, score)] per row. ``model``: a
+    ``TrainedLabeler`` whose emissions replace the hand-set weights
+    (``trans`` is then its ``decode_trans()``)."""
+    return pd.Series(_spans_per_row(
+        texts, gaz, trans, model,
+        lambda s, e, c: (s, e, ENT_CLASSES[c], 1.0)), index=texts.index)
+
+
+def label_texts_packed(texts: pd.Series, gaz: Gazetteer, trans: np.ndarray,
+                       model=None) -> pd.Series:
     """text -> 'start:end:cls start:end:cls ...' per row ('' = no spans).
 
-    The packed-string form exists because Arrow-converting a Series of
-    Python list-of-tuples costs more CPU than the labeling itself; one
-    short string per row crosses the Arrow boundary nearly for free and
-    the JVM re-expands it with codegen'd split/transform (see
-    label_transcripts).
+    Arrow-converting a Series of Python list-of-tuples costs more CPU than
+    the labeling itself; one short string per row crosses the Arrow
+    boundary nearly for free and the JVM re-expands it (label_transcripts).
     """
-    rows_of, s_char, e_char, cls_i, n_rows = _label_core(texts, gaz, trans)
-    parts: list[list[str]] = [[] for _ in range(n_rows)]
-    for r, s, e, c in zip(rows_of.tolist(), s_char.tolist(),
-                          e_char.tolist(), cls_i.tolist()):
-        parts[r].append(f"{s}:{e}:{c}")
-    return pd.Series([" ".join(p) for p in parts], index=texts.index)
+    return pd.Series([" ".join(p) for p in _spans_per_row(
+        texts, gaz, trans, model, lambda s, e, c: f"{s}:{e}:{c}")],
+        index=texts.index)
+
+
+def spread_for(spark: SparkSession, df: DataFrame, model=None) -> DataFrame:
+    """The labeler's input, spread over the cores for trained weights: that
+    decode costs ~13x the gazetteer's per row, so an under-partitioned
+    input serializes it (measured 40s single-core vs 3s spread at sf0.1).
+    Not done in the scan, where it taxes every consumer (see
+    pipeline.read_transcripts). A no-op without a model, so a streaming
+    frame is never asked for its partitions."""
+    if model is None:
+        return df
+    n = spark.sparkContext.defaultParallelism
+    return df if df.rdd.getNumPartitions() >= n else df.repartition(n)
 
 
 def label_transcripts(spark: SparkSession, transcripts: DataFrame,
-                      candidate_dict: pd.DataFrame) -> DataFrame:
+                      candidate_dict: pd.DataFrame,
+                      model=None) -> DataFrame:
     """transcripts -> + spans column (array<struct<start,end,ent_type,score>>).
 
-    The scalar pandas UDF (gazetteer shipped as a Spark broadcast) emits
-    packed span strings; the struct array is rebuilt JVM-side with
+    The scalar pandas UDF (gazetteer, transitions and the optional
+    ``TrainedLabeler`` shipped as one Spark broadcast) emits packed span
+    strings; the struct array is rebuilt JVM-side with
     whole-stage-codegen'd split/transform — identical schema and values
-    to a direct SPANS_ARRAY UDF over ``label_texts`` (tests pin both
-    equal)."""
+    to a direct SPANS_ARRAY UDF over ``label_texts`` for both weight sets
+    (tests pin them equal)."""
+    transcripts = spread_for(spark, transcripts, model)
+    trans = build_transitions() if model is None else model.decode_trans()
     bc = spark.sparkContext.broadcast(
-        (build_gazetteer(candidate_dict), build_transitions()))
+        (build_gazetteer(candidate_dict), trans, model))
 
     @F.pandas_udf("string")
     def label_spans_packed(texts: pd.Series) -> pd.Series:

@@ -90,8 +90,8 @@ def turn_digests(spark: SparkSession, labeled: DataFrame,
     structs once more on the way back; job CPU counters showed the
     executor threads ~87% idle waiting on exactly this traffic. Inlining
     halves the Arrow volume: text crosses once, spans never leave Python.
-    ``"trained"`` uses ``model`` (operators/train.TrainedLabeler) with the
-    same decode the standalone trained labeler uses. Default ``None``
+    It is ``label_texts`` with ``model`` (a TrainedLabeler), which
+    ``"trained"`` requires and every other mode rejects. Default ``None``
     keeps the two-UDF form (consumes a ``spans`` column) — the shape the
     standalone-labeled intermediates already have.
 
@@ -117,9 +117,17 @@ def turn_digests(spark: SparkSession, labeled: DataFrame,
         link_map = {k: canon.get(v, v) for k, v in link_map.items()}
     pred_map = predicates_dict(predicates)
 
+    if (inline_labeler == "trained") != (model is not None):
+        raise ValueError(
+            f"inline_labeler={inline_labeler!r} with model={model is not None}"
+            ": 'trained' needs a model and a model needs 'trained'")
     gaz = trans = None
     if inline_labeler is not None:
-        from kgpipe.operators.labeler import build_gazetteer, build_transitions
+        from kgpipe.operators.labeler import (
+            build_gazetteer,
+            build_transitions,
+            spread_for,
+        )
 
         if "spans" in labeled.columns:
             # inline mode RE-labels inside the digest UDF: accepting a
@@ -131,12 +139,10 @@ def turn_digests(spark: SparkSession, labeled: DataFrame,
                 "but the input already has a 'spans' column — pass the "
                 "bare transcripts, or drop inline_labeler to consume the "
                 "existing spans")
+        labeled = spread_for(spark, labeled, model)
         gaz = build_gazetteer(candidate_dict)
-        trans = build_transitions()
-        if inline_labeler == "trained" and model is None:
-            raise ValueError("inline_labeler='trained' needs a model")
-    bc = spark.sparkContext.broadcast(
-        (link_map, pred_map, gaz, trans, model, inline_labeler))
+        trans = build_transitions() if model is None else model.decode_trans()
+    bc = spark.sparkContext.broadcast((link_map, pred_map, gaz, trans, model))
 
     # The UDF returns a 0-or-1-element ARRAY per turn and the caller
     # explodes it, instead of a struct + `last_ent IS NOT NULL` filter:
@@ -156,15 +162,11 @@ def turn_digests(spark: SparkSession, labeled: DataFrame,
         return " ".join(s.lower().split())
 
     def _digest_batch(texts: pd.Series, spans_col) -> pd.Series:
-        link, preds, g, tr, mdl, mode = bc.value
-        if mode == "gaz":
+        link, preds, g, tr, mdl = bc.value
+        if g is not None:
             from kgpipe.operators.labeler import label_texts
 
-            spans_col = label_texts(texts, g, tr)
-        elif mode == "trained":
-            from kgpipe.operators.train import decode_spans
-
-            spans_col = decode_spans(texts, mdl, g)
+            spans_col = label_texts(texts, g, tr, mdl)
         out: list[list[dict]] = []
         for text, spans in zip(texts, spans_col):
             linked = []

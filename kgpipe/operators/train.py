@@ -23,8 +23,10 @@ shaped:
 Training runs driver-side over a sample of turns (model fitting is
 dwarfed by corpus size at 100 TB — you fit on a sampled slice, then
 broadcast the learned weights, ~9 MB, exactly like the gazetteer).
-Inference is the same scalar Arrow UDF shape as the untrained labeler, so
-`label_transcripts_trained` is a drop-in for `label_transcripts`.
+Inference is the labeler's one batch decode (``labeler.decode_batch``)
+with a ``TrainedLabeler`` as its learned emission weights, passed as
+``model`` to ``label_texts`` and ``label_transcripts`` or as the
+pipeline's ``labeler_model``.
 """
 
 from __future__ import annotations
@@ -33,23 +35,20 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from kgpipe.functions.tokenize import tokenize_batch
 from kgpipe.operators.labeler import (
     NEG,
     N_TAGS,
-    _B,
-    _fold_hashes,
-    _I,
-    bio_flat_to_spans,
+    Gazetteer,
     build_gazetteer,
     build_transitions,
-    label_texts,
+    decode_batch,
+    gazetteer_hits,
+    pad_rows,
     viterbi_batch,
 )
-from kgpipe.schemas import ENT_CLASSES, SPANS_ARRAY
+from kgpipe.schemas import ENT_CLASSES
 
 N_CLS = len(ENT_CLASSES)
 
@@ -92,6 +91,14 @@ class TrainedLabeler:
         masked = self.trans.copy()
         masked[build_transitions() <= NEG] = NEG
         return masked
+
+    def emissions(self, texts: pd.Series, gaz: Gazetteer):
+        """Learned (n_tok, T) emission scores of a batch, and its
+        ``tokenize_batch`` arrays — the decode's trained weight set."""
+        (feat_pos, feat_idx), tokenized = extract_features(
+            texts, gaz, self.D, clusters=self.clusters)
+        return _emissions(feat_pos, feat_idx, self.W,
+                          len(tokenized[0])), tokenized
 
 
 def _hashed(h: np.ndarray, salt: np.uint64, D: int) -> np.ndarray:
@@ -160,7 +167,7 @@ def build_word_clusters(texts: pd.Series, n_clusters: int = 32,
     return {w: int(assign[i]) for w, i in w2i.items()}
 
 
-def extract_features(texts: pd.Series, gaz: dict, D: int,
+def extract_features(texts: pd.Series, gaz: Gazetteer, D: int,
                      gaz_dropout_mod: int = 0,
                      clusters: dict[str, int] | None = None):
     """Batch feature extraction -> COO (feat_pos, feat_idx) over flat
@@ -249,28 +256,14 @@ def extract_features(texts: pd.Series, gaz: dict, D: int,
         if p.size:
             add(p, np.full(p.size, slot, np.int64))
 
-    # gazetteer indicators: same fold/binary-search machinery as the
-    # dictionary labeler, but the WEIGHT of a hit is learned
-    for ln, (keys, vals) in gaz.items():
-        limit = n_tok - ln + 1
-        if limit <= 0:
-            continue
-        h = _fold_hashes(tok_h, ln, limit)
-        pos = np.searchsorted(keys, h)
-        pos_c = np.minimum(pos, keys.size - 1)
-        found = keys[pos_c] == h
-        if ln > 1:
-            found &= row_id[:limit] == row_id[ln - 1:]
-        hit = np.flatnonzero(found)
-        if hit.size == 0:
-            continue
+    # gazetteer indicators: the dictionary labeler's hit matcher, but the
+    # WEIGHT of a hit is learned
+    for ln, hit, hc in gazetteer_hits(tok_h, row_id, gaz):
         if gaz_dropout_mod > 0:
             with np.errstate(over="ignore"):
                 occ = tok_h[hit] + row_id[hit].astype(np.uint64) * _FNV_OCC
-            hit = hit[occ % np.uint64(gaz_dropout_mod) != 0]
-            if hit.size == 0:
-                continue
-        hc = vals[pos_c[hit]].astype(np.int64)
+            kept = occ % np.uint64(gaz_dropout_mod) != 0
+            hit, hc = hit[kept], hc[kept]
         add(hit, _F_GAZ_B + hc)
         for off in range(1, ln):
             add(hit + off, _F_GAZ_I + hc)
@@ -280,34 +273,15 @@ def extract_features(texts: pd.Series, gaz: dict, D: int,
     return (feat_pos, feat_idx), (toks, starts, ends, row_id, row_lengths)
 
 
-def silver_tags(texts: pd.Series, candidate_dict: pd.DataFrame,
-                tokenized) -> np.ndarray:
-    """Auto-annotation (SURVEY §2C step 3): dictionary-labeler spans ->
-    flat per-token BIO tag ids aligned with ``tokenized``."""
-    toks, starts, ends, row_id, row_lengths = tokenized
-    gaz = build_gazetteer(candidate_dict)
-    spans = label_texts(texts, gaz, build_transitions())
-    n_tok = len(toks)
-    tags = np.zeros(n_tok, np.int64)
-    row_start = np.zeros(len(texts), np.int64)
-    np.cumsum(row_lengths[:-1], out=row_start[1:])
-    cls_idx = {c: i for i, c in enumerate(ENT_CLASSES)}
-    for r, row_spans in enumerate(spans):
-        lo, n = row_start[r], row_lengths[r]
-        if not row_spans or n == 0:
-            continue
-        rs, re_ = starts[lo:lo + n], ends[lo:lo + n]
-        for (cs, ce, cls, _score) in row_spans:
-            ci = cls_idx[cls]
-            first = int(np.searchsorted(rs, cs))
-            if first >= n or rs[first] != cs:
-                continue
-            tags[lo + first] = _B[ENT_CLASSES[ci]]
-            j = first + 1
-            while j < n and re_[j] <= ce:
-                tags[lo + j] = _I[ENT_CLASSES[ci]]
-                j += 1
-    return tags
+def silver_tags(texts: pd.Series, candidate_dict: pd.DataFrame) -> np.ndarray:
+    """Auto-annotation (SURVEY §2C step 3): the dictionary labeler's
+    decoded tags as flat per-token BIO tag ids, aligned with
+    ``tokenize_batch(texts)``."""
+    _tokenized, tok_mask, tags = decode_batch(
+        texts, build_gazetteer(candidate_dict), build_transitions())
+    out = np.zeros(tok_mask.size, np.int64)
+    out[tok_mask] = tags
+    return out
 
 
 def _emissions(feat_pos, feat_idx, W, n_tok):
@@ -320,19 +294,6 @@ def _emissions(feat_pos, feat_idx, W, n_tok):
         em[:, t] = np.bincount(feat_pos, weights=W[feat_idx, t],
                                minlength=n_tok)
     return em
-
-
-def _pad(em, row_id, row_lengths):
-    n_rows = row_lengths.size
-    lmax = int(row_lengths.max())
-    row_start = np.zeros(n_rows, np.int64)
-    np.cumsum(row_lengths[:-1], out=row_start[1:])
-    pos_in_row = np.arange(em.shape[0]) - row_start[row_id]
-    em_pad = np.full((n_rows, lmax, N_TAGS), NEG, np.float32)
-    em_pad[row_id, pos_in_row] = em
-    pad_mask = np.arange(lmax)[None, :] >= row_lengths[:, None]
-    em_pad[pad_mask] = np.array([0.0] + [NEG] * (N_TAGS - 1), np.float32)
-    return em_pad, pos_in_row
 
 
 def sample_texts(parquet_path: str, n: int, seed: int = 20260817) -> pd.Series:
@@ -417,7 +378,7 @@ def fit_perceptron(texts: pd.Series, candidate_dict: pd.DataFrame,
     n_tok = len(toks)
     if n_tok == 0:
         raise ValueError("no tokens to train on")
-    gold = silver_tags(texts, candidate_dict, tokenized)
+    gold = silver_tags(texts, candidate_dict)
     keep = row_lengths > 0
     row_lengths_nz = row_lengths[keep]
     # compact row ids over non-empty rows only (padding math needs it)
@@ -438,7 +399,7 @@ def fit_perceptron(texts: pd.Series, candidate_dict: pd.DataFrame,
     converged = False
     for _ep in range(epochs):
         em = _emissions(feat_pos, feat_idx, W, n_tok)
-        em_pad, pos_in_row = _pad(em, rid, row_lengths_nz)
+        em_pad, pos_in_row = pad_rows(em, rid, row_lengths_nz)
         masked = Tr.copy()
         masked[bio_mask <= NEG] = NEG
         tags_pad = viterbi_batch(em_pad, masked)
@@ -476,31 +437,6 @@ def fit_perceptron(texts: pd.Series, candidate_dict: pd.DataFrame,
     return TrainedLabeler(W=Wsum / max(ran, 1), trans=Trsum / max(ran, 1),
                           D=D, epochs_run=ran, train_token_acc=float(acc),
                           clusters=clusters)
-
-
-def decode_spans(texts: pd.Series, model: TrainedLabeler,
-                 gaz: dict) -> pd.Series:
-    """text -> list[(start, end, ent_type, score)] under the trained model."""
-    texts = texts.reset_index(drop=True)
-    (feat_pos, feat_idx), tokenized = extract_features(
-        texts, gaz, model.D, clusters=model.clusters)
-    toks, starts, ends, row_id, row_lengths = tokenized
-    out: list[list[tuple]] = [[] for _ in range(len(texts))]
-    n_tok = len(toks)
-    if n_tok == 0:
-        return pd.Series(out, index=texts.index)
-    keep = np.flatnonzero(row_lengths > 0)
-    rid = np.searchsorted(keep, row_id)
-    em = _emissions(feat_pos, feat_idx, model.W, n_tok)
-    em_pad, pos_in_row = _pad(em, rid, row_lengths[keep])
-    tags_pad = viterbi_batch(em_pad, model.decode_trans())
-    flat = tags_pad[rid, pos_in_row].astype(np.int64)
-    b_pos, s_char, e_char, cls_i = bio_flat_to_spans(
-        flat, np.asarray(starts), np.asarray(ends))
-    for bp, s, e, c in zip(b_pos.tolist(), s_char.tolist(),
-                           e_char.tolist(), cls_i.tolist()):
-        out[keep[rid[bp]]].append((int(s), int(e), ENT_CLASSES[c], 1.0))
-    return pd.Series(out, index=texts.index)
 
 
 MODEL_FORMAT_VERSION = 2  # bump when features / training semantics change
@@ -570,31 +506,3 @@ def fit_or_load(texts: pd.Series, candidate_dict: pd.DataFrame,
     os.makedirs(cache_dir, exist_ok=True)
     save_model(model, path)
     return model
-
-
-def label_transcripts_trained(spark: SparkSession, transcripts: DataFrame,
-                              model: TrainedLabeler,
-                              candidate_dict: pd.DataFrame) -> DataFrame:
-    """Drop-in for ``label_transcripts`` using learned weights: the model
-    (~9 MB) + gazetteer broadcast once, scalar Arrow UDF per batch —
-    identical output schema, so mentions/linking/triples run unchanged.
-
-    The perceptron decode is ~13x the per-row cost of the gazetteer
-    decoder, so a low-partition input (single-file fixture, one parquet
-    row group) serializes it: measured 40s single-core vs 3s spread at
-    sf0.1. Rebalance HERE — not in the scan, where it taxes every other
-    consumer (see read_transcripts) — and only when the input is under-
-    partitioned; at real scale the scan yields far more splits than
-    executors and this branch never fires."""
-    parallelism = spark.sparkContext.defaultParallelism
-    if transcripts.rdd.getNumPartitions() < parallelism:
-        transcripts = transcripts.repartition(parallelism)
-    gaz = build_gazetteer(candidate_dict)
-    bc = spark.sparkContext.broadcast((model, gaz))
-
-    @F.pandas_udf(SPANS_ARRAY)
-    def label_spans_trained(texts: pd.Series) -> pd.Series:
-        mdl, g = bc.value
-        return decode_spans(texts, mdl, g)
-
-    return transcripts.withColumn("spans", label_spans_trained(F.col("text")))

@@ -33,11 +33,11 @@ def read_transcripts(spark: SparkSession, path: str) -> DataFrame:
     gazetteer pipeline at sf0.1 measured it as a pure loss (13-17s
     without vs 23-61s with at local[32] — the extra shuffle plus this
     host's >8-busy-thread contention). The one stage that genuinely
-    needs input parallelism — the trained-perceptron Arrow UDF, ~13x
-    the per-row cost of the gazetteer decoder — rebalances its own
-    input in ``label_transcripts_trained``. At real scale neither path
-    repartitions: a 10^12-turn table scans as orders of magnitude more
-    splits than executors."""
+    needs input parallelism — labeling with trained weights, ~13x the
+    per-row cost of the gazetteer decoder — rebalances its own input
+    (``labeler.spread_for``). At real scale neither path repartitions: a
+    10^12-turn table scans as orders of magnitude more splits than
+    executors."""
     return spark.read.schema(TRANSCRIPTS).parquet(path)
 
 
@@ -77,27 +77,6 @@ def canon_map_for(spark: SparkSession,
     if len(candidate_dict) > LOCAL_CANON_MAX_DICT:
         return build_canon_map(dict_to_df(spark, candidate_dict)).toPandas()
     return build_canon_map_local(candidate_dict)
-
-
-def _label(spark: SparkSession, transcripts: DataFrame,
-           candidate_dict: pd.DataFrame, labeler_model=None) -> DataFrame:
-    """The gazetteer labeler, or the trained one when a model is given."""
-    if labeler_model is None:
-        return label_transcripts(spark, transcripts, candidate_dict)
-    from kgpipe.operators.train import label_transcripts_trained
-
-    return label_transcripts_trained(
-        spark, transcripts, labeler_model, candidate_dict)
-
-
-def _inline_source(spark: SparkSession, transcripts: DataFrame,
-                   labeler_model=None) -> DataFrame:
-    """Input of a digest UDF that labels inline: the trained decode (~13x
-    the gazetteer's per-row cost) rebalances under-partitioned input."""
-    n = spark.sparkContext.defaultParallelism
-    if labeler_model is None or transcripts.rdd.getNumPartitions() >= n:
-        return transcripts
-    return transcripts.repartition(n)
 
 
 class _LazyOutputs(dict):
@@ -155,8 +134,7 @@ def run_pipeline(
     # span structs back in between. Inline = one ArrowEvalPython, half the
     # Arrow traffic.
     fused = functools.partial(
-        extract_triples_fused, spark,
-        _inline_source(spark, transcripts, labeler_model), candidate_dict,
+        extract_triples_fused, spark, transcripts, candidate_dict,
         window=window, predicates=predicates, model=labeler_model,
         inline_labeler="gaz" if labeler_model is None else "trained")
     canon_pdf = canon_map_for(spark, candidate_dict)
@@ -165,7 +143,7 @@ def run_pipeline(
     # counts (MemoryStore unroll contention: 46s vs 16s to build the same
     # 2.8M-row stage at local[32]).
     out = _LazyOutputs({
-        "labeled": lambda: _label(
+        "labeled": lambda: label_transcripts(
             spark, transcripts, candidate_dict, labeler_model),
         "mentions": lambda: extract_mentions(out["labeled"]),
         "linked": lambda: link_entities(
@@ -251,10 +229,8 @@ def run_pipeline_checkpointed(
 
     def _digests(df: DataFrame) -> DataFrame:
         return turn_digests(
-            spark, _inline_source(spark, df, labeler_model),
-            candidate_dict, predicates=pred_map,
-            canon=canon_d, inline_labeler=inline_mode,
-            model=labeler_model)
+            spark, df, candidate_dict, predicates=pred_map, canon=canon_d,
+            inline_labeler=inline_mode, model=labeler_model)
 
     run = CheckpointedRun(spark, run_dir)
     s1 = run.stage("digests", transcripts, _digests,

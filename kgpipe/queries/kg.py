@@ -165,12 +165,12 @@ def kg_span_eval_per_class(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     from kgpipe.operators.evaluate import per_class_span_eval
+    from kgpipe.operators.labeler import label_transcripts
     from kgpipe.operators.mentions import extract_mentions
     from kgpipe.operators.train import (
         dict_holdout_split,
         drop_texts_mentioning,
         fit_or_load,
-        label_transcripts_trained,
         sample_texts,
     )
     from kgpipe.pipeline import read_transcripts
@@ -199,7 +199,7 @@ def kg_span_eval_per_class(spark: SparkSession, sf_dir: str) -> DataFrame:
     _triples(spark, sf_dir)
     gold_m = _CACHE[(_session_key(spark), _scale_for(sf_dir), "mentions")]
 
-    pred_m = extract_mentions(label_transcripts_trained(spark, t, model, cd))
+    pred_m = extract_mentions(label_transcripts(spark, t, cd, model))
     ev_all = per_class_span_eval(pred_m, gold_m).withColumn(
         "slice", F.lit("all"))
 
@@ -215,7 +215,7 @@ def kg_span_eval_per_class(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.split(F.lower("text"), "[^a-z0-9]+"),
         F.array(*[F.lit(w) for w in first_toks])))
     pred_wh = extract_mentions(
-        label_transcripts_trained(spark, cand, model_wh, cd_train)).filter(is_wh)
+        label_transcripts(spark, cand, cd_train, model_wh)).filter(is_wh)
     ev_wh = per_class_span_eval(pred_wh, gold_m.filter(is_wh)).withColumn(
         "slice", F.lit("withheld"))
 

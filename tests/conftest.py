@@ -20,6 +20,24 @@ def unit_fixture_dir() -> str:
 
 
 @pytest.fixture(scope="session")
+def unit_model(unit_fixture_dir):
+    """A perceptron fit on a sample of the unit fixture (disk-cached next
+    to the fixture, so fresh processes skip training)."""
+    import os
+
+    import pandas as pd
+
+    from kgpipe.operators.train import fit_or_load, sample_texts
+
+    cd = pd.read_parquet(
+        os.path.join(unit_fixture_dir, "candidate_dict.parquet"))
+    return fit_or_load(
+        sample_texts(os.path.join(unit_fixture_dir, "transcripts.parquet"),
+                     500),
+        cd, cache_dir=os.path.join(unit_fixture_dir, "models"))
+
+
+@pytest.fixture(scope="session")
 def sf001_dir() -> str:
     return "/root/testdata/sf0.001"
 

@@ -7,14 +7,35 @@ product builds every triple from turn digests
 fused == reference gates compare it against. ``_lev`` is the plain
 Levenshtein DP the vectorized canon verify kernel
 (kgpipe/operators/canon.py) is checked against.
+
+``decode_spans`` (with its padding helper ``_pad``) is the separate
+trained-labeler decode and ``silver_tags`` the per-row loop that re-derives
+BIO tags from the dictionary labeler's char spans; the labeler's one batch
+decode (kgpipe/operators/labeler.py ``decode_batch``) is checked against
+them.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kgpipe.operators.labeler import (
+    NEG,
+    N_TAGS,
+    _B,
+    _I,
+    bio_flat_to_spans,
+    build_gazetteer,
+    build_transitions,
+    label_texts,
+    viterbi_batch,
+)
+from kgpipe.operators.train import TrainedLabeler, _emissions, extract_features
 from kgpipe.predicates import predicates_df
+from kgpipe.schemas import ENT_CLASSES
 
 
 def _norm(col):
@@ -189,3 +210,71 @@ def _lev(a: str, b: str, cap: int) -> int:
             return cap + 1
         prev = cur
     return prev[lb]
+
+
+def silver_tags(texts: pd.Series, candidate_dict: pd.DataFrame,
+                tokenized) -> np.ndarray:
+    """Auto-annotation (SURVEY §2C step 3): dictionary-labeler spans ->
+    flat per-token BIO tag ids aligned with ``tokenized``."""
+    toks, starts, ends, row_id, row_lengths = tokenized
+    gaz = build_gazetteer(candidate_dict)
+    spans = label_texts(texts, gaz, build_transitions())
+    n_tok = len(toks)
+    tags = np.zeros(n_tok, np.int64)
+    row_start = np.zeros(len(texts), np.int64)
+    np.cumsum(row_lengths[:-1], out=row_start[1:])
+    cls_idx = {c: i for i, c in enumerate(ENT_CLASSES)}
+    for r, row_spans in enumerate(spans):
+        lo, n = row_start[r], row_lengths[r]
+        if not row_spans or n == 0:
+            continue
+        rs, re_ = starts[lo:lo + n], ends[lo:lo + n]
+        for (cs, ce, cls, _score) in row_spans:
+            ci = cls_idx[cls]
+            first = int(np.searchsorted(rs, cs))
+            if first >= n or rs[first] != cs:
+                continue
+            tags[lo + first] = _B[ENT_CLASSES[ci]]
+            j = first + 1
+            while j < n and re_[j] <= ce:
+                tags[lo + j] = _I[ENT_CLASSES[ci]]
+                j += 1
+    return tags
+
+
+def _pad(em, row_id, row_lengths):
+    n_rows = row_lengths.size
+    lmax = int(row_lengths.max())
+    row_start = np.zeros(n_rows, np.int64)
+    np.cumsum(row_lengths[:-1], out=row_start[1:])
+    pos_in_row = np.arange(em.shape[0]) - row_start[row_id]
+    em_pad = np.full((n_rows, lmax, N_TAGS), NEG, np.float32)
+    em_pad[row_id, pos_in_row] = em
+    pad_mask = np.arange(lmax)[None, :] >= row_lengths[:, None]
+    em_pad[pad_mask] = np.array([0.0] + [NEG] * (N_TAGS - 1), np.float32)
+    return em_pad, pos_in_row
+
+
+def decode_spans(texts: pd.Series, model: TrainedLabeler,
+                 gaz: dict) -> pd.Series:
+    """text -> list[(start, end, ent_type, score)] under the trained model."""
+    texts = texts.reset_index(drop=True)
+    (feat_pos, feat_idx), tokenized = extract_features(
+        texts, gaz, model.D, clusters=model.clusters)
+    toks, starts, ends, row_id, row_lengths = tokenized
+    out: list[list[tuple]] = [[] for _ in range(len(texts))]
+    n_tok = len(toks)
+    if n_tok == 0:
+        return pd.Series(out, index=texts.index)
+    keep = np.flatnonzero(row_lengths > 0)
+    rid = np.searchsorted(keep, row_id)
+    em = _emissions(feat_pos, feat_idx, model.W, n_tok)
+    em_pad, pos_in_row = _pad(em, rid, row_lengths[keep])
+    tags_pad = viterbi_batch(em_pad, model.decode_trans())
+    flat = tags_pad[rid, pos_in_row].astype(np.int64)
+    b_pos, s_char, e_char, cls_i = bio_flat_to_spans(
+        flat, np.asarray(starts), np.asarray(ends))
+    for bp, s, e, c in zip(b_pos.tolist(), s_char.tolist(),
+                           e_char.tolist(), cls_i.tolist()):
+        out[keep[rid[bp]]].append((int(s), int(e), ENT_CLASSES[c], 1.0))
+    return pd.Series(out, index=texts.index)

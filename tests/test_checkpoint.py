@@ -10,7 +10,12 @@ import os
 import pytest
 
 from kgpipe.fixtures.generator import materialize
-from kgpipe.pipeline import run_from_dir, run_pipeline_checkpointed
+from kgpipe.pipeline import (
+    read_transcripts,
+    run_from_dir,
+    run_pipeline,
+    run_pipeline_checkpointed,
+)
 
 
 def _triple_set(df):
@@ -146,7 +151,8 @@ def test_checkpointed_trained_labeler_and_model_invalidation(
         spark, fixture_dir, tmp_path_factory):
     """--trained-labeler must work through the checkpointed path (round-2
     review: the flag was silently ignored with --checkpoint-dir), and a
-    different labeler model must invalidate the digests checkpoint."""
+    different labeler model must invalidate the digests checkpoint. Its
+    triples equal run_pipeline's with the same model."""
     import pandas as pd
 
     from kgpipe.operators.evaluate import evaluate_triples
@@ -163,6 +169,15 @@ def test_checkpointed_trained_labeler_and_model_invalidation(
         os.path.join(fixture_dir, "gold_triples.parquet"))
     m = evaluate_triples(out["triples"], gold)
     assert m["precision"] >= 0.95 and m["recall"] >= 0.95, m
+    # the staged digests label through the same trained decode as the
+    # plain product plan: equal triples, conf included
+    plain = run_pipeline(
+        spark, read_transcripts(
+            spark, os.path.join(fixture_dir, "transcripts.parquet")),
+        cd, labeler_model=model)["triples"]
+    cols = ["subj", "pred", "obj", "conv_id", "turn_idx", "conf"]
+    assert ({tuple(r) for r in out["triples"].select(cols).collect()}
+            == {tuple(r) for r in plain.select(cols).collect()})
     # switching to the gazetteer labeler must NOT reuse the trained-model
     # checkpoint: the digests stage recomputes under a different fingerprint
     out2 = run_pipeline_checkpointed(spark, fixture_dir, run_dir)

@@ -1,5 +1,6 @@
 import numpy as np
 import pandas as pd
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -65,10 +66,13 @@ def test_empty_batch():
     assert list(_spans(["", None])) == [[], []]
 
 
-def test_packed_path_equals_direct_udf_path(spark, unit_fixture_dir):
+@pytest.mark.parametrize("weights", ["gazetteer", "trained"])
+def test_packed_path_equals_direct_udf_path(spark, unit_fixture_dir,
+                                            request, weights):
     """label_transcripts ships spans as packed strings rebuilt JVM-side;
-    this must equal the direct SPANS_ARRAY UDF row-for-row (the docstring
-    claims it — pin it, don't imply it via e2e P/R)."""
+    this must equal the direct SPANS_ARRAY UDF over label_texts row-for-row
+    for both weight sets (the docstring claims it — pin it, don't imply it
+    via e2e P/R)."""
     import os
 
     from pyspark.sql import functions as F
@@ -81,14 +85,17 @@ def test_packed_path_equals_direct_udf_path(spark, unit_fixture_dir):
         spark, os.path.join(unit_fixture_dir, "transcripts.parquet"))
     cd = pd.read_parquet(
         os.path.join(unit_fixture_dir, "candidate_dict.parquet"))
+    model = (request.getfixturevalue("unit_model")
+             if weights == "trained" else None)
 
-    packed = label_transcripts(spark, t, cd).select(
+    packed = label_transcripts(spark, t, cd, model).select(
         "conv_id", "turn_idx", "spans")
-    gaz, trans = build_gazetteer(cd), build_transitions()
+    gaz = build_gazetteer(cd)
+    trans = build_transitions() if model is None else model.decode_trans()
 
     @F.pandas_udf(SPANS_ARRAY)
     def direct_udf(texts: pd.Series) -> pd.Series:
-        return label_texts(texts, gaz, trans)
+        return label_texts(texts, gaz, trans, model)
 
     direct = t.select(
         "conv_id", "turn_idx", direct_udf(F.col("text")).alias("spans"))
@@ -100,7 +107,9 @@ def test_packed_path_equals_direct_udf_path(spark, unit_fixture_dir):
             for r in df.collect()
         }
 
-    assert rows(packed) == rows(direct)
+    got = rows(packed)
+    assert any(sp for *_, sp in got), "fixture must produce spans"
+    assert got == rows(direct)
 
 
 # -- build_gazetteer: batch build == the per-alias reference ----------------

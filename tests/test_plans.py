@@ -169,6 +169,26 @@ def test_fused_triples_single_corpus_pass(spark):
     assert len(re.findall(r"ArrowEvalPython", p)) == 1, p[:1200]
 
 
+def test_trained_product_single_arrow_udf(spark, unit_model):
+    """With trained weights the product plan keeps its shape: one scan
+    and ONE ArrowEvalPython (labeling inlined into the digest UDF)."""
+    import os
+    import re
+
+    import pandas as pd
+
+    from kgpipe.fixtures.generator import materialize
+    from kgpipe.pipeline import read_transcripts, run_pipeline
+
+    fx = materialize("unit")
+    t = read_transcripts(spark, os.path.join(fx, "transcripts.parquet"))
+    cd = pd.read_parquet(os.path.join(fx, "candidate_dict.parquet"))
+    out = run_pipeline(spark, t, cd, labeler_model=unit_model)
+    p = out["triples"]._jdf.queryExecution().executedPlan().toString()
+    assert p.count("transcripts.parquet") == 1, p[:1200]
+    assert len(re.findall(r"ArrowEvalPython", p)) == 1, p[:1200]
+
+
 def test_labeler_udf_executes_once_in_mention_plans(spark):
     """Each intermediate plan must run the labeler UDF exactly once per
     scan. Plain explode over a UDF-derived span column triggers

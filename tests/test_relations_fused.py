@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import os
 
+import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -58,28 +59,45 @@ def test_fused_chunked_equals_unchunked(spark, unit):
         assert got == ref, f"chunk={c}"
 
 
-def test_fused_equals_exploded_trained(spark, unit_fixture_dir):
-    from kgpipe.operators.train import (
-        fit_or_load,
-        label_transcripts_trained,
-        sample_texts,
-    )
-
+def test_fused_equals_exploded_trained(spark, unit_fixture_dir, unit_model):
+    """Trained weights: the exploded reference over label_transcripts'
+    spans == the digest path over the same spans == the digest path
+    labeling inline."""
     tpath = os.path.join(unit_fixture_dir, "transcripts.parquet")
     cd = pd.read_parquet(
         os.path.join(unit_fixture_dir, "candidate_dict.parquet"))
-    model = fit_or_load(
-        sample_texts(tpath, 500), cd,
-        cache_dir=os.path.join(unit_fixture_dir, "models"))
     t = read_transcripts(spark, tpath)
-    labeled = label_transcripts_trained(spark, t, model, cd).cache()
+    labeled = label_transcripts(spark, t, cd, unit_model).cache()
     linked = link_entities(
         extract_mentions(labeled),
         dict_to_df(spark, top1_dict(cd)), k=1, ranked=False)
     ref = _tset(extract_triples(spark, linked, window=3, chunk=None))
+    assert ref, "fixture must produce triples"
     got = _tset(extract_triples_fused(
         spark, labeled, cd, window=3, chunk=None))
     assert got == ref
+    inline = _tset(extract_triples_fused(
+        spark, t, cd, window=3, chunk=None, inline_labeler="trained",
+        model=unit_model))
+    assert inline == ref
+
+
+@pytest.mark.parametrize("mode,with_model", [
+    ("gaz", True), ("trained", False), (None, True)])
+def test_inline_labeler_and_model_must_agree(spark, unit, mode, with_model):
+    """A model goes with inline_labeler='trained' only, and 'trained'
+    needs one: a model passed with 'gaz' (or with no inline labeling) is
+    an error, not silently ignored."""
+    from kgpipe.operators.labeler import N_TAGS, build_transitions
+    from kgpipe.operators.train import TrainedLabeler
+
+    labeled, _linked, cd = unit
+    model = TrainedLabeler(
+        W=np.zeros((64, N_TAGS), np.float32), trans=build_transitions(),
+        D=64, epochs_run=0, train_token_acc=0.0) if with_model else None
+    src = labeled.drop("spans") if mode else labeled
+    with pytest.raises(ValueError, match="model"):
+        turn_digests(spark, src, cd, inline_labeler=mode, model=model)
 
 
 def _edge_corpus(spark):

@@ -1,7 +1,8 @@
 """Trained-labeler gates (SURVEY.md §2C steps 3-5): the averaged structured
 perceptron must reproduce the dictionary auto-annotations on HELD-OUT
 conversations at span-level P/R >= 0.95 — with every weight learned, none
-hand-set — and slot into the pipeline as a drop-in labeler."""
+hand-set — and label through the same decode, Spark labeler and pipeline
+as the gazetteer weights."""
 
 from __future__ import annotations
 
@@ -10,13 +11,14 @@ import os
 import numpy as np
 import pandas as pd
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
+from reference_plans import decode_spans
+from reference_plans import silver_tags as silver_tags_reference
 
+from kgpipe.functions.tokenize import tokenize_batch
 from kgpipe.operators.labeler import build_gazetteer, build_transitions, label_texts
-from kgpipe.operators.train import (
-    decode_spans,
-    fit_perceptron,
-    label_transcripts_trained,
-)
+from kgpipe.operators.train import fit_perceptron, silver_tags
 
 
 @pytest.fixture(scope="module")
@@ -59,13 +61,55 @@ def test_heldout_span_pr_at_least_95(corpus, model):
     gaz = build_gazetteer(cd)
     silver = _span_sets(test["text"],
                         label_texts(test["text"], gaz, build_transitions()))
-    predicted = _span_sets(test["text"], decode_spans(test["text"], model, gaz))
+    predicted = _span_sets(test["text"], label_texts(
+        test["text"], gaz, model.decode_trans(), model))
     assert silver, "held-out split must contain mentions"
     tp = len(silver & predicted)
     precision = tp / len(predicted) if predicted else 0.0
     recall = tp / len(silver) if silver else 0.0
     assert precision >= 0.95, (precision, recall)
     assert recall >= 0.95, (precision, recall)
+
+
+def test_trained_label_texts_equals_reference_decode(corpus, model):
+    """label_texts with a model (the labeler's one batch decode, learned
+    weights) == the separate trained decode it replaced, on the held-out
+    split — with the full gazetteer, and with one missing the withheld
+    entities, so rows without a gazetteer hit must be decoded too."""
+    from kgpipe.operators.train import dict_holdout_split
+
+    _train, test, cd = corpus
+    for d in (cd, dict_holdout_split(cd)[0]):
+        gaz = build_gazetteer(d)
+        got = label_texts(test["text"], gaz, model.decode_trans(), model)
+        want = decode_spans(test["text"], model, gaz)
+        assert sum(map(len, want)) > 0
+        assert list(got) == list(want)
+
+
+_SILVER_DICT = pd.DataFrame({
+    "alias": ["acme corp", "acme", "alice womack", "port zephyr", "bob",
+              "zephyr bob"],
+    "entity_id": ["org1", "org1", "per1", "pl1", "per2", "pl2"],
+    "prior": [0.9, 0.6, 0.9, 0.9, 0.9, 0.9],
+    "ent_class": ["ORG", "ORG", "PER", "PLACE", "PER", "PLACE"],
+})
+# alias words (multi-token and adjacent aliases arise by chance), filler,
+# punctuation and non-ASCII
+_silver_word = st.sampled_from(
+    ["acme", "corp", "alice", "womack", "port", "zephyr", "bob", "Acme",
+     "ZEPHYR", "the", "said", ",", ".", "café", "x1"])
+_silver_row = st.one_of(
+    st.none(), st.just(""), st.just("   "),
+    st.lists(_silver_word, max_size=12).map(" ".join))
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.lists(_silver_row, max_size=8))
+def test_silver_tags_equals_reference_loop(rows):
+    texts = pd.Series(rows, dtype=object)
+    want = silver_tags_reference(texts, _SILVER_DICT, tokenize_batch(texts))
+    np.testing.assert_array_equal(silver_tags(texts, _SILVER_DICT), want)
 
 
 def test_learned_weights_not_handset(model):
@@ -87,7 +131,7 @@ def test_trained_labeler_drops_into_pipeline(spark, corpus, model):
 
     _train, test, cd = corpus
     sdf = spark.createDataFrame(test)
-    pred_m = extract_mentions(label_transcripts_trained(spark, sdf, model, cd))
+    pred_m = extract_mentions(label_transcripts(spark, sdf, cd, model))
     gold_m = extract_mentions(label_transcripts(spark, sdf, cd))
     report = per_class_span_eval(pred_m, gold_m).toPandas()
     assert set(report["ent_type"]) >= {"PER", "ORG"}
@@ -144,7 +188,8 @@ def test_withheld_entity_generalization(corpus):
     m = fit_perceptron(texts, cd_train)
 
     silver = label_texts(test["text"], build_gazetteer(cd), build_transitions())
-    pred = decode_spans(test["text"], m, build_gazetteer(cd_train))
+    pred = label_texts(test["text"], build_gazetteer(cd_train),
+                       m.decode_trans(), m)
 
     gold_wh, gold_kn, pred_all = set(), set(), set()
     for i, spans in enumerate(silver):
@@ -230,6 +275,6 @@ def test_cluster_template_survives_disk_roundtrip(corpus, tmp_path):
     m2 = fit_or_load(texts, cd, cache_dir=str(tmp_path))
     assert m1.clusters and m1.clusters == m2.clusters
     g = build_gazetteer(cd)
-    p1 = decode_spans(test["text"].head(100), m1, g)
-    p2 = decode_spans(test["text"].head(100), m2, g)
+    p1 = label_texts(test["text"].head(100), g, m1.decode_trans(), m1)
+    p2 = label_texts(test["text"].head(100), g, m2.decode_trans(), m2)
     assert list(p1) == list(p2)
