@@ -95,14 +95,15 @@ def turn_digests(spark: SparkSession, labeled: DataFrame,
     keeps the two-UDF form (consumes a ``spans`` column) — the shape the
     standalone-labeled intermediates already have.
 
-    The inner pairing loop stays per-row Python BY MEASUREMENT: on a
-    20k-turn sf0.1 batch (1.18 spans/turn) the loop is 80 ms vs 532 ms
-    for the numpy Viterbi labeling it follows — 13% of the UDF, and the
-    UDF shares the wall with the JVM scan/shuffle stages. A numpy
-    flatten of the span arrays would bound the win at a few percent
-    end-to-end while churning the one plan-gated hot path, so it is
-    deliberately not taken until a profile says labeling stopped
-    dominating.
+    The inner pairing loop stays per-row Python BY MEASUREMENT. Per
+    10k-turn sf0.1 batch (min of 15, 4-core host) the UDF body splits
+    into the byte-level token table 10 ms, gazetteer emissions 19 ms,
+    padding + tag-major Viterbi 21 ms, span formatting 9 ms and this
+    loop 32 ms — about a third of the body, and the UDF shares the wall
+    with the JVM scan/shuffle stages. Its cost is the per-span alias and
+    predicate string lookups, which linking by token hash (a sorted
+    dictionary table, not a Python dict) would remove; a numpy flatten
+    of the span arrays alone would not.
     """
 
     from kgpipe.operators.linker import top1_dict

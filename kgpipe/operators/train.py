@@ -36,7 +36,7 @@ from dataclasses import dataclass
 import numpy as np
 import pandas as pd
 
-from kgpipe.functions.tokenize import tokenize_batch
+from kgpipe.functions.tokenize import token_table, tokenize_batch
 from kgpipe.operators.labeler import (
     NEG,
     N_TAGS,
@@ -94,11 +94,11 @@ class TrainedLabeler:
 
     def emissions(self, texts: pd.Series, gaz: Gazetteer):
         """Learned (n_tok, T) emission scores of a batch, and its
-        ``tokenize_batch`` arrays — the decode's trained weight set."""
-        (feat_pos, feat_idx), tokenized = extract_features(
+        ``token_table`` — the decode's trained weight set."""
+        (feat_pos, feat_idx), table = extract_features(
             texts, gaz, self.D, clusters=self.clusters)
         return _emissions(feat_pos, feat_idx, self.W,
-                          len(tokenized[0])), tokenized
+                          table.tok_h.size), table
 
 
 def _hashed(h: np.ndarray, salt: np.uint64, D: int) -> np.ndarray:
@@ -171,8 +171,12 @@ def extract_features(texts: pd.Series, gaz: Gazetteer, D: int,
                      gaz_dropout_mod: int = 0,
                      clusters: dict[str, int] | None = None):
     """Batch feature extraction -> COO (feat_pos, feat_idx) over flat
-    tokens, plus the tokenization arrays. All templates are uint64 vector
-    ops; string work is pandas .str (C-side).
+    tokens, plus the batch's ``token_table`` (with ``toks``). All templates
+    are uint64 vector ops; string work is pandas .str (C-side). Word,
+    affix, context and dropout features hash the token strings with keyed
+    siphash (``pd.util.hash_array``); the gazetteer indicators come from
+    the table's byte-level ``tok_h``, the hash ``build_gazetteer`` keys
+    aliases with.
 
     ``gaz_dropout_mod > 0`` (training only) deterministically drops the
     gazetteer-hit indicator features for ~1/mod of the hit OCCURRENCES
@@ -185,13 +189,14 @@ def extract_features(texts: pd.Series, gaz: Gazetteer, D: int,
     CRF, SURVEY.md §2C steps 3-5). Dropout forces a slice of every batch
     to be explained gazetteer-free. Decode always uses the full features
     (mod=0)."""
-    toks, starts, ends, row_id, row_lengths = tokenize_batch(texts)
-    n_tok = len(toks)
+    table = token_table(texts, strings=True)
+    row_id = table.row_id
+    n_tok = row_id.size
     if n_tok == 0:
         e = np.empty(0, np.int64)
-        return (e, e), ([], e, e, e, np.zeros(len(texts), np.int64))
+        return (e, e), table
 
-    s = pd.Series(toks, dtype="object")
+    s = pd.Series(table.toks, dtype="object")
     low = s.str.lower()
     tok_h = pd.util.hash_array(low.to_numpy())
 
@@ -242,9 +247,8 @@ def extract_features(texts: pd.Series, gaz: Gazetteer, D: int,
             add(p, _hashed(cid, _SALTS["clus"], D))
 
     # shape flags (sparse: only where true)
-    first = s.str[:1]
     flags = [
-        (_F_CAP, first.str.isupper().fillna(False).to_numpy(bool)),
+        (_F_CAP, table.is_cap),
         (_F_ALLCAP, s.str.isupper().fillna(False).to_numpy(bool)),
         (_F_HASDIG, s.str.contains(r"\d", regex=True).to_numpy(bool)),
         (_F_ALLDIG, s.str.isdigit().fillna(False).to_numpy(bool)),
@@ -258,7 +262,7 @@ def extract_features(texts: pd.Series, gaz: Gazetteer, D: int,
 
     # gazetteer indicators: the dictionary labeler's hit matcher, but the
     # WEIGHT of a hit is learned
-    for ln, hit, hc in gazetteer_hits(tok_h, row_id, gaz):
+    for ln, hit, hc in gazetteer_hits(table.tok_h, row_id, gaz):
         if gaz_dropout_mod > 0:
             with np.errstate(over="ignore"):
                 occ = tok_h[hit] + row_id[hit].astype(np.uint64) * _FNV_OCC
@@ -270,13 +274,13 @@ def extract_features(texts: pd.Series, gaz: Gazetteer, D: int,
 
     feat_pos = np.concatenate(pos_list)
     feat_idx = np.concatenate(idx_list)
-    return (feat_pos, feat_idx), (toks, starts, ends, row_id, row_lengths)
+    return (feat_pos, feat_idx), table
 
 
 def silver_tags(texts: pd.Series, candidate_dict: pd.DataFrame) -> np.ndarray:
     """Auto-annotation (SURVEY §2C step 3): the dictionary labeler's
     decoded tags as flat per-token BIO tag ids, aligned with
-    ``tokenize_batch(texts)``."""
+    ``token_table(texts)``."""
     _tokenized, tok_mask, tags = decode_batch(
         texts, build_gazetteer(candidate_dict), build_transitions())
     out = np.zeros(tok_mask.size, np.int64)
@@ -372,10 +376,10 @@ def fit_perceptron(texts: pd.Series, candidate_dict: pd.DataFrame,
     gaz = build_gazetteer(candidate_dict)
     clusters = (build_word_clusters(texts, n_clusters=n_clusters)
                 if n_clusters else None)
-    (feat_pos, feat_idx), tokenized = extract_features(
+    (feat_pos, feat_idx), table = extract_features(
         texts, gaz, D, gaz_dropout_mod=gaz_dropout_mod, clusters=clusters)
-    toks, starts, ends, row_id, row_lengths = tokenized
-    n_tok = len(toks)
+    row_id, row_lengths = table.row_id, table.row_lengths
+    n_tok = row_id.size
     if n_tok == 0:
         raise ValueError("no tokens to train on")
     gold = silver_tags(texts, candidate_dict)

@@ -10,8 +10,9 @@ Scale notes:
 * JSONL is line-delimited (the default ``multiLine=False``), so the scan
   splits by line across executors like any text source — a 100-TB dump
   parallelizes without coordination. CSV with quoted multi-line text
-  needs ``multiLine=True``, which makes each FILE one split — documented
-  here so callers shard CSV dumps into many files (or prefer JSONL).
+  needs ``multiLine=True``, which makes each FILE one split — so
+  ``read_transcripts_csv`` warns when a dump has fewer files than cores
+  (shard CSV dumps into many files, or prefer JSONL).
 * ``FAILFAST`` by default: a malformed record in a trusted drop is a
   pipeline bug to surface, not a row to silently null out. Callers
   ingesting scraped data can pass ``mode='PERMISSIVE'`` and filter.
@@ -23,10 +24,24 @@ Scale notes:
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 
 from kgpipe.schemas import TRANSCRIPTS
+
+
+def text_reader(reader, fmt: str, mode: str = "FAILFAST"):
+    """``reader`` (``spark.read`` or ``spark.readStream``) with the
+    schema, parse mode and timestamp contract of the ``fmt`` ('jsonl' or
+    'csv') transcript dump, so batch and stream parse them alike."""
+    reader = (reader.schema(TRANSCRIPTS).option("mode", mode)
+              .option("timestampFormat",
+                      "yyyy-MM-dd'T'HH:mm:ss[.SSSSSS][XXX]"))
+    if fmt == "csv":
+        reader = (reader.option("header", True).option("multiLine", True)
+                  .option("escape", '"'))
+    return reader
 
 
 def read_transcripts_jsonl(spark: SparkSession, path: str,
@@ -35,12 +50,7 @@ def read_transcripts_jsonl(spark: SparkSession, path: str,
 
     Timestamps must be ISO-8601 (Spark's default JSON timestamp parse);
     missing optional fields (role/tool/ts) surface as nulls."""
-    return (
-        spark.read.schema(TRANSCRIPTS)
-        .option("mode", mode)
-        .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss[.SSSSSS][XXX]")
-        .json(path)
-    )
+    return text_reader(spark.read, "jsonl", mode).json(path)
 
 
 def read_transcripts_csv(spark: SparkSession, path: str,
@@ -48,16 +58,18 @@ def read_transcripts_csv(spark: SparkSession, path: str,
     """CSV transcripts (header row, RFC-4180 quoting) -> TRANSCRIPTS shape.
 
     ``multiLine=True`` so quoted turn text may contain newlines — at the
-    cost of one split per file; shard big CSV dumps or prefer JSONL."""
-    return (
-        spark.read.schema(TRANSCRIPTS)
-        .option("header", True)
-        .option("mode", mode)
-        .option("multiLine", True)
-        .option("escape", '"')
-        .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss[.SSSSSS][XXX]")
-        .csv(path)
-    )
+    cost of one split per file, so fewer files than cores warn (the read
+    is not repartitioned: that would tax every consumer)."""
+    df = text_reader(spark.read, "csv", mode).csv(path)
+    n_files = len(df.inputFiles())
+    cores = spark.sparkContext.defaultParallelism
+    if n_files < cores:
+        warnings.warn(
+            f"{path}: {n_files} CSV file(s) for {cores} cores — a CSV read "
+            "is one split per file (multiLine=True), so the scan runs on "
+            f"{n_files} core(s); shard the dump into at least {cores} "
+            "files, or use JSONL", UserWarning, stacklevel=2)
+    return df
 
 
 def read_transcripts_any(spark: SparkSession, path: str,

@@ -30,6 +30,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from kgpipe.schemas import TRANSCRIPTS
+from kgpipe.sources.transcripts import text_reader
 
 EVENTS = T.StructType([
     T.StructField("event_id", T.LongType()),
@@ -51,21 +52,22 @@ def read_events_stream(spark: SparkSession, path: str,
 def read_transcripts_stream(spark: SparkSession, path: str,
                             max_files_per_trigger: int = 1,
                             fmt: str = "parquet") -> DataFrame:
-    """File-source transcript stream; ``fmt='jsonl'`` tails the dump
-    format logs actually land in (line-delimited, schema-enforced — the
-    batch reader's contract, sources/transcripts.py, applied to the
-    stream). Swap for format('kafka') in production per the module note."""
-    reader = (spark.readStream.schema(TRANSCRIPTS)
-              .option("maxFilesPerTrigger", max_files_per_trigger))
+    """File-source transcript stream of ``fmt`` 'parquet', 'jsonl' (or
+    'json') or 'csv'. The text dumps logs actually land in are read with
+    the batch reader's contract (``sources.transcripts.text_reader``): a
+    malformed record aborts loudly instead of flowing as an all-null row
+    into the stateful extractor, and both paths parse the same ts format.
+    Swap for format('kafka') in production per the module note."""
+    reader = spark.readStream.option("maxFilesPerTrigger",
+                                     max_files_per_trigger)
     if fmt in ("jsonl", "json"):
-        # same mode + timestamp contract as the batch reader: a malformed
-        # line must abort loudly (not flow as an all-null row into the
-        # stateful extractor), and both paths must parse the same ts format
-        return (reader.option("mode", "FAILFAST")
-                .option("timestampFormat",
-                        "yyyy-MM-dd'T'HH:mm:ss[.SSSSSS][XXX]")
-                .json(path))
-    return reader.parquet(path)
+        return text_reader(reader, "jsonl").json(path)
+    if fmt == "csv":
+        return text_reader(reader, "csv").csv(path)
+    if fmt == "parquet":
+        return reader.schema(TRANSCRIPTS).parquet(path)
+    raise ValueError(f"unknown transcripts stream format {fmt!r}; "
+                     "expected parquet/jsonl/csv")
 
 
 # -- B29: tumbling / sliding event-time windows with watermark -------------

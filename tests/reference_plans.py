@@ -12,16 +12,24 @@ Levenshtein DP the vectorized canon verify kernel
 trained-labeler decode and ``silver_tags`` the per-row loop that re-derives
 BIO tags from the dictionary labeler's char spans; the labeler's one batch
 decode (kgpipe/operators/labeler.py ``decode_batch``) is checked against
-them.
+them, and its ``viterbi_batch`` against ``viterbi_reference``.
+
+``tokenize_batch`` is the regex tokenizer (one ``TOKEN_PATTERN`` pass over
+the joined batch) and ``token_table_reference`` its token table, hashed
+from the token strings; the byte-level tokenizer
+(kgpipe/functions/tokenize.py ``token_table``) is checked against them.
 """
 
 from __future__ import annotations
+
+import re
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kgpipe.functions.tokenize import TOKEN_PATTERN, TokenTable, hash_strings
 from kgpipe.operators.labeler import (
     NEG,
     N_TAGS,
@@ -36,6 +44,9 @@ from kgpipe.operators.labeler import (
 from kgpipe.operators.train import TrainedLabeler, _emissions, extract_features
 from kgpipe.predicates import predicates_df
 from kgpipe.schemas import ENT_CLASSES
+
+_TOKEN_RE = re.compile(TOKEN_PATTERN)
+_SENTINEL = "\n"  # never appears in transcript text (single-line turns)
 
 
 def _norm(col):
@@ -259,9 +270,10 @@ def decode_spans(texts: pd.Series, model: TrainedLabeler,
                  gaz: dict) -> pd.Series:
     """text -> list[(start, end, ent_type, score)] under the trained model."""
     texts = texts.reset_index(drop=True)
-    (feat_pos, feat_idx), tokenized = extract_features(
+    (feat_pos, feat_idx), t = extract_features(
         texts, gaz, model.D, clusters=model.clusters)
-    toks, starts, ends, row_id, row_lengths = tokenized
+    toks, starts, ends, row_id, row_lengths = (
+        t.toks, t.starts, t.ends, t.row_id, t.row_lengths)
     out: list[list[tuple]] = [[] for _ in range(len(texts))]
     n_tok = len(toks)
     if n_tok == 0:
@@ -278,3 +290,80 @@ def decode_spans(texts: pd.Series, model: TrainedLabeler,
                            e_char.tolist(), cls_i.tolist()):
         out[keep[rid[bp]]].append((int(s), int(e), ENT_CLASSES[c], 1.0))
     return pd.Series(out, index=texts.index)
+
+
+def tokenize_batch(texts: pd.Series):
+    """The regex tokenizer in one ``TOKEN_PATTERN`` pass over the joined
+    batch — the oracle the byte-level ``kgpipe.functions.tokenize``
+    ``token_table`` and ``tokenize_batch`` are checked against.
+
+    Returns ``(toks, starts, ends, row_id, row_lengths)`` where ``toks`` is a
+    list[str] of all tokens in batch order, ``starts``/``ends`` are int64
+    char offsets *within each row's text*, ``row_id`` maps token -> row
+    ordinal (0..len(texts)-1), and ``row_lengths[r]`` is the token count of
+    row r.
+    """
+    vals = texts.fillna("").astype(str).str.replace(_SENTINEL, " ", regex=False)
+    n_rows = len(vals)
+    if n_rows == 0:
+        return [], np.empty(0, np.int64), np.empty(0, np.int64), \
+            np.empty(0, np.int64), np.zeros(0, np.int64)
+
+    arr = vals.to_numpy()
+    lens = np.fromiter((len(s) for s in arr), dtype=np.int64, count=n_rows)
+    # row r occupies big[row_off[r] : row_off[r]+lens[r]]
+    row_off = np.zeros(n_rows, np.int64)
+    np.cumsum(lens[:-1] + 1, out=row_off[1:])
+    big = _SENTINEL.join(arr)
+
+    spans = np.array([m.span() for m in _TOKEN_RE.finditer(big)],
+                     dtype=np.int64).reshape(-1, 2)
+    if spans.size == 0:
+        return [], np.empty(0, np.int64), np.empty(0, np.int64), \
+            np.empty(0, np.int64), np.zeros(n_rows, np.int64)
+    toks = _TOKEN_RE.findall(big)
+
+    row_id = np.searchsorted(row_off, spans[:, 0], side="right") - 1
+    starts = spans[:, 0] - row_off[row_id]
+    ends = spans[:, 1] - row_off[row_id]
+    row_lengths = np.bincount(row_id, minlength=n_rows).astype(np.int64)
+    return toks, starts, ends, row_id, row_lengths
+
+
+def token_table_reference(texts: pd.Series) -> TokenTable:
+    """The ``TokenTable`` of the regex oracle: its tokens, offsets and rows,
+    the byte hash of each ``str.lower()``-ed token string and
+    ``str[:1].isupper()``."""
+    toks, starts, ends, row_id, row_lengths = tokenize_batch(texts)
+    return TokenTable(starts, ends, row_id, row_lengths,
+                      hash_strings([t.lower() for t in toks]),
+                      np.array([t[:1].isupper() for t in toks], bool), toks)
+
+
+def viterbi_reference(em_pad: np.ndarray, trans: np.ndarray) -> np.ndarray:
+    """Batched Viterbi with one (R, cur, prev) candidate tensor and an
+    argmax over the previous tag per step — the oracle the tag-major
+    ``viterbi_batch`` (kgpipe/operators/labeler.py) is checked against."""
+    n_rows_sub, lmax, _ = em_pad.shape
+    # start constraint: I-* cannot start a sequence
+    start_pen = np.zeros(N_TAGS, dtype=np.float32)
+    for c in ENT_CLASSES:
+        start_pen[_I[c]] = NEG
+
+    score = em_pad[:, 0, :] + start_pen[None, :]
+    back = np.zeros((n_rows_sub, lmax, N_TAGS), dtype=np.int8)
+    transT = np.ascontiguousarray(trans.T)
+    for t in range(1, lmax):
+        cand = score[:, None, :] + transT[None, :, :]  # (R, cur, prev)
+        best_prev = cand.argmax(axis=2)
+        score = np.take_along_axis(
+            cand, best_prev[:, :, None], axis=2)[:, :, 0]
+        score = score + em_pad[:, t, :]
+        back[:, t, :] = best_prev
+
+    tags_pad = np.zeros((n_rows_sub, lmax), dtype=np.int8)
+    tags_pad[:, lmax - 1] = score.argmax(axis=1)
+    for t in range(lmax - 1, 0, -1):
+        tags_pad[:, t - 1] = np.take_along_axis(
+            back[:, t, :], tags_pad[:, t, None].astype(np.int64), axis=1)[:, 0]
+    return tags_pad

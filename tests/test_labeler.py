@@ -4,12 +4,17 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from kgpipe.functions.tokenize import hash_strings, token_table
 from kgpipe.operators.labeler import (
     MAX_ALIAS_TOKENS,
+    NEG,
+    N_TAGS,
     _fold_hashes,
     build_gazetteer,
     build_transitions,
+    gazetteer_hits,
     label_texts,
+    viterbi_batch,
 )
 from kgpipe.schemas import ENT_CLASSES
 
@@ -114,17 +119,23 @@ def test_packed_path_equals_direct_udf_path(spark, unit_fixture_dir,
 
 # -- build_gazetteer: batch build == the per-alias reference ----------------
 
-def _build_gazetteer_reference(candidate_dict):
-    """The per-alias form of build_gazetteer: one hash_array call and one
-    fold per alias, duplicates resolved by dict insertion (last class
-    wins). Kept here only as the equivalence reference."""
+def _siphash(toks):
+    return pd.util.hash_array(np.array(toks, dtype=object))
+
+
+def _build_gazetteer_reference(candidate_dict, hash_tokens=hash_strings):
+    """The per-alias form of build_gazetteer: one ``hash_tokens`` call over
+    the lowercased tokens and one fold per alias, duplicates resolved by
+    dict insertion (last class wins). Kept here only as the equivalence
+    reference; with ``_siphash`` it is the keyed-siphash gazetteer the
+    byte hash replaced."""
     cls_idx = {c: i for i, c in enumerate(ENT_CLASSES)}
     by_len = {}
     for alias, cls in zip(candidate_dict["alias"], candidate_dict["ent_class"]):
-        toks = alias.split()
+        toks = [t.lower() for t in alias.split()]
         if not toks or len(toks) > MAX_ALIAS_TOKENS:
             continue
-        th = pd.util.hash_array(np.array(toks, dtype=object))
+        th = hash_tokens(toks)
         h = _fold_hashes(th, len(toks), 1)[0]
         by_len.setdefault(len(toks), []).append((int(h), cls_idx[cls]))
     gaz = {}
@@ -148,7 +159,8 @@ def _assert_same_gazetteer(got, want):
 # a small word pool so random aliases collide (duplicate aliases with
 # conflicting classes), plus non-ASCII words and whitespace runs
 _word = st.sampled_from(["acme", "corp", "alice", "port", "zephyr",
-                         "Zürich", "café", "東京", "ΑΘΗΝΑ", "x"])
+                         "Zürich", "café", "東京", "ΑΘΗΝΑ", "x",
+                         "Acme", "É", "Ω"])
 _alias = st.one_of(
     st.lists(_word, min_size=1, max_size=4),   # the matched lengths
     st.lists(_word, min_size=5, max_size=7),   # skipped: too long
@@ -186,3 +198,65 @@ def test_build_gazetteer_last_class_wins():
     gaz = build_gazetteer(cd)
     assert sorted(gaz) == [1, 2] and gaz[1][0].size == 1
     assert ENT_CLASSES[gaz[1][1][0]] == "PLACE"
+
+
+# -- gazetteer hits: byte hash == the keyed-siphash reference --------------
+
+_text_word = st.sampled_from(["acme", "ACME", "Corp", "corp", "alice",
+                              "port", "Zephyr", "zürich", "ZÜRICH", "café",
+                              "ΑΘΗΝΑ", "αθηνα", "x", ",", ".", "é", "É",
+                              "ω", "Ω"])
+_text_sep = st.sampled_from([" ", "  ", "\t", "\u00a0", "\u2003", ""])
+_text_row = st.one_of(
+    st.none(), st.just(""),
+    st.lists(st.tuples(_text_word, _text_sep), max_size=12).map(
+        lambda ps: "".join(w + sep for w, sep in ps)))
+
+
+def _hits(gaz, tok_h, row_id):
+    return {ln: (pos.tolist(), cls.tolist())
+            for ln, pos, cls in gazetteer_hits(tok_h, row_id, gaz)}
+
+
+@settings(max_examples=300, deadline=None)
+@given(_dict_rows, st.lists(_text_row, max_size=8))
+def test_gazetteer_hits_equal_siphash_reference(rows, texts):
+    """Same hit positions and classes as keyed siphash over the lowercased
+    string tokens — so a trained model's gazetteer features, and with them
+    its weights, do not change with the hash."""
+    from reference_plans import tokenize_batch as tokenize_batch_reference
+
+    cd = pd.DataFrame(
+        {"alias": pd.Series([a for a, _ in rows], dtype=object),
+         "ent_class": pd.Series([c for _, c in rows], dtype=object)})
+    texts = pd.Series(texts, dtype=object)
+    toks, _s, _e, row_id, _rl = tokenize_batch_reference(texts)
+    want = _hits(_build_gazetteer_reference(cd, _siphash),
+                 _siphash([t.lower() for t in toks]), row_id)
+    t = token_table(texts)
+    assert _hits(build_gazetteer(cd), t.tok_h, t.row_id) == want
+
+
+# small integer scores make ties between previous tags common
+_score = st.sampled_from([-2.0, -1.0, 0.0, 0.5, 1.0, 2.0, NEG])
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.integers(1, 6), st.integers(1, 7), st.data(),
+       st.sampled_from([np.float32, np.float64]), st.booleans())
+def test_viterbi_equals_argmax_reference(n_rows, lmax, data, dtype, bio):
+    """The tag-major DP returns the tags of the per-step argmax over a
+    (R, cur, prev) candidate tensor, ties included, for the hand-set BIO
+    transitions and for arbitrary (trained-model-like) ones."""
+    from reference_plans import viterbi_reference
+
+    em = np.array(data.draw(st.lists(
+        _score, min_size=n_rows * lmax * N_TAGS,
+        max_size=n_rows * lmax * N_TAGS)), np.float32).reshape(
+            n_rows, lmax, N_TAGS)
+    trans = (build_transitions() if bio else np.array(data.draw(st.lists(
+        _score, min_size=N_TAGS * N_TAGS, max_size=N_TAGS * N_TAGS)),
+        np.float32).reshape(N_TAGS, N_TAGS)).astype(dtype)
+    got = viterbi_batch(em, trans)
+    assert got.dtype == np.int8
+    np.testing.assert_array_equal(got, viterbi_reference(em, trans))

@@ -57,6 +57,29 @@ def test_jsonl_and_csv_read_equal_parquet(spark, unit_fixture_dir, dumps):
         read_transcripts_any(spark, "x.parquet", fmt="orc2")
 
 
+def test_csv_read_warns_when_files_are_fewer_than_cores(spark, dumps,
+                                                       tmp_path):
+    """One CSV file is one split (multiLine=True): fewer files than cores
+    warn with the counts and the remedy; enough shards do not."""
+    import warnings
+
+    d, pdf = dumps
+    cores = spark.sparkContext.defaultParallelism
+    assert cores > 1
+    with pytest.warns(UserWarning,
+                      match=rf"1 CSV file\(s\) for {cores} cores.*shard the "
+                            r"dump.*or use JSONL"):
+        read_transcripts_csv(spark, os.path.join(d, "transcripts.csv"))
+    shards = tmp_path / "shards"
+    shards.mkdir()
+    for i in range(cores):
+        pdf.iloc[i::cores].to_csv(shards / f"part-{i}.csv", index=False,
+                                  date_format="%Y-%m-%dT%H:%M:%S.%f")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        assert read_transcripts_csv(spark, str(shards)).count() == len(pdf)
+
+
 def test_pipeline_end_to_end_over_jsonl(spark, unit_fixture_dir, dumps,
                                         tmp_path):
     """A fixture dir whose transcripts are a JSONL dump (no parquet) must

@@ -316,3 +316,34 @@ def test_incremental_triples_over_jsonl_stream(spark, tmp_path):
     got = {tuple(r) for r in got_df
            .select("subj", "pred", "obj", "conv_id", "turn_idx").collect()}
     assert got == want
+
+
+def test_csv_stream_reads_csv_like_the_batch_reader(spark, tmp_path):
+    """fmt='csv' tails CSV dumps with the batch CSV reader's contract
+    (header, quoting, multi-line text, ts format): two CSV files stream
+    in as exactly the rows the batch reader reads from them."""
+    import warnings
+
+    from kgpipe.sources.transcripts import read_transcripts_csv
+
+    t = pd.read_parquet(os.path.join(materialize("unit"),
+                                     "transcripts.parquet"))
+    t.loc[t.index[0], "text"] = 'a "quoted",\nmulti-line turn'
+    d = str(tmp_path / "csv_in")
+    os.makedirs(d)
+    half = len(t) // 2
+    for name, part in (("a.csv", t.iloc[:half]), ("b.csv", t.iloc[half:])):
+        part.to_csv(os.path.join(d, name), index=False,
+                    date_format="%Y-%m-%dT%H:%M:%S.%f")
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore", UserWarning)  # 2 files < cores
+        want = sorted(map(tuple, read_transcripts_csv(spark, d).collect()))
+    got = _run_stream(read_transcripts_stream(spark, d, fmt="csv"),
+                      str(tmp_path))
+    assert len(want) == len(t)
+    assert sorted(map(tuple, got.collect())) == want
+
+
+def test_unknown_stream_format_is_named(spark):
+    with pytest.raises(ValueError, match="'orc2'"):
+        read_transcripts_stream(spark, "/nonexistent", fmt="orc2")
