@@ -54,16 +54,26 @@ MAX_ALIAS_TOKENS = 4
 Gazetteer = dict[int, tuple[np.ndarray, np.ndarray]]
 
 
-def build_transitions() -> np.ndarray:
-    """BIO-consistent transition matrix (additive log-domain scores)."""
-    t = np.zeros((N_TAGS, N_TAGS), dtype=np.float32)
+def build_transitions(learned: np.ndarray | None = None) -> np.ndarray:
+    """BIO-consistent transition matrix (additive log-domain scores):
+    zeros, or a copy of the ``learned`` scores, with every move BIO
+    forbids at NEG."""
+    t = (np.zeros((N_TAGS, N_TAGS), np.float32) if learned is None
+         else np.array(learned, np.float32))
     for c in ENT_CLASSES:
-        i_c = _I[c]
         # only B-c or I-c may precede I-c
-        t[:, i_c] = NEG
-        t[_B[c], i_c] = 0.0
-        t[i_c, i_c] = 0.0
+        ok = [_B[c], _I[c]]
+        keep = t[ok, _I[c]]
+        t[:, _I[c]] = NEG
+        t[ok, _I[c]] = keep
     return t
+
+
+def transitions_for(model=None) -> np.ndarray:
+    """The transitions a weight set decodes with: the hand-set BIO matrix
+    for the gazetteer (``model=None``), a ``TrainedLabeler``'s learned
+    scores under the same mask."""
+    return build_transitions(None if model is None else model.trans)
 
 
 _FNV = np.uint64(1099511628211)
@@ -302,7 +312,7 @@ def label_texts(texts: pd.Series, gaz: Gazetteer, trans: np.ndarray,
                 model=None) -> pd.Series:
     """text -> list[(start, end, ent_type, score)] per row. ``model``: a
     ``TrainedLabeler`` whose emissions replace the hand-set weights
-    (``trans`` is then its ``decode_trans()``)."""
+    (``trans`` is then ``transitions_for(model)``)."""
     return pd.Series(_spans_per_row(
         texts, gaz, trans, model,
         lambda s, e, c: (s, e, ENT_CLASSES[c], 1.0)), index=texts.index)
@@ -346,9 +356,8 @@ def label_transcripts(spark: SparkSession, transcripts: DataFrame,
     to a direct SPANS_ARRAY UDF over ``label_texts`` for both weight sets
     (tests pin them equal)."""
     transcripts = spread_for(spark, transcripts, model)
-    trans = build_transitions() if model is None else model.decode_trans()
     bc = spark.sparkContext.broadcast(
-        (build_gazetteer(candidate_dict), trans, model))
+        (build_gazetteer(candidate_dict), transitions_for(model), model))
 
     @F.pandas_udf("string")
     def label_spans_packed(texts: pd.Series) -> pd.Series:

@@ -6,9 +6,12 @@ BASELINE.json. Every triple the engine emits (batch, checkpointed and
 streaming) comes from the two halves below:
 
 * ``turn_digests``: ONE Arrow-batched pass over the transcripts that
-  labels, links and pairs each turn where its text already lives, and
-  emits one NARROW row per mention-bearing turn — a few ids plus a small
-  intra-triple array, no text.
+  labels (the gazetteer, or a trained model's weights), links and pairs
+  each turn where its text already lives, and emits one NARROW row per
+  mention-bearing turn — a few ids plus a small intra-triple array, no
+  text. Linking and pairing are ``pair_turns``, a pure pandas function
+  of (texts, spans per row, link map, predicate map); tests feed it
+  hand-built spans through the wrapper in tests/reference_plans.py.
 * ``emit_triples``: the rules that need the conversation context. Given
   each digest row's previous mention-bearing turn (``prev_turn``,
   ``prev_last``) it emits
@@ -41,17 +44,106 @@ partition/task order (BASELINE.json per-row invariant).
 
 from __future__ import annotations
 
+import operator
+
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
-def turn_digests(spark: SparkSession, labeled: DataFrame,
+DIGEST_TYPE = (
+    "array<struct<"
+    "intra: array<struct<subj:string,pred:string,obj:string>>, "
+    "first_ent: string, first_pred: string, last_ent: string>>"
+)
+
+
+_span_order = operator.itemgetter(0, 1)  # (start, end)
+
+
+def _n(s: str) -> str:
+    return " ".join(s.lower().split())
+
+
+def digest_maps(candidate_dict, predicates=None,
+                canon: dict | None = None) -> tuple[dict, dict]:
+    """The pairing's lookup tables: (normalized alias, class) -> top-1
+    entity id, and predicate phrase -> predicate id.
+
+    Linking is link_entities' k=1 join (the ``linked`` side output)
+    exactly: top-1 candidate per (normalized alias, class) with the
+    (prior desc, entity_id asc) total order. ``canon`` (entity_id ->
+    canonical_id, driver-side dict): when given, it is composed into the
+    link map HERE, so the digests carry canonical ids everywhere and no
+    join rewrites ids downstream. The canon map has at most one row per
+    dictionary entity (pipeline.canon_map_for), so composing it is a
+    driver-side dict pass over a map that is broadcast anyway."""
+    from kgpipe.operators.linker import top1_dict
+    from kgpipe.predicates import predicates_dict
+
+    t1 = top1_dict(candidate_dict)
+    link_map = {
+        (a, c): e for a, c, e in
+        zip(t1["alias"], t1["ent_class"], t1["entity_id"])
+    }
+    if canon:
+        link_map = {k: canon.get(v, v) for k, v in link_map.items()}
+    return link_map, predicates_dict(predicates)
+
+
+def pair_turns(texts: pd.Series, spans_per_row, link_map: dict,
+               pred_map: dict) -> pd.Series:
+    """Per turn: its spans (``(start, end, ent_type, ...)`` tuples) in
+    (start, end) order, linked through ``link_map``, then paired -> a
+    0-or-1-element list holding the turn's digest (``DIGEST_TYPE``).
+
+    A mention without a dictionary alias is dropped BEFORE pairing, like
+    the linker join drops it. Normalization matches the fixture
+    generator's python ``_norm`` (lower + whitespace collapse); the JVM
+    ``norm_surface`` agrees on space-delimited text, which the alias
+    registry guarantees for its side.
+
+    The loop stays per-row Python BY MEASUREMENT. Per 10k-turn sf0.1
+    batch (min of 15, 4-core host) the digest UDF body splits into the
+    byte-level token table 10 ms, gazetteer emissions 19 ms, padding +
+    tag-major Viterbi 21 ms, span formatting 9 ms and this loop 32 ms —
+    about a third of the body, and the UDF shares the wall with the JVM
+    scan/shuffle stages. Its cost is the per-span alias and predicate
+    string lookups, which linking by token hash (a sorted dictionary
+    table, not a Python dict) would remove; a numpy flatten of the span
+    arrays alone would not."""
+    out: list[list[dict]] = []
+    for text, spans in zip(texts, spans_per_row):
+        linked = []
+        if text is not None and spans is not None:
+            for sp in sorted(spans, key=_span_order):
+                st, en = sp[0], sp[1]
+                ent = link_map.get((_n(text[st:en]), sp[2]))
+                if ent is not None:
+                    linked.append((st, en, ent))
+        if not linked:
+            out.append([])
+            continue
+        intra = []
+        for (ps, pe, pent), (cs, ce, cent) in zip(linked, linked[1:]):
+            pr = pred_map.get(_n(text[pe:cs]))
+            if pr is not None:
+                intra.append({"subj": pent, "pred": pr, "obj": cent})
+        out.append([{
+            "intra": intra,
+            "first_ent": linked[0][2],
+            "first_pred": pred_map.get(_n(text[:linked[0][0]])),
+            "last_ent": linked[-1][2],
+        }])
+    return pd.Series(out, index=texts.index)
+
+
+def turn_digests(spark: SparkSession, transcripts: DataFrame,
                  candidate_dict, predicates=None,
                  canon: dict | None = None,
                  inline_labeler: str | None = None,
                  model=None) -> DataFrame:
-    """labeled transcripts -> one narrow row per mention-bearing turn:
+    """transcripts -> one narrow row per mention-bearing turn:
 
     (conv_id, turn_idx, intra: array<(subj, pred, obj)>, first_ent,
      first_pred, last_ent)
@@ -64,160 +156,66 @@ def turn_digests(spark: SparkSession, labeled: DataFrame,
     * ``last_ent``: the turn's last linked mention — the resolver target
       for the NEXT turn's dangling subject.
 
-    Linking is link_entities' k=1 join (the ``linked`` side output)
-    exactly: top-1 candidate per (normalized alias, class) with the
-    (prior desc, entity_id asc) total order; mentions without a dictionary
-    alias are dropped BEFORE pairing, like the join drops them.
-    Normalization matches the fixture generator's python ``_norm`` (lower
-    + whitespace collapse); the JVM ``norm_surface`` agrees on
-    space-delimited text, which the alias registry guarantees for its side.
-    The dictionary and predicate tables ship as one spark broadcast of
-    plain dicts, like the labeler's gazetteer (a JVM map literal would
-    bloat the plan past a few thousand aliases).
+    ONE scalar pandas UDF labels (``label_texts``), links and pairs
+    (``pair_turns``, with ``digest_maps``' tables) each turn where its
+    text already lives. Labeling is inside it by measurement: Spark
+    cannot merge dependent Python UDFs, so a labeler UDF feeding a digest
+    UDF ships every turn's text across the JVM<->Python boundary TWICE
+    and the span structs once more on the way back; job CPU counters
+    showed the executor threads ~87% idle waiting on exactly that
+    traffic. Inline, text crosses once and spans never leave Python. The
+    dictionary, predicate table, gazetteer and weights ship as one Spark
+    broadcast of plain dicts and arrays (a JVM map literal would bloat
+    the plan past a few thousand aliases).
 
-    ``canon`` (entity_id -> canonical_id, driver-side dict): when given,
-    it is composed into the link map HERE, at broadcast-build time — the
-    digests then carry canonical ids everywhere, and no join rewrites ids
-    downstream. The canon map has at most one row per dictionary entity
-    (pipeline.canon_map_for), so composing it is a driver-side dict pass
-    over a map that is broadcast anyway.
-
-    ``inline_labeler``: when ``"gaz"`` or ``"trained"``, sequence labeling
-    runs INSIDE this UDF (``labeled`` may then be the bare transcripts) —
-    one ArrowEvalPython node instead of two chained ones. Spark cannot
-    merge dependent Python UDFs, so the labeled->digest form ships every
-    turn's text across the JVM<->Python boundary TWICE and the span
-    structs once more on the way back; job CPU counters showed the
-    executor threads ~87% idle waiting on exactly this traffic. Inlining
-    halves the Arrow volume: text crosses once, spans never leave Python.
-    It is ``label_texts`` with ``model`` (a TrainedLabeler), which
-    ``"trained"`` requires and every other mode rejects. Default ``None``
-    keeps the two-UDF form (consumes a ``spans`` column) — the shape the
-    standalone-labeled intermediates already have.
-
-    The inner pairing loop stays per-row Python BY MEASUREMENT. Per
-    10k-turn sf0.1 batch (min of 15, 4-core host) the UDF body splits
-    into the byte-level token table 10 ms, gazetteer emissions 19 ms,
-    padding + tag-major Viterbi 21 ms, span formatting 9 ms and this
-    loop 32 ms — about a third of the body, and the UDF shares the wall
-    with the JVM scan/shuffle stages. Its cost is the per-span alias and
-    predicate string lookups, which linking by token hash (a sorted
-    dictionary table, not a Python dict) would remove; a numpy flatten
-    of the span arrays alone would not.
+    ``model`` alone picks the weight set: ``None`` is the gazetteer, a
+    ``TrainedLabeler`` its learned weights. ``inline_labeler`` is an
+    optional cross-check of that choice: ``"gaz"`` requires no model,
+    ``"trained"`` requires one. A frame that already has a ``spans``
+    column is rejected rather than silently re-labeled.
     """
+    from kgpipe.operators.labeler import (
+        build_gazetteer,
+        label_texts,
+        spread_for,
+        transitions_for,
+    )
 
-    from kgpipe.operators.linker import top1_dict
-    from kgpipe.predicates import predicates_dict
-
-    t1 = top1_dict(candidate_dict)
-    link_map = {
-        (a, c): e for a, c, e in
-        zip(t1["alias"], t1["ent_class"], t1["entity_id"])
-    }
-    if canon:
-        link_map = {k: canon.get(v, v) for k, v in link_map.items()}
-    pred_map = predicates_dict(predicates)
-
-    if (inline_labeler == "trained") != (model is not None):
+    if inline_labeler not in (None, "gaz" if model is None else "trained"):
         raise ValueError(
             f"inline_labeler={inline_labeler!r} with model={model is not None}"
-            ": 'trained' needs a model and a model needs 'trained'")
-    gaz = trans = None
-    if inline_labeler is not None:
-        from kgpipe.operators.labeler import (
-            build_gazetteer,
-            build_transitions,
-            spread_for,
-        )
-
-        if "spans" in labeled.columns:
-            # inline mode RE-labels inside the digest UDF: accepting a
-            # pre-labeled frame here would silently discard the caller's
-            # spans (wasted upstream work, and divergence if they were
-            # produced with different weights)
-            raise ValueError(
-                "inline_labeler recomputes labels inside the digest UDF "
-                "but the input already has a 'spans' column — pass the "
-                "bare transcripts, or drop inline_labeler to consume the "
-                "existing spans")
-        labeled = spread_for(spark, labeled, model)
-        gaz = build_gazetteer(candidate_dict)
-        trans = build_transitions() if model is None else model.decode_trans()
-    bc = spark.sparkContext.broadcast((link_map, pred_map, gaz, trans, model))
+            ": 'gaz' takes no model and 'trained' needs one (leave it out "
+            "and the model alone picks the weights)")
+    if "spans" in transcripts.columns:
+        # the digest UDF labels the text itself: accepting a pre-labeled
+        # frame would silently discard the caller's spans (wasted upstream
+        # work, and divergence if they came from different weights)
+        raise ValueError(
+            "turn_digests labels inside its UDF, but the input already "
+            "has a 'spans' column — pass the bare transcripts")
+    link_map, pred_map = digest_maps(candidate_dict, predicates, canon)
+    bc = spark.sparkContext.broadcast((
+        link_map, pred_map, build_gazetteer(candidate_dict),
+        transitions_for(model), model))
 
     # The UDF returns a 0-or-1-element ARRAY per turn and the caller
     # explodes it, instead of a struct + `last_ent IS NOT NULL` filter:
     # PushDownPredicates rewrites such a filter below the projection by
     # substituting the UDF call into the predicate, and ExtractPythonUDFs
-    # then materializes TWO ArrowEvalPython nodes — the whole digest (and
-    # any inlined labeler) executed twice per row. explode() drops empty
+    # then materializes TWO ArrowEvalPython nodes — the whole digest,
+    # labeling included, executed twice per row. explode() drops empty
     # arrays natively, there is no filter to push, and the plan gate
     # (tests/test_plans.py) pins exactly one ArrowEvalPython.
-    out_type = (
-        "array<struct<"
-        "intra: array<struct<subj:string,pred:string,obj:string>>, "
-        "first_ent: string, first_pred: string, last_ent: string>>"
-    )
+    @F.pandas_udf(DIGEST_TYPE)
+    def digest(texts: pd.Series) -> pd.Series:
+        link, preds, gaz, trans, mdl = bc.value
+        return pair_turns(texts, label_texts(texts, gaz, trans, mdl),
+                          link, preds)
 
-    def _n(s: str) -> str:
-        return " ".join(s.lower().split())
-
-    def _digest_batch(texts: pd.Series, spans_col) -> pd.Series:
-        link, preds, g, tr, mdl = bc.value
-        if g is not None:
-            from kgpipe.operators.labeler import label_texts
-
-            spans_col = label_texts(texts, g, tr, mdl)
-        out: list[list[dict]] = []
-        for text, spans in zip(texts, spans_col):
-            linked = []
-            if text is not None and spans is not None:
-                # struct rows from the spans column expose ["start"] etc.;
-                # the in-process labelers yield (start, end, cls, score)
-                # tuples — normalize without copying when already tuples
-                sp = sorted(
-                    ((s[0], s[1], s[2]) if isinstance(s, tuple)
-                     else (s["start"], s["end"], s["ent_type"])
-                     for s in spans),
-                    key=lambda t: (t[0], t[1]))
-                for st, en, ty in sp:
-                    ent = link.get((_n(text[st:en]), ty))
-                    if ent is not None:
-                        linked.append((st, en, ent))
-            if not linked:
-                out.append([])
-                continue
-            intra = []
-            for (ps, pe, pent), (cs, ce, cent) in zip(linked, linked[1:]):
-                pr = preds.get(_n(text[pe:cs]))
-                if pr is not None:
-                    intra.append({"subj": pent, "pred": pr, "obj": cent})
-            out.append([{
-                "intra": intra,
-                "first_ent": linked[0][2],
-                "first_pred": preds.get(_n(text[:linked[0][0]])),
-                "last_ent": linked[-1][2],
-            }])
-        return pd.Series(out, index=texts.index)
-
-    if inline_labeler is None:
-        @F.pandas_udf(out_type)
-        def digest(texts: pd.Series, spans_col: pd.Series) -> pd.Series:
-            return _digest_batch(texts, spans_col)
-
-        d = labeled.select(
-            "conv_id", "turn_idx",
-            F.explode(digest("text", "spans")).alias("d"))
-    else:
-        @F.pandas_udf(out_type)
-        def digest_inline(texts: pd.Series) -> pd.Series:
-            return _digest_batch(texts, None)
-
-        d = labeled.select(
-            "conv_id", "turn_idx",
-            F.explode(digest_inline("text")).alias("d"))
-    return d.select("conv_id", "turn_idx", "d.intra", "d.first_ent",
-                    "d.first_pred", "d.last_ent")
+    return (spread_for(spark, transcripts, model)
+            .select("conv_id", "turn_idx",
+                    F.explode(digest("text")).alias("d"))
+            .select("conv_id", "turn_idx", "d.*"))
 
 
 def triples_from_digests(digests: DataFrame, window: int = 3,
@@ -343,25 +341,23 @@ def emit_triples(d: DataFrame, window: int, dedup: bool = False,
                     F.col("t.conf").alias("conf")))
 
 
-def extract_triples_fused(spark: SparkSession, labeled: DataFrame,
+def extract_triples_fused(spark: SparkSession, transcripts: DataFrame,
                           candidate_dict, window: int = 3,
                           chunk: int | None = 4096,
                           predicates=None,
                           canon: dict | None = None,
                           dedup: bool = False,
-                          inline_labeler: str | None = None,
                           model=None) -> DataFrame:
-    """labeled -> raw triples via the narrow-shuffle digest path.
+    """transcripts -> raw triples via the narrow-shuffle digest path:
+    ``turn_digests`` (labeling with ``model``'s weights, the gazetteer
+    when ``None``) then ``triples_from_digests``.
 
     With ``canon`` (entity_id -> canonical_id dict) and ``dedup=True`` the
     output is the FINAL canonical triple table — link map composed with
     the canon map at broadcast-build time, per-turn max-conf dedup — and
     the plan's only shuffle is the narrow digest window. Defaults produce
-    the pre-canonicalization raw triples.
-    ``inline_labeler``/``model``: run labeling inside the digest UDF (see
-    turn_digests) — ``labeled`` may then be the bare transcripts."""
+    the pre-canonicalization raw triples."""
     return triples_from_digests(
-        turn_digests(spark, labeled, candidate_dict, predicates,
-                     canon=canon, inline_labeler=inline_labeler,
-                     model=model),
+        turn_digests(spark, transcripts, candidate_dict, predicates,
+                     canon=canon, model=model),
         window=window, chunk=chunk, dedup=dedup)

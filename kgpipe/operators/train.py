@@ -31,6 +31,7 @@ pipeline's ``labeler_model``.
 
 from __future__ import annotations
 
+import hashlib
 from dataclasses import dataclass
 
 import numpy as np
@@ -38,7 +39,6 @@ import pandas as pd
 
 from kgpipe.functions.tokenize import token_table, tokenize_batch
 from kgpipe.operators.labeler import (
-    NEG,
     N_TAGS,
     Gazetteer,
     build_gazetteer,
@@ -86,11 +86,14 @@ class TrainedLabeler:
     train_token_acc: float
     clusters: dict[str, int] | None = None
 
-    def decode_trans(self) -> np.ndarray:
-        """Learned transition scores with the hard BIO mask applied."""
-        masked = self.trans.copy()
-        masked[build_transitions() <= NEG] = NEG
-        return masked
+    def fingerprint(self) -> str:
+        """Content hash of everything decoding reads: the emission and
+        transition weights and the cluster map."""
+        clusters = sorted((w, int(c)) for w, c in
+                          (self.clusters or {}).items())
+        return hashlib.sha256(
+            self.W.tobytes() + self.trans.tobytes()
+            + repr(clusters).encode()).hexdigest()[:16]
 
     def emissions(self, texts: pd.Series, gaz: Gazetteer):
         """Learned (n_tok, T) emission scores of a batch, and its
@@ -388,7 +391,6 @@ def fit_perceptron(texts: pd.Series, candidate_dict: pd.DataFrame,
     # compact row ids over non-empty rows only (padding math needs it)
     rid = np.searchsorted(np.flatnonzero(keep), row_id)
 
-    bio_mask = build_transitions()
     W = np.zeros((D, N_TAGS), np.float32)
     Tr = np.zeros((N_TAGS, N_TAGS), np.float32)
     Wsum = np.zeros_like(W)
@@ -404,9 +406,7 @@ def fit_perceptron(texts: pd.Series, candidate_dict: pd.DataFrame,
     for _ep in range(epochs):
         em = _emissions(feat_pos, feat_idx, W, n_tok)
         em_pad, pos_in_row = pad_rows(em, rid, row_lengths_nz)
-        masked = Tr.copy()
-        masked[bio_mask <= NEG] = NEG
-        tags_pad = viterbi_batch(em_pad, masked)
+        tags_pad = viterbi_batch(em_pad, build_transitions(Tr))
         pred = tags_pad[rid, pos_in_row].astype(np.int64)
 
         wrong = pred != gold
@@ -450,7 +450,6 @@ def _train_fingerprint(texts: pd.Series, candidate_dict: pd.DataFrame,
                        **params) -> str:
     """Content hash of (training texts, dictionary, hyperparameters) —
     the disk-cache key. Row-order sensitive by design (training is)."""
-    import hashlib
     import json
 
     h = hashlib.sha256()

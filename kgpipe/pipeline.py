@@ -128,15 +128,9 @@ def run_pipeline(
     """
     from kgpipe.operators.relations import extract_triples_fused
 
-    # Labeling runs INSIDE the digest UDF: the labeled->digest two-UDF
-    # chain cannot be merged by Spark (dependent Python UDFs), so it ships
-    # every turn's text across the JVM<->Python boundary twice and the
-    # span structs back in between. Inline = one ArrowEvalPython, half the
-    # Arrow traffic.
     fused = functools.partial(
         extract_triples_fused, spark, transcripts, candidate_dict,
-        window=window, predicates=predicates, model=labeler_model,
-        inline_labeler="gaz" if labeler_model is None else "trained")
+        window=window, predicates=predicates, model=labeler_model)
     canon_pdf = canon_map_for(spark, candidate_dict)
     # no persist anywhere: every intermediate is referenced at most once
     # per plan. Block-manager persists measurably ANTI-scaled at high core
@@ -207,13 +201,11 @@ def run_pipeline_checkpointed(
     # digests checkpoint (and transitively everything downstream)
     pred_fp = hashlib.sha256(
         repr(sorted(pred_map.items())).encode()).hexdigest()[:8]
-    # the labeler weights are stage-1 config: a different trained model (or
-    # switching gazetteer<->trained) must invalidate the digests checkpoint
-    model_fp = (
-        hashlib.sha256(labeler_model.W.tobytes()
-                       + labeler_model.trans.tobytes()).hexdigest()[:8]
-        if labeler_model is not None else "gazetteer"
-    )
+    # the labeler's weight set is stage-1 config: a different trained model
+    # (weights, transitions or cluster map) or switching gazetteer<->trained
+    # must invalidate the digests checkpoint
+    model_fp = ("gazetteer" if labeler_model is None
+                else labeler_model.fingerprint())
     # digests depend on the dictionary+canon (both derived from dpath),
     # the predicate table (first_pred/intra matching happens inside the
     # digest UDF) and the labeler weights — but NOT on the turn window
@@ -225,12 +217,11 @@ def run_pipeline_checkpointed(
 
     canon_pdf = canon_map_for(spark, candidate_dict)
     canon_d = dict(zip(canon_pdf["entity_id"], canon_pdf["canonical_id"]))
-    inline_mode = "gaz" if labeler_model is None else "trained"
 
     def _digests(df: DataFrame) -> DataFrame:
         return turn_digests(
             spark, df, candidate_dict, predicates=pred_map, canon=canon_d,
-            inline_labeler=inline_mode, model=labeler_model)
+            model=labeler_model)
 
     run = CheckpointedRun(spark, run_dir)
     s1 = run.stage("digests", transcripts, _digests,

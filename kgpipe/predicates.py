@@ -14,7 +14,7 @@ extractor to the fixture package).
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 # predicate surface phrase -> predicate id
 DEFAULT_PRED_PHRASES: dict[str, str] = {
@@ -51,13 +51,3 @@ def predicates_dict(predicates=None) -> dict[str, str]:
         pdf = predicates.select("phrase", "pred").toPandas()
         return dict(zip(pdf["phrase"], pdf["pred"]))
     raise TypeError(f"unsupported predicate table type {type(predicates)}")
-
-
-def predicates_df(spark: SparkSession, predicates=None) -> DataFrame:
-    """The (phrase, pred) table as a broadcast-ready DataFrame."""
-    if isinstance(predicates, DataFrame):
-        return predicates.select("phrase", "pred")
-    d = predicates_dict(predicates)
-    return spark.createDataFrame(
-        list(d.items()), "phrase string, pred string"
-    )

@@ -157,10 +157,11 @@ def incremental_triples(spark: SparkSession, transcripts_stream: DataFrame,
                         candidate_dict: pd.DataFrame,
                         window: int = 3, predicates=None) -> DataFrame:
     """Streaming KG construction: the batch digest UDF (labeling, linking
-    and pairing inline: relations.turn_digests), a stateful lag per
+    and pairing in one pass: relations.turn_digests), a stateful lag per
     conversation, then the batch triple rules (relations.emit_triples).
 
-    Emits the batch pipeline's ``raw_triples`` (pre-canonicalization, no
+    Emits the batch pipeline's ``raw_triples`` with the gazetteer labeler
+    (``turn_digests``' default, no model; pre-canonicalization, no
     dedup). Text never leaves the digest UDF: the shuffle into the state
     operator moves digest rows only. Requires conversations to arrive in
     turn order across micro-batches (true for an append-only transcript
@@ -169,7 +170,7 @@ def incremental_triples(spark: SparkSession, transcripts_stream: DataFrame,
     from kgpipe.operators.relations import emit_triples, turn_digests
 
     digests = turn_digests(spark, transcripts_stream, candidate_dict,
-                           predicates, inline_labeler="gaz")
+                           predicates)
     lagged = digests.groupBy("conv_id").applyInPandasWithState(
         _lag_across_batches,
         outputStructType=_LAGGED,

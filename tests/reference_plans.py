@@ -1,10 +1,12 @@
 """Reference plans for the triple rules, kept as test oracles.
 
-``extract_triples`` is the window-over-exploded-mentions plan and
-``canonicalize`` the broadcast-join id rewrite plus groupBy dedup. The
-product builds every triple from turn digests
-(kgpipe/operators/relations.py); these independent plans are what the
-fused == reference gates compare it against. ``_lev`` is the plain
+``extract_triples`` is the window-over-exploded-mentions plan (with its
+``predicates_df`` broadcast table) and ``canonicalize`` the broadcast-join
+id rewrite plus groupBy dedup. The product builds every triple from turn
+digests (kgpipe/operators/relations.py); these independent plans are what
+the fused == reference gates compare it against. ``triples_from_spans``
+runs the product's pairing (``pair_turns``) over a given ``spans``
+column, so hand-built spans exercise the product code. ``_lev`` is the plain
 Levenshtein DP the vectorized canon verify kernel
 (kgpipe/operators/canon.py) is checked against.
 
@@ -39,10 +41,17 @@ from kgpipe.operators.labeler import (
     build_gazetteer,
     build_transitions,
     label_texts,
+    transitions_for,
     viterbi_batch,
 )
+from kgpipe.operators.relations import (
+    DIGEST_TYPE,
+    digest_maps,
+    pair_turns,
+    triples_from_digests,
+)
 from kgpipe.operators.train import TrainedLabeler, _emissions, extract_features
-from kgpipe.predicates import predicates_df
+from kgpipe.predicates import predicates_dict
 from kgpipe.schemas import ENT_CLASSES
 
 _TOKEN_RE = re.compile(TOKEN_PATTERN)
@@ -51,6 +60,39 @@ _SENTINEL = "\n"  # never appears in transcript text (single-line turns)
 
 def _norm(col):
     return F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")
+
+
+def predicates_df(spark: SparkSession, predicates=None) -> DataFrame:
+    """The (phrase, pred) table as a broadcast-ready DataFrame."""
+    if isinstance(predicates, DataFrame):
+        return predicates.select("phrase", "pred")
+    d = predicates_dict(predicates)
+    return spark.createDataFrame(
+        list(d.items()), "phrase string, pred string"
+    )
+
+
+def triples_from_spans(spark: SparkSession, labeled: DataFrame,
+                       candidate_dict, window: int = 3,
+                       chunk: int | None = None,
+                       predicates=None) -> DataFrame:
+    """Raw triples from a GIVEN ``spans`` column (struct rows, e.g. hand
+    built): the product's linking and pairing (``pair_turns``) in a
+    second pandas UDF over (text, spans), then ``triples_from_digests``.
+    The product labels inside its one digest UDF instead."""
+    link_map, pred_map = digest_maps(candidate_dict, predicates)
+
+    @F.pandas_udf(DIGEST_TYPE)
+    def digest(texts: pd.Series, spans_col: pd.Series) -> pd.Series:
+        spans = [None if row is None else
+                 [(s["start"], s["end"], s["ent_type"]) for s in row]
+                 for row in spans_col]
+        return pair_turns(texts, spans, link_map, pred_map)
+
+    d = labeled.select("conv_id", "turn_idx",
+                       F.explode(digest("text", "spans")).alias("d"))
+    return triples_from_digests(d.select("conv_id", "turn_idx", "d.*"),
+                                window=window, chunk=chunk)
 
 
 def extract_triples(spark: SparkSession, linked: DataFrame,
@@ -282,7 +324,7 @@ def decode_spans(texts: pd.Series, model: TrainedLabeler,
     rid = np.searchsorted(keep, row_id)
     em = _emissions(feat_pos, feat_idx, model.W, n_tok)
     em_pad, pos_in_row = _pad(em, rid, row_lengths[keep])
-    tags_pad = viterbi_batch(em_pad, model.decode_trans())
+    tags_pad = viterbi_batch(em_pad, transitions_for(model))
     flat = tags_pad[rid, pos_in_row].astype(np.int64)
     b_pos, s_char, e_char, cls_i = bio_flat_to_spans(
         flat, np.asarray(starts), np.asarray(ends))

@@ -184,6 +184,29 @@ def test_checkpointed_trained_labeler_and_model_invalidation(
     assert out2["run"].metrics["digests"]["buckets_computed"] > 0
 
 
+def test_cluster_map_change_invalidates_digests(spark, fixture_dir,
+                                                tmp_path_factory):
+    """Decoding reads a model's cluster map as well as its weights, so two
+    models that differ ONLY in ``clusters`` must not share digests."""
+    import dataclasses
+
+    import numpy as np
+
+    from kgpipe.operators.labeler import N_TAGS, build_transitions
+    from kgpipe.operators.train import TrainedLabeler
+
+    m1 = TrainedLabeler(
+        W=np.zeros((64, N_TAGS), np.float32), trans=build_transitions(),
+        D=64, epochs_run=0, train_token_acc=0.0, clusters={"alice": 0})
+    m2 = dataclasses.replace(m1, clusters={"alice": 1})
+    run_dir = str(tmp_path_factory.mktemp("ckpt-clusters"))
+    run_pipeline_checkpointed(spark, fixture_dir, run_dir, n_buckets=4,
+                              labeler_model=m1)
+    out = run_pipeline_checkpointed(spark, fixture_dir, run_dir,
+                                    n_buckets=4, labeler_model=m2)
+    assert out["run"].metrics["digests"]["buckets_computed"] > 0
+
+
 def test_lost_checkpoint_data_fails_loudly(spark, fixture_dir,
                                            tmp_path_factory):
     """A manifest that records rows while the data dir holds no parquet

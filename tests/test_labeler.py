@@ -14,6 +14,7 @@ from kgpipe.operators.labeler import (
     build_transitions,
     gazetteer_hits,
     label_texts,
+    transitions_for,
     viterbi_batch,
 )
 from kgpipe.schemas import ENT_CLASSES
@@ -96,7 +97,7 @@ def test_packed_path_equals_direct_udf_path(spark, unit_fixture_dir,
     packed = label_transcripts(spark, t, cd, model).select(
         "conv_id", "turn_idx", "spans")
     gaz = build_gazetteer(cd)
-    trans = build_transitions() if model is None else model.decode_trans()
+    trans = transitions_for(model)
 
     @F.pandas_udf(SPANS_ARRAY)
     def direct_udf(texts: pd.Series) -> pd.Series:

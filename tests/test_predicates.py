@@ -7,12 +7,12 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
-from kgpipe.operators.relations import extract_triples_fused
+from reference_plans import predicates_df, triples_from_spans
+
 from kgpipe.predicates import (
     DEFAULT_PRED_PHRASES,
     load_predicates,
     predicates_dict,
-    predicates_df,
 )
 
 
@@ -51,7 +51,7 @@ def test_custom_predicates_extract(spark, custom_labeled):
     custom = {"leads": "leads_team"}
     got = {
         (r.subj, r.pred, r.obj)
-        for r in extract_triples_fused(
+        for r in triples_from_spans(
             spark, labeled, cd, window=3, predicates=custom
         ).collect()
     }
@@ -62,7 +62,7 @@ def test_custom_predicates_extract(spark, custom_labeled):
 def test_default_predicates_miss_custom_phrase(spark, custom_labeled):
     # with the default table, 'leads' matches nothing
     labeled, cd = custom_labeled
-    assert extract_triples_fused(spark, labeled, cd, window=3).count() == 0
+    assert triples_from_spans(spark, labeled, cd, window=3).count() == 0
 
 
 def test_operators_no_longer_import_fixtures():

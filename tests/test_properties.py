@@ -114,7 +114,8 @@ def test_labeler_span_invariants(texts):
 
 
 # --- fused == exploded on random adversarial corpora ------------------------
-# The fused digest path is THE plan-gated hot path; the hand-built edge
+# The digest pairing (relations.pair_turns, fed hand-built spans through
+# reference_plans.triples_from_spans) is the product's; the hand-built edge
 # corpus (tests/test_relations_fused.py) pins known-tricky cases, this gate
 # draws random span layouts — empty turns, adjacent spans, unlinked aliases
 # between linked ones, predicate-phrase prefixes, turn-index gaps beyond the
@@ -165,9 +166,8 @@ def _random_corpus(draw):
 def test_fused_equals_exploded_on_random_corpora(spark, corpus):
     from kgpipe.operators.linker import dict_to_df, link_entities, top1_dict
     from kgpipe.operators.mentions import extract_mentions
-    from reference_plans import extract_triples
+    from reference_plans import extract_triples, triples_from_spans
 
-    from kgpipe.operators.relations import extract_triples_fused
     from kgpipe.schemas import TRANSCRIPTS
 
     t_rows, s_rows = corpus
@@ -193,8 +193,8 @@ def test_fused_equals_exploded_on_random_corpora(spark, corpus):
                            k=1, ranked=False)
     ref = tset(extract_triples(spark, linked, window=3, chunk=None,
                                predicates=_PREDS))
-    got = tset(extract_triples_fused(spark, labeled, cd, window=3,
-                                     chunk=None, predicates=_PREDS))
+    got = tset(triples_from_spans(spark, labeled, cd, window=3,
+                                  chunk=None, predicates=_PREDS))
     assert got == ref
 
 

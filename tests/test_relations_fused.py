@@ -11,8 +11,7 @@ import os
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
-from reference_plans import canonicalize, extract_triples
+from reference_plans import canonicalize, extract_triples, triples_from_spans
 
 from kgpipe.operators.labeler import label_transcripts
 from kgpipe.operators.linker import dict_to_df, link_entities, top1_dict
@@ -27,11 +26,10 @@ def unit(spark, unit_fixture_dir):
         spark, os.path.join(unit_fixture_dir, "transcripts.parquet"))
     cd = pd.read_parquet(
         os.path.join(unit_fixture_dir, "candidate_dict.parquet"))
-    labeled = label_transcripts(spark, t, cd).cache()
     linked = link_entities(
-        extract_mentions(labeled),
+        extract_mentions(label_transcripts(spark, t, cd)),
         dict_to_df(spark, top1_dict(cd)), k=1, ranked=False).cache()
-    return labeled, linked, cd
+    return t, linked, cd
 
 
 def _tset(df):
@@ -41,63 +39,72 @@ def _tset(df):
 
 
 def test_fused_equals_exploded_gazetteer(spark, unit):
-    labeled, linked, cd = unit
+    t, linked, cd = unit
     ref = _tset(extract_triples(spark, linked, window=3, chunk=None))
     assert ref, "fixture must produce triples"
-    got = _tset(extract_triples_fused(
-        spark, labeled, cd, window=3, chunk=None))
+    got = _tset(extract_triples_fused(spark, t, cd, window=3, chunk=None))
     assert got == ref
 
 
 def test_fused_chunked_equals_unchunked(spark, unit):
-    labeled, linked, cd = unit
-    ref = _tset(extract_triples_fused(
-        spark, labeled, cd, window=3, chunk=None))
+    t, _linked, cd = unit
+    ref = _tset(extract_triples_fused(spark, t, cd, window=3, chunk=None))
     for c in (4, 7, 64):
         got = _tset(extract_triples_fused(
-            spark, labeled, cd, window=3, chunk=c))
+            spark, t, cd, window=3, chunk=c))
         assert got == ref, f"chunk={c}"
 
 
 def test_fused_equals_exploded_trained(spark, unit_fixture_dir, unit_model):
     """Trained weights: the exploded reference over label_transcripts'
-    spans == the digest path over the same spans == the digest path
-    labeling inline."""
+    spans == the digest path labeling with the same model."""
     tpath = os.path.join(unit_fixture_dir, "transcripts.parquet")
     cd = pd.read_parquet(
         os.path.join(unit_fixture_dir, "candidate_dict.parquet"))
     t = read_transcripts(spark, tpath)
-    labeled = label_transcripts(spark, t, cd, unit_model).cache()
     linked = link_entities(
-        extract_mentions(labeled),
+        extract_mentions(label_transcripts(spark, t, cd, unit_model)),
         dict_to_df(spark, top1_dict(cd)), k=1, ranked=False)
     ref = _tset(extract_triples(spark, linked, window=3, chunk=None))
     assert ref, "fixture must produce triples"
     got = _tset(extract_triples_fused(
-        spark, labeled, cd, window=3, chunk=None))
+        spark, t, cd, window=3, chunk=None, model=unit_model))
     assert got == ref
-    inline = _tset(extract_triples_fused(
-        spark, t, cd, window=3, chunk=None, inline_labeler="trained",
-        model=unit_model))
-    assert inline == ref
 
 
-@pytest.mark.parametrize("mode,with_model", [
-    ("gaz", True), ("trained", False), (None, True)])
-def test_inline_labeler_and_model_must_agree(spark, unit, mode, with_model):
-    """A model goes with inline_labeler='trained' only, and 'trained'
-    needs one: a model passed with 'gaz' (or with no inline labeling) is
-    an error, not silently ignored."""
+def _zero_model():
     from kgpipe.operators.labeler import N_TAGS, build_transitions
     from kgpipe.operators.train import TrainedLabeler
 
-    labeled, _linked, cd = unit
-    model = TrainedLabeler(
+    return TrainedLabeler(
         W=np.zeros((64, N_TAGS), np.float32), trans=build_transitions(),
-        D=64, epochs_run=0, train_token_acc=0.0) if with_model else None
-    src = labeled.drop("spans") if mode else labeled
+        D=64, epochs_run=0, train_token_acc=0.0)
+
+
+@pytest.mark.parametrize("mode,with_model", [
+    ("gaz", True), ("trained", False)])
+def test_inline_labeler_and_model_must_agree(spark, unit, mode, with_model):
+    """The ``inline_labeler`` cross-check: 'gaz' takes no model and
+    'trained' needs one — a mismatch is an error, not silently ignored."""
+    t, _linked, cd = unit
+    model = _zero_model() if with_model else None
     with pytest.raises(ValueError, match="model"):
-        turn_digests(spark, src, cd, inline_labeler=mode, model=model)
+        turn_digests(spark, t, cd, inline_labeler=mode, model=model)
+
+
+def test_model_alone_selects_trained_weights(spark, unit):
+    """With no ``inline_labeler``, a model alone switches the digest UDF
+    to its weights: all-zero emissions decode every token as O, so no
+    span and no triple survive, where the gazetteer finds triples."""
+    t, _linked, cd = unit
+    assert extract_triples_fused(spark, t, cd).count() > 0
+    assert extract_triples_fused(spark, t, cd, model=_zero_model()).count() == 0
+
+
+def test_prelabeled_frame_is_rejected(spark, unit):
+    t, _linked, cd = unit
+    with pytest.raises(ValueError, match="spans"):
+        turn_digests(spark, label_transcripts(spark, t, cd), cd)
 
 
 def _edge_corpus(spark):
@@ -157,7 +164,7 @@ def _edge_corpus(spark):
 
 def test_edge_corpus_semantics(spark):
     labeled, cd = _edge_corpus(spark)
-    got = _tset(extract_triples_fused(
+    got = _tset(triples_from_spans(
         spark, labeled, cd, window=3, chunk=None,
         predicates={"works at": "works_at", "visited": "visited",
                     "then": "then"}))
@@ -185,8 +192,8 @@ def test_edge_corpus_semantics(spark):
 def test_digest_rows_are_narrow(spark, unit):
     """The window input must not carry text: assert the digest schema is
     ids + small arrays only."""
-    labeled, _, cd = unit
-    d = turn_digests(spark, labeled, cd)
+    t, _, cd = unit
+    d = turn_digests(spark, t, cd)
     assert set(d.columns) == {
         "conv_id", "turn_idx", "intra", "first_ent", "first_pred",
         "last_ent"}

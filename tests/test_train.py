@@ -17,7 +17,12 @@ from reference_plans import decode_spans
 from reference_plans import silver_tags as silver_tags_reference
 
 from kgpipe.functions.tokenize import tokenize_batch
-from kgpipe.operators.labeler import build_gazetteer, build_transitions, label_texts
+from kgpipe.operators.labeler import (
+    build_gazetteer,
+    build_transitions,
+    label_texts,
+    transitions_for,
+)
 from kgpipe.operators.train import fit_perceptron, silver_tags
 
 
@@ -62,7 +67,7 @@ def test_heldout_span_pr_at_least_95(corpus, model):
     silver = _span_sets(test["text"],
                         label_texts(test["text"], gaz, build_transitions()))
     predicted = _span_sets(test["text"], label_texts(
-        test["text"], gaz, model.decode_trans(), model))
+        test["text"], gaz, transitions_for(model), model))
     assert silver, "held-out split must contain mentions"
     tp = len(silver & predicted)
     precision = tp / len(predicted) if predicted else 0.0
@@ -81,7 +86,7 @@ def test_trained_label_texts_equals_reference_decode(corpus, model):
     _train, test, cd = corpus
     for d in (cd, dict_holdout_split(cd)[0]):
         gaz = build_gazetteer(d)
-        got = label_texts(test["text"], gaz, model.decode_trans(), model)
+        got = label_texts(test["text"], gaz, transitions_for(model), model)
         want = decode_spans(test["text"], model, gaz)
         assert sum(map(len, want)) > 0
         assert list(got) == list(want)
@@ -116,7 +121,7 @@ def test_learned_weights_not_handset(model):
     # the model must have actually learned: nonzero spread across many
     # hashed features, and BIO-invalid transitions still impossible
     assert (np.abs(model.W) > 0).sum() > 100
-    masked = model.decode_trans()
+    masked = transitions_for(model)
     from kgpipe.operators.labeler import NEG
     from kgpipe.schemas import ENT_CLASSES
 
@@ -189,7 +194,7 @@ def test_withheld_entity_generalization(corpus):
 
     silver = label_texts(test["text"], build_gazetteer(cd), build_transitions())
     pred = label_texts(test["text"], build_gazetteer(cd_train),
-                       m.decode_trans(), m)
+                       transitions_for(m), m)
 
     gold_wh, gold_kn, pred_all = set(), set(), set()
     for i, spans in enumerate(silver):
@@ -275,6 +280,6 @@ def test_cluster_template_survives_disk_roundtrip(corpus, tmp_path):
     m2 = fit_or_load(texts, cd, cache_dir=str(tmp_path))
     assert m1.clusters and m1.clusters == m2.clusters
     g = build_gazetteer(cd)
-    p1 = label_texts(test["text"].head(100), g, m1.decode_trans(), m1)
-    p2 = label_texts(test["text"].head(100), g, m2.decode_trans(), m2)
+    p1 = label_texts(test["text"].head(100), g, transitions_for(m1), m1)
+    p2 = label_texts(test["text"].head(100), g, transitions_for(m2), m2)
     assert list(p1) == list(p2)
