@@ -7,6 +7,10 @@ line::
     {"metric": "total_bench_sec", "value": N, "unit": "sec",
      "queries": {"q": sec, ...}, "sf": 0.1, "triples_per_sec": N, ...}
 
+That full record is followed, last, by a compact summary line of under
+2,000 bytes (``summary_line``), so a reader that keeps only the tail of the
+output still parses one.
+
 The headline number for the north rule (triples/sec) is the ``kg_pipeline``
 entry: the full KG-construction pipeline (CRF-style labeling -> linking ->
 turn-window triple extraction -> similarity-join + connected-components
@@ -75,6 +79,33 @@ def host_control() -> dict:
         p.map(_burn, [6_000_000] * 64)
         out["par32_Mops"] = round(64 * 6.0 / (_t.time() - t0), 1)
     return out
+
+
+def _clip(d: dict, n: int) -> dict:
+    """The first ``n`` items of ``d``, keys cut to 64 characters."""
+    return {str(k)[:64]: v for k, v in list(d.items())[:n]}
+
+
+def summary_line(line: dict) -> str:
+    """The compact last line of the bench output: the headline total,
+    triples/sec, the primary (N -> 4N) scaling efficiency, the 5 slowest
+    queries, which durable stage families were warm and the numeric host
+    control figures. At most 13 entries with keys cut to 64 characters,
+    so the line stays under 2,000 bytes however large ``line`` grows."""
+    times = {k: v for k, v in line.get("queries", {}).items() if v > 0}
+    slowest = sorted(times.items(), key=lambda kv: -kv[1])[:5]
+    primary = (line.get("scaling") or {}).get("primary") or {}
+    durable = line.get("durable_state") or {}
+    host = line.get("host_control") or {}
+    out = {"metric": "total_bench_sec", "value": line.get("value"),
+           "unit": "sec", "triples_per_sec": line.get("triples_per_sec"),
+           "scaling_efficiency": primary.get("scaling_efficiency_N_to_4N"),
+           "slowest_queries": _clip(dict(slowest), 5),
+           "durable_state": _clip({f: d.get("warm") for f, d in
+                                   durable.items()}, 4),
+           "host_control": _clip({k: v for k, v in host.items()
+                                  if isinstance(v, (int, float))}, 4)}
+    return json.dumps(out)
 
 
 def main() -> int:
@@ -166,6 +197,7 @@ def main() -> int:
     line = {"metric": "total_bench_sec", "value": total, "unit": "sec",
             "queries": timings, "sf": sf, **extras}
     print(json.dumps(line))
+    print(summary_line(line))
     return 0
 
 

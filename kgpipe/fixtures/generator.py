@@ -327,7 +327,12 @@ SCALES = {
 }
 
 
-def materialize(scale: str, base_dir: str = "/root/repo/.fixtures",
+# fixtures are cached in the checkout that holds this package
+FIXTURES_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__)))), ".fixtures")
+
+
+def materialize(scale: str, base_dir: str = FIXTURES_DIR,
                 seed: int = 42) -> str:
     """Write the fixture parquet files for ``scale`` (cached, deterministic).
 

@@ -66,12 +66,14 @@ def test_default_predicates_miss_custom_phrase(spark, custom_labeled):
 
 
 def test_operators_no_longer_import_fixtures():
+    import os
     import subprocess
 
     r = subprocess.run(
         ["grep", "-rn", "kgpipe.fixtures", "kgpipe/operators/",
          "kgpipe/streaming/", "--include=*.py"],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     )
     assert r.stdout.strip() == "", r.stdout
 

@@ -227,3 +227,50 @@ def test_expire_cleans_old_staging_orphans(spark, tmp_path, v1_rows):
     assert not os.path.exists(old)
     assert os.path.exists(new)
     assert read_triples(spark, path).count() == 30
+
+
+def test_product_write_rides_the_window_stage(spark, tmp_path, monkeypatch,
+                                              unit_fixture_dir):
+    """The frame ``write_triples`` writes for the product triples keeps the
+    plan's one Exchange (the conv_id window) and adds no repartition; the
+    in-task ``(pred, subj)`` sort still gives one ``pred`` per file, files
+    sorted by ``subj``, and manifest subj bounds equal to the data's."""
+    import re
+
+    import pandas as pd
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from kgpipe.pipeline import read_transcripts, run_pipeline
+
+    t = read_transcripts(
+        spark, os.path.join(unit_fixture_dir, "transcripts.parquet"))
+    cd = pd.read_parquet(
+        os.path.join(unit_fixture_dir, "candidate_dict.parquet"))
+    triples = run_pipeline(spark, t, cd)["triples"]
+    written = []
+    write = type(triples).write
+    monkeypatch.setattr(type(triples), "write", property(
+        lambda df: written.append(df) or write.fget(df)))
+    path = str(tmp_path / "kg")
+    n = write_triples(triples, path)
+    (frame,) = written
+    qe = frame._jdf.queryExecution()
+    assert "RepartitionByExpression" not in qe.optimizedPlan().toString()
+    p = qe.executedPlan().toString()
+    assert len(re.findall(r"\bExchange ", p)) == 1, p[:1500]
+    assert "hashpartitioning(conv_id" in p, p[:1500]
+
+    snap = json.load(open(os.path.join(path, "metadata", "snap-000001.json")))
+    assert n > 0 and sum(m["rows"] for m in snap["manifest"]) == n
+    preds_per_file = {
+        r.f: r.k for r in read_triples(spark, path)
+        .groupBy(F.input_file_name().alias("f"))
+        .agg(F.countDistinct("pred").alias("k")).collect()}
+    assert len(preds_per_file) == len(snap["manifest"])
+    assert set(preds_per_file.values()) == {1}
+    for m in snap["manifest"]:
+        subj = pq.read_table(os.path.join(path, m["path"]),
+                             columns=["subj"])["subj"].to_pylist()
+        assert subj == sorted(subj), m["path"]
+        assert (m["subj_min"], m["subj_max"]) == (subj[0], subj[-1])

@@ -12,6 +12,8 @@ import os
 import shutil
 import subprocess
 
+from kgpipe.fixtures.generator import FIXTURES_DIR, materialize
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SPARK_SUBMIT = shutil.which("spark-submit") or "/opt/spark/bin/spark-submit"
 
@@ -26,16 +28,13 @@ def test_spark_submit_pyfiles_zip(tmp_path):
     zip_path = build()
     driver = tmp_path / "run_pipeline.py"
     shutil.copy(os.path.join(REPO, "run_pipeline.py"), driver)
-    fixture = sorted(
-        p for p in os.listdir(os.path.join(REPO, ".fixtures"))
-        if p.startswith("unit-"))
-    assert fixture, "unit fixture must exist (materialize('unit'))"
+    fixture = materialize("unit")
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     out_dir = tmp_path / "kg_out"
     proc = subprocess.run(
         [SPARK_SUBMIT, "--master", "local[8]", "--py-files", zip_path,
          str(driver),
-         "--input", os.path.join(REPO, ".fixtures", fixture[0]),
+         "--input", fixture,
          "--output", str(out_dir), "--eval"],
         cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300)
     assert proc.returncode == 0, proc.stderr[-2000:]
@@ -45,3 +44,11 @@ def test_spark_submit_pyfiles_zip(tmp_path):
     assert rec["metrics"]["precision"] == 1.0
     assert rec["metrics"]["recall"] == 1.0
     assert rec["triples"] > 0
+
+
+def test_fixtures_resolve_in_this_checkout():
+    """Fixtures are cached in the checkout that holds these tests, so a
+    copy of the repo reads and writes its own ``.fixtures/``."""
+    want = os.path.join(REPO, ".fixtures")
+    assert FIXTURES_DIR == want
+    assert os.path.dirname(materialize("unit")) == want
