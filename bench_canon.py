@@ -96,7 +96,6 @@ def synth_dictionary():
 
 
 def main() -> int:
-    os.environ.setdefault("KGPIPE_STAGE_METRICS", "1")
     master = os.environ.get("KGPIPE_CANON_MASTER", "local[32]")
     try:
         n_cores = int(master.split("[")[1].rstrip("]"))

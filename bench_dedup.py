@@ -73,7 +73,6 @@ def synth_corpus_pdf():
 
 
 def main() -> int:
-    os.environ.setdefault("KGPIPE_STAGE_METRICS", "1")
     master = os.environ.get("KGPIPE_DEDUP_MASTER", "local[32]")
     try:
         n_cores = int(master.split("[")[1].rstrip("]"))
@@ -136,7 +135,7 @@ def main() -> int:
         "stage_metrics": {k: {m: v[m] for m in
                               ("wall_ms", "rows_out", "buckets_computed")}
                           for k, v in out["metrics"].items()},
-        "counters": (stage_counters(spark) or {}).get("totals"),
+        "counters": stage_counters(spark)["totals"],
     }
     print(json.dumps(line))
     shutil.rmtree(work, ignore_errors=True)

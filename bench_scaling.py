@@ -84,8 +84,7 @@ def run_level(fixture: str, cpus: int) -> dict:
     really consumes ~3x its nominal cores and understates scaling.
     ``taskset -c 0..N-1`` makes the run an honest N-core-cluster proxy:
     everything the job spawns (JVM + pyspark daemons) inherits the mask."""
-    env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus),
-               KGPIPE_STAGE_METRICS="1")
+    env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus))
     outdir = f"/tmp/scalebench_out_{cpus}"
     last_err = None
     for attempt in range(2):  # retry once: the host sporadically wedges a
@@ -111,7 +110,7 @@ def run_level(fixture: str, cpus: int) -> dict:
                     # the job's own per-stage shuffle/spill/CPU counters:
                     # identical bytes + inflated CPU across levels pins the
                     # host-contention diagnosis on job evidence, not probes
-                    "stage_counters": rec.get("stage_counters")}
+                    "stage_counters": rec["stage_counters"]}
         except (subprocess.TimeoutExpired, IndexError, json.JSONDecodeError) as e:
             last_err = e
             subprocess.run(["pkill", "-9", "-f", "run_pipeline.py"],
@@ -208,13 +207,13 @@ def main() -> int:
                               "for the identical job; see cpu_burn_control for "
                               "the raw-CPU ceiling"},
         # job-side evidence for the above: per-level totals from the
-        # status API of THIS invocation's fresh runs — compare shuffle/input
-        # bytes (should be ~constant) against executorCpuTime (inflates
-        # with host contention)
+        # status store of THIS invocation's fresh runs — compare shuffle/
+        # input bytes (should be ~constant) against executorCpuTime
+        # (inflates with host contention)
         "stage_counter_totals_fresh": {
-            "2": (n2f.get("stage_counters") or {}).get("totals"),
-            "8": (n8f.get("stage_counters") or {}).get("totals"),
-            "32": (n32f.get("stage_counters") or {}).get("totals"),
+            "2": n2f["stage_counters"]["totals"],
+            "8": n8f["stage_counters"]["totals"],
+            "32": n32f["stage_counters"]["totals"],
         },
         "cpu_burn_control": cpu_burn_control(),
         "note": f"fresh JVM per level, identical job+input, best of "

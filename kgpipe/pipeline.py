@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from kgpipe.operators.labeler import label_transcripts
 from kgpipe.operators.linker import dict_to_df, link_entities, top1_dict
 from kgpipe.operators.mentions import extract_mentions
+from kgpipe.predicates import load_predicates, predicates_dict
 from kgpipe.schemas import TRANSCRIPTS
 
 
@@ -55,6 +56,15 @@ def locate_transcripts(fixture_dir: str) -> str:
             return p
     raise FileNotFoundError(
         f"no transcripts file in {fixture_dir}; probed {', '.join(probed)}")
+
+
+def fixture_predicates(fixture_dir: str, predicates):
+    """``predicates``, else the dir's predicates.parquet if present: the
+    one rule both fixture-dir entry points apply."""
+    ppath = os.path.join(fixture_dir, "predicates.parquet")
+    if predicates is None and os.path.exists(ppath):
+        return load_predicates(ppath)
+    return predicates
 
 
 # Both canon builders run canon_blocks and return the same map: up to this
@@ -188,7 +198,6 @@ def run_pipeline_checkpointed(
 
     from kgpipe.operators.checkpoint import CheckpointedRun, input_fingerprint
     from kgpipe.operators.relations import triples_from_digests, turn_digests
-    from kgpipe.predicates import predicates_dict
     from kgpipe.sources.transcripts import read_transcripts_any
 
     tpath = locate_transcripts(fixture_dir)
@@ -196,7 +205,7 @@ def run_pipeline_checkpointed(
     transcripts = read_transcripts_any(spark, tpath)
     candidate_dict = pd.read_parquet(dpath)
 
-    pred_map = predicates_dict(predicates)
+    pred_map = predicates_dict(fixture_predicates(fixture_dir, predicates))
     # the predicate table is stage config: changing it must invalidate the
     # digests checkpoint (and transitively everything downstream)
     pred_fp = hashlib.sha256(
@@ -273,20 +282,17 @@ def run_from_dir(spark: SparkSession, fixture_dir: str,
     the input (``fit_labeler``) and labels with it instead of the
     hand-weighted gazetteer decoder.
     """
-    from kgpipe.predicates import load_predicates
     from kgpipe.sources.transcripts import read_transcripts_any
 
     tpath = locate_transcripts(fixture_dir)
     candidate_dict = pd.read_parquet(
         os.path.join(fixture_dir, "candidate_dict.parquet"))
-    if predicates is None:
-        ppath = os.path.join(fixture_dir, "predicates.parquet")
-        predicates = load_predicates(ppath) if os.path.exists(ppath) else None
     model = (fit_labeler(spark, tpath, candidate_dict, train_sample)
              if trained else None)
     out = run_pipeline(spark, read_transcripts_any(spark, tpath),
                        candidate_dict, window=window,
-                       predicates=predicates, labeler_model=model)
+                       predicates=fixture_predicates(fixture_dir, predicates),
+                       labeler_model=model)
     gold_path = os.path.join(fixture_dir, "gold_triples.parquet")
     if os.path.exists(gold_path):
         out["gold"] = spark.read.parquet(gold_path)

@@ -54,11 +54,10 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("KGPIPE_DRIVER_MEM", "16g"))
         .config("spark.driver.extraJavaOptions",
                 os.environ.get("KGPIPE_JAVA_OPTS", "-XX:+UseParallelGC"))
-        # UI normally off (startup cost in tests); KGPIPE_STAGE_METRICS=1
-        # turns it on so the status REST API can report per-stage shuffle/
-        # spill/CPU counters (kgpipe/stage_counters.py — scaling evidence)
-        .config("spark.ui.enabled",
-                "true" if os.environ.get("KGPIPE_STAGE_METRICS") else "false")
+        # UI off (startup cost): per-stage shuffle/spill/CPU counters come
+        # from the in-process status store, which runs without it
+        # (kgpipe/stage_counters.py — scaling evidence)
+        .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
     for k, v in (extra_conf or {}).items():

@@ -48,25 +48,19 @@ def main(argv: list[str] | None = None) -> int:
     args = ap.parse_args(argv)
 
     from kgpipe.operators.evaluate import evaluate_triples
+    from kgpipe.predicates import load_predicates
     from kgpipe.session import get_spark
     from kgpipe.sources.storage import write_triples
+    from kgpipe.stage_counters import stage_counters
 
     import os
 
     spark = get_spark("kgpipe-run", master=args.master)
     t0 = time.time()
-    # resolve the predicate table ONCE so both execution paths (plain and
-    # checkpointed) see identical config — the checkpointed branch silently
-    # ignoring predicates.parquet was a silent-wrong-results bug. Both
-    # paths find the transcripts with locate_transcripts (any format).
-    from kgpipe.predicates import load_predicates
-
-    predicates = None
-    if args.predicates:
-        predicates = load_predicates(args.predicates)
-    elif os.path.exists(os.path.join(args.input, "predicates.parquet")):
-        predicates = load_predicates(
-            os.path.join(args.input, "predicates.parquet"))
+    # without --predicates both paths fall back to the input dir's
+    # predicates.parquet themselves (pipeline.fixture_predicates)
+    predicates = (load_predicates(args.predicates) if args.predicates
+                  else None)
     if args.checkpoint_dir:
         from kgpipe.pipeline import (
             fit_labeler,
@@ -98,11 +92,8 @@ def main(argv: list[str] | None = None) -> int:
         expire_snapshots(args.output, keep_last=args.expire_keep_last)
     wall = time.time() - t0
     report = {"triples": n, "wall_sec": round(wall, 2),
-              "triples_per_sec": round(n / wall, 1), "output": args.output}
-    if os.environ.get("KGPIPE_STAGE_METRICS"):
-        from kgpipe.stage_counters import stage_counters
-
-        report["stage_counters"] = stage_counters(spark)
+              "triples_per_sec": round(n / wall, 1), "output": args.output,
+              "stage_counters": stage_counters(spark)}
     if args.checkpoint_dir:
         report["stage_metrics"] = out["metrics"]
     if args.eval:

@@ -345,3 +345,27 @@ def test_digest_layout_resume_skips_everything(spark, fixture_dir,
     for stage, m in out2["metrics"].items():
         assert m["buckets_computed"] == 0, (stage, m)
     assert _triple_set(out2["triples"]) == want
+
+
+def test_checkpointed_reads_fixture_predicates(spark, fixture_dir, tmp_path):
+    """Both fixture-dir entry points apply the dir's predicates.parquet
+    when no table is passed, so they emit the same triples."""
+    import shutil
+
+    import pandas as pd
+
+    from kgpipe.predicates import DEFAULT_PRED_PHRASES
+
+    fx = tmp_path / "fixture_with_predicates"
+    fx.mkdir()
+    for name in ("transcripts.parquet", "candidate_dict.parquet"):
+        shutil.copy(os.path.join(fixture_dir, name), fx / name)
+    preds = {**DEFAULT_PRED_PHRASES, "works at": "employed_by"}
+    pd.DataFrame({"phrase": list(preds), "pred": list(preds.values())}
+                 ).to_parquet(fx / "predicates.parquet", index=False)
+
+    want = _triple_set(run_from_dir(spark, str(fx))["triples"])
+    got = _triple_set(run_pipeline_checkpointed(
+        spark, str(fx), str(tmp_path / "ck"))["triples"])
+    assert got == want
+    assert "employed_by" in {t[1] for t in got}

@@ -44,6 +44,7 @@ def test_spark_submit_pyfiles_zip(tmp_path):
     assert rec["metrics"]["precision"] == 1.0
     assert rec["metrics"]["recall"] == 1.0
     assert rec["triples"] > 0
+    assert rec["stage_counters"]["totals"]["numStages"] > 0
 
 
 def test_fixtures_resolve_in_this_checkout():
