@@ -17,8 +17,14 @@ The engine re-expresses the reference's extraction pipeline Spark-first:
   function per (class, first-token) block (``operators.canon``)
 * triples materialize to partitioned tables with per-partition lineage
   manifests for resume (``sources.storage``, ``operators.checkpoint``)
+* importing kgpipe in a Spark Python worker stops the per-task re-read of
+  its zip archives (``pyworker``)
 
 Everything is DataFrame/Catalyst; no RDD API anywhere.
 """
 
 __version__ = "0.1.0"
+
+from kgpipe import pyworker as _pyworker  # noqa: E402
+
+_pyworker.install()

@@ -262,18 +262,13 @@ def triples_from_digests(digests: DataFrame, window: int = 3,
             ((F.col("turn_idx") / F.lit(chunk)).cast("long") + 1).alias("c"),
             F.lit(True).alias("g"))
         near_end = (F.col("turn_idx") % F.lit(chunk)) >= F.lit(chunk - window)
-        d = (d
-             .withColumn("_cg", F.explode(
-                 F.when(near_end, F.array(own, ghost))
-                  .otherwise(F.array(own))))
-             .withColumn("_chunk", F.col("_cg.c"))
-             .withColumn("_ghost", F.col("_cg.g"))
-             .drop("_cg"))
-        w = Window.partitionBy("conv_id", "_chunk").orderBy("turn_idx")
-        live = ~F.col("_ghost")
-    d = (d
-         .withColumn("prev_turn", F.lag("turn_idx").over(w))
-         .withColumn("prev_last", F.lag("last_ent").over(w)))
+        d = d.select("*", F.explode(
+            F.when(near_end, F.array(own, ghost))
+             .otherwise(F.array(own))).alias("_cg"))
+        w = Window.partitionBy("conv_id", "_cg.c").orderBy("turn_idx")
+        live = ~F.col("_cg.g")
+    d = d.select("*", F.lag("turn_idx").over(w).alias("prev_turn"),
+                 F.lag("last_ent").over(w).alias("prev_last"))
     return emit_triples(d, window=window, dedup=dedup, live=live)
 
 
@@ -284,61 +279,57 @@ def emit_triples(d: DataFrame, window: int, dedup: bool = False,
     -> triples. The one implementation of the triple rules: the batch
     window and the streaming state both end here.
 
-    Each row emits concat(its intra triples at conf 1.0, the cross triple
-    as a 0-or-1-element array at conf 0.9 when ``first_pred`` matched and
-    ``prev_turn >= turn_idx - window``) through a single explode —
-    union(A(d), B(d)) would consume the d subtree twice. Rows where the
-    ``live`` column is false emit nothing (the chunk ghosts)."""
+    Each row emits its intra triples at conf 1.0, then the cross triple at
+    conf 0.9 when ``first_pred`` matched and ``prev_turn >= turn_idx -
+    window``, through a single posexplode of their concat — union(A(d),
+    B(d)) would consume the d subtree twice. Rows where the ``live``
+    column is false emit nothing (the chunk ghosts).
+
+    ``dedup``: the triple key (subj, pred, obj, conv_id, turn_idx)
+    includes the turn, so duplicates are turn-local and each turn is one
+    row here; ``array_distinct`` drops repeated intra triples, and a
+    cross triple that is also an intra triple is dropped, so the 1.0 copy
+    stays (max conf, no shuffle). Built-in array functions only: a Python
+    lambda in ``transform``/``filter`` costs py4j round trips at plan time
+    and runs interpreted (CodegenFallback)."""
+    spo = "array<struct<subj:string,pred:string,obj:string>>"
+    empty = F.array().cast(spo)
     cross_ok = (
         F.col("first_pred").isNotNull()
         & F.col("prev_turn").isNotNull()
         & (F.col("prev_turn") >= F.col("turn_idx") - window)
     )
-    conf_f = lambda v: F.lit(v).cast("float")  # noqa: E731
-    empty = F.array().cast(
-        "array<struct<subj:string,pred:string,obj:string,conf:float>>")
     # coalesce: a null intra would null the whole concat and silently drop
     # the row's cross triple with it (digest rows always carry [], but the
     # guard costs nothing and the failure mode is silent data loss)
-    intra_items = F.coalesce(
-        F.transform("intra", lambda x: F.struct(
-            x["subj"].alias("subj"), x["pred"].alias("pred"),
-            x["obj"].alias("obj"), conf_f(1.0).alias("conf"))),
-        empty)
+    intra = F.coalesce(F.col("intra"), empty)
     if live is not None:
         cross_ok = live & cross_ok
-        intra_items = F.when(live, intra_items).otherwise(empty)
-    cross_items = F.when(cross_ok, F.array(F.struct(
-        F.col("prev_last").alias("subj"),
-        F.col("first_pred").alias("pred"),
-        F.col("first_ent").alias("obj"),
-        conf_f(0.9).alias("conf"),
-    ))).otherwise(empty)
-    items = F.concat(intra_items, cross_items)
+        intra = F.when(live, intra).otherwise(empty)
     if dedup:
-        # The triple dedup key is (subj, pred, obj, conv_id, turn_idx) —
-        # it INCLUDES the turn, so duplicates are turn-local by definition
-        # and each turn is exactly one pre-explode row here. Dedup the
-        # per-turn array instead of a corpus-scale dropDuplicates
-        # exchange: sort desc (equal (s,p,o) runs become adjacent with
-        # conf DESC), keep each run's first element — i.e. MAX conf, a
-        # deterministic rule where dropDuplicates kept a plan-dependent
-        # arbitrary row when the same triple arose both intra (1.0) and
-        # cross (0.9). All JVM higher-order functions, no shuffle.
-        d = d.withColumn("_items", F.sort_array(items, asc=False))
-        arr = F.col("_items")
-        items = F.filter(arr, lambda x, i: (i == F.lit(0)) | (
-            (x["subj"] != F.get(arr, i - 1)["subj"])
-            | (x["pred"] != F.get(arr, i - 1)["pred"])
-            | (x["obj"] != F.get(arr, i - 1)["obj"])))
+        intra = F.array_distinct(intra)
+    d = d.select("conv_id", "turn_idx", intra.alias("_intra"),
+                 cross_ok.alias("_ok"),
+                 F.struct(F.col("prev_last").alias("subj"),
+                          F.col("first_pred").alias("pred"),
+                          F.col("first_ent").alias("obj")).alias("_cross"))
+    keep = F.col("_ok")
+    if dedup:
+        keep = keep & ~F.array_contains("_intra", F.col("_cross"))
+    items = F.concat("_intra", F.when(keep, F.array("_cross"))
+                     .otherwise(empty))
+    n, pos = F.col("_n"), F.col("pos")
     return (d
-            .select("conv_id", "turn_idx",
-                    F.explode(items).alias("t"))
-            .select(F.col("t.subj").alias("subj"),
-                    F.col("t.pred").alias("pred"),
-                    F.col("t.obj").alias("obj"),
+            .select("conv_id", "turn_idx", F.size("_intra").alias("_n"),
+                    F.posexplode(items))
+            .select(F.col("col.subj").alias("subj"),
+                    F.col("col.pred").alias("pred"),
+                    F.col("col.obj").alias("obj"),
                     "conv_id", "turn_idx",
-                    F.col("t.conf").alias("conf")))
+                    # no otherwise(): conf stays nullable, as the
+                    # snapshot manifest's recorded schema has it
+                    F.when(pos < n, 1.0).when(pos == n, 0.9)
+                    .cast("float").alias("conf")))
 
 
 def extract_triples_fused(spark: SparkSession, transcripts: DataFrame,

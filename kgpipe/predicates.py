@@ -24,9 +24,6 @@ DEFAULT_PRED_PHRASES: dict[str, str] = {
     "in": "located_in",
 }
 
-PredicateLike = "dict[str, str] | pd.DataFrame | DataFrame | None"
-
-
 def load_predicates(path: str) -> dict[str, str]:
     """Read a (phrase, pred) table from parquet or CSV into the dict form."""
     pdf = (

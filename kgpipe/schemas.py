@@ -32,16 +32,6 @@ SPAN = T.StructType(
 
 SPANS_ARRAY = T.ArrayType(SPAN)
 
-TOKEN = T.StructType(
-    [
-        T.StructField("tok", T.StringType(), False),
-        T.StructField("start", T.IntegerType(), False),
-        T.StructField("end", T.IntegerType(), False),
-    ]
-)
-
-TOKENS_ARRAY = T.ArrayType(TOKEN)
-
 MENTIONS = T.StructType(
     [
         T.StructField("conv_id", T.StringType(), False),
@@ -64,28 +54,6 @@ CANDIDATE_DICT = T.StructType(
     ]
 )
 
-TRIPLES = T.StructType(
-    [
-        T.StructField("subj", T.StringType(), False),
-        T.StructField("pred", T.StringType(), False),
-        T.StructField("obj", T.StringType(), False),
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("turn_idx", T.IntegerType(), False),
-        T.StructField("conf", T.FloatType(), True),
-    ]
-)
-
-GOLD_TRIPLES = T.StructType(
-    [
-        T.StructField("subj", T.StringType(), False),
-        T.StructField("pred", T.StringType(), False),
-        T.StructField("obj", T.StringType(), False),
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("turn_idx", T.IntegerType(), False),
-    ]
-)
-
 # Entity classes and the BIO tag set for the sequence labeler.
 ENT_CLASSES = ["PER", "ORG", "PROD", "PLACE"]
 TAGS = ["O"] + [f"{b}-{c}" for c in ENT_CLASSES for b in ("B", "I")]
-TAG_INDEX = {t: i for i, t in enumerate(TAGS)}
